@@ -58,7 +58,7 @@ object MapReduceQueries {
   /** q59 — word count through the combiner path (runCombine): identical
     * semantics to q20 (same oracle) but the plan carries one record per
     * (task, word) across the shuffle instead of one per emission —
-    * reduceGroups compiles to partial+final aggregation.
+    * each map task folds its words in a hash map before the shuffle.
     */
   val wordCountCombine = Q(
     "q59_mr_wordcount_combine",

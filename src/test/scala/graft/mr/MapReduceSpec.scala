@@ -1,6 +1,9 @@
 package graft.mr
 
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Opaque composite key for the custom-ordering grouping test — top
@@ -117,27 +120,83 @@ class MapReduceSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  /** One job through both forms with the same fold: (runCombine, run). */
+  private def bothForms[K1, V1, K2, V2](
+      ds: Dataset[(K1, V1)],
+      map: (K1, V1) => IterableOnce[(K2, V2)],
+      combine: (V2, V2) => V2)(
+      implicit e2: Encoder[(K2, V2)], ek: Encoder[K2]): (Map[K2, V2], Map[K2, V2]) = {
+    val viaCombine = MapReduce.runCombine(ds, map, combine).collect().toMap
+    val viaReduce = MapReduce.run[K1, V1, K2, V2, K2, V2](
+      ds, map, (k, g) => Iterator((k, g.map(_._2).reduce(combine)))).collect().toMap
+    (viaCombine, viaReduce)
+  }
+
   test("combiner path ≡ whole-group reduce for associative folds") {
     import spark.implicits._
     forAllInputs(seed = 3) { input =>
-      val ds = spark.createDataset(input).repartition(4)
-      val viaCombine = MapReduce.runCombine[Int, Int, Int, Long](
-        ds, (k, v) => Iterator((k % 4, v.toLong)), _ + _).collect().toMap
-      val viaReduce = MapReduce.run[Int, Int, Int, Long, Int, Long](
-        ds, (k, v) => Iterator((k % 4, v.toLong)),
-        (k, g) => Iterator((k, g.map(_._2).sum))).collect().toMap
-      assert(viaCombine === viaReduce)
+      val perPartitioning = Seq(1, 3, 7).map { par =>
+        val (viaCombine, viaReduce) = bothForms[Int, Int, Int, Long](
+          spark.createDataset(input).repartition(par),
+          (k, v) => Iterator((k % 4, v.toLong)), _ + _)
+        assert(viaCombine === viaReduce, s"partitions=$par")
+        viaCombine
+      }
+      assert(perPartitioning.distinct.size === 1)
+
+      val ds = spark.createDataset(input).repartition(3)
+      val (caseCombine, caseReduce) = bothForms[Int, Int, VKey, Long](
+        ds, (k, v) => Iterator((VKey(k % 3, v % 2), v.toLong)), _ + _)
+      assert(caseCombine.nonEmpty && caseCombine === caseReduce)
+      val (tupleCombine, tupleReduce) = bothForms[Int, Int, (Int, String), Long](
+        ds, (k, v) => Iterator(((k % 3, if (v < 0) "neg" else "pos"), v.toLong)), _ + _)
+      assert(tupleCombine.nonEmpty && tupleCombine === tupleReduce)
+
+      // Null-tolerant max over strings; key 0 only ever sees null.
+      val max: (String, String) => String = (a, b) =>
+        if (a == null) b else if (b == null) a else if (a > b) a else b
+      val (nullCombine, nullReduce) = bothForms[Int, Int, Int, String](
+        ds, (k, v) => Iterator((k % 3, if (k % 3 == 0 || v % 2 == 0) null else v.toString)), max)
+      assert(nullCombine === nullReduce)
+      assert(nullCombine.contains(0) && nullCombine(0) == null)
     }
+
+    // One partition whose emissions walk every key twice, so the cap is
+    // reached mid-walk and flushed copies of a key meet in the final merge.
+    val distinct = MapReduce.CombineCap + 1000
+    val wide = spark.range(0, 2L * distinct, 1, 1).map(i => (i.longValue, i.longValue))
+    val out = MapReduce.runCombine[Long, Long, Long, Long](
+      wide, (k, _) => Iterator((k % distinct, 1L)), _ + _).collect()
+    assert(out.length === distinct)
+    assert(out.map(_._1).distinct.length === distinct)
+    assert(out.map(_._2).sum === 2L * distinct)
   }
 
-  test("combiner plan performs partial (map-side) aggregation") {
+  test("combiner ships at most one record per (map task, key) across the shuffle") {
     import spark.implicits._
-    val ds = spark.createDataset((1 to 1000).map(i => (i % 5, i))).repartition(4)
-    val df = MapReduce.runCombine[Int, Int, Int, Long](
-      ds, (k, v) => Iterator((k, v.toLong)), _ + _)
-    val plan = df.queryExecution.executedPlan.toString.toLowerCase
-    assert(plan.contains("partial_reduceaggregator") || plan.contains("partial"),
-      plan.take(2000))
+    // 4 partitions built without a shuffle, so every shuffle record
+    // written by the job belongs to the combiner's exchange.
+    val rows = (1 to 1000).map(i => (i % 5, i))
+    val ds = spark.createDataset(spark.sparkContext.parallelize(rows, 4))
+    val mapTasks = new java.util.concurrent.atomic.AtomicLong
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskType == "ShuffleMapTask" && te.taskMetrics != null) {
+          mapTasks.incrementAndGet()
+          records.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = MapReduce.runCombine[Int, Int, Int, Long](
+        ds, (k, v) => Iterator((k, v.toLong)), _ + _).collect().toMap
+      Bridge.drainListenerBus(spark)
+      assert(out === rows.groupMapReduce(_._1)(_._2.toLong)(_ + _))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(mapTasks.get === 4)
+    assert(records.get <= mapTasks.get * 5, s"records=${records.get}")
+    assert(records.get < rows.size)
   }
 
   test("opaque composite key type with custom ordering groups correctly") {
