@@ -60,8 +60,9 @@ object Bench {
     * phases listener for attribution: QueryExecutionListeners fire on
     * the shared listener bus thread, where the bench thread's job
     * description is invisible. Passes run queries strictly sequentially
-    * and the listener bus is drained at the next query's start (see
-    * shuffleSnap), so this is exact up to the final query of a run.
+    * and measureOne drains the listener bus (see shuffleSnap) before it
+    * resets this to "-", so each query's events are attributed exactly
+    * and events after the last query to none.
     */
   @volatile private var currentQuery: String = "-"
 
@@ -463,6 +464,9 @@ object Bench {
       val cq = if (c0 < 0) -1L else (processCpuNanos - c0) / 1000000L
       val (_, qs1, qi1) = cpuJiffies
       val sb = shuffleSnap() - sb0
+      // the drain above delivered this query's own events; later ones
+      // (repair reruns, end of run) belong to no query
+      currentQuery = "-"
       cleanup(before) // outside the timed region
       QSample(dt, gq, cq, sb, qs1 - qs0, qi1 - qi0)
     }

@@ -13,7 +13,9 @@ object MapReduceQueries {
   /** q20 — word count via the façade: the canonical MapReduce program
     * (Dean & Ghemawat §2.1) expressed exactly as a reference client would:
     * map splits a document into (word, 1) emissions; reduce sums one whole
-    * key-group. Arrives at Spark as flatMap → groupByKey → flatMapGroups.
+    * key-group. Arrives at Spark as mapPartitions (map, then each task
+    * groups its words in a hash map) → groupByKey → flatMapGroups, so
+    * one record per (task, word) carries that word's list of 1s.
     */
   val wordCount = Q(
     "q20_mr_wordcount",
@@ -56,9 +58,10 @@ object MapReduceQueries {
   )
 
   /** q59 — word count through the combiner path (runCombine): identical
-    * semantics to q20 (same oracle) but the plan carries one record per
-    * (task, word) across the shuffle instead of one per emission —
-    * each map task folds its words in a hash map before the shuffle.
+    * semantics to q20 (same oracle) and, like q20, one record per
+    * (task, word) across the shuffle — but each map task folds its words'
+    * counts in the hash map, so a record carries one partial count
+    * instead of a list.
     */
   val wordCountCombine = Q(
     "q59_mr_wordcount_combine",

@@ -163,7 +163,7 @@ class MapReduceSpec extends AnyFunSuite {
 
     // One partition whose emissions walk every key twice, so the cap is
     // reached mid-walk and flushed copies of a key meet in the final merge.
-    val distinct = MapReduce.CombineCap + 1000
+    val distinct = MapReduce.MapSideCap + 1000
     val wide = spark.range(0, 2L * distinct, 1, 1).map(i => (i.longValue, i.longValue))
     val out = MapReduce.runCombine[Long, Long, Long, Long](
       wide, (k, _) => Iterator((k % distinct, 1L)), _ + _).collect()
@@ -172,12 +172,12 @@ class MapReduceSpec extends AnyFunSuite {
     assert(out.map(_._2).sum === 2L * distinct)
   }
 
-  test("combiner ships at most one record per (map task, key) across the shuffle") {
-    import spark.implicits._
-    // 4 partitions built without a shuffle, so every shuffle record
-    // written by the job belongs to the combiner's exchange.
-    val rows = (1 to 1000).map(i => (i % 5, i))
-    val ds = spark.createDataset(spark.sparkContext.parallelize(rows, 4))
+  /** Runs `job` and returns its result with (map tasks, summed shuffle
+    * records written) over the jobs it started. Build inputs without a
+    * shuffle (e.g. with `parallelize`) so every record counted belongs to
+    * the job's own exchange.
+    */
+  private def shuffleWrites[T](job: => T): (T, Long, Long) = {
     val mapTasks = new java.util.concurrent.atomic.AtomicLong
     val records = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
@@ -188,15 +188,89 @@ class MapReduceSpec extends AnyFunSuite {
         }
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = MapReduce.runCombine[Int, Int, Int, Long](
+    val result =
+      try { val r = job; Bridge.drainListenerBus(spark); r }
+      finally spark.sparkContext.removeSparkListener(listener)
+    (result, mapTasks.get, records.get)
+  }
+
+  test("combiner ships at most one record per (map task, key) across the shuffle") {
+    import spark.implicits._
+    val rows = (1 to 1000).map(i => (i % 5, i))
+    val ds = spark.createDataset(spark.sparkContext.parallelize(rows, 4))
+    val (out, mapTasks, records) = shuffleWrites {
+      MapReduce.runCombine[Int, Int, Int, Long](
         ds, (k, v) => Iterator((k, v.toLong)), _ + _).collect().toMap
-      Bridge.drainListenerBus(spark)
-      assert(out === rows.groupMapReduce(_._1)(_._2.toLong)(_ + _))
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(mapTasks.get === 4)
-    assert(records.get <= mapTasks.get * 5, s"records=${records.get}")
-    assert(records.get < rows.size)
+    }
+    assert(out === rows.groupMapReduce(_._1)(_._2.toLong)(_ + _))
+    assert(mapTasks === 4)
+    assert(records <= mapTasks * 5, s"records=$records")
+    assert(records < rows.size)
+  }
+
+  test("run ships at most one record per (map task, key) across the shuffle") {
+    import spark.implicits._
+    val rows = (1 to 1000).map(i => (i % 5, i))
+    val ds = spark.createDataset(spark.sparkContext.parallelize(rows, 4))
+    val (out, mapTasks, records) = shuffleWrites {
+      MapReduce.run[Int, Int, Int, Long, Int, Long](
+        ds, (k, v) => Iterator((k, v.toLong)), (k, g) => Iterator((k, g.map(_._2).sum))
+      ).collect().toMap
+    }
+    assert(out === rows.groupMapReduce(_._1)(_._2.toLong)(_ + _))
+    assert(mapTasks === 4)
+    assert(records <= mapTasks * 5, s"records=$records")
+  }
+
+  test("run: hot keys flushed several times in one task still reduce as one group") {
+    import spark.implicits._
+    // One partition of 2 × cap + 1000 emissions over 5 keys: the map side
+    // flushes after cap and 2 × cap values and drains 1000 at the end, so
+    // each key crosses the shuffle in 3 rows that one reduce call joins.
+    val n = 2L * MapReduce.MapSideCap + 1000
+    val ds = spark.createDataset(spark.sparkContext.parallelize(Seq((0L, n)), 1))
+    val (out, mapTasks, records) = shuffleWrites {
+      MapReduce.run[Long, Long, Long, Long, Long, (Long, Long)](
+        ds, (_, count) => Iterator.range(0L, count).map(i => (i % 5, i)),
+        (k, g) => {
+          var size, sum = 0L
+          g.foreach { case (_, v) => size += 1; sum += v }
+          Iterator((k, (size, sum)))
+        }).collect()
+    }
+    val want = (0L until n).groupBy(_ % 5).map { case (k, vs) => k -> ((vs.size.toLong, vs.sum)) }
+    assert(out.length === 5)
+    assert(out.toMap === want)
+    assert(mapTasks === 1)
+    assert(records === 3 * 5, s"records=$records")
+  }
+
+  test("run: null K2 and null V2 pass through the pre-grouping") {
+    import spark.implicits._
+    val rows = (1 to 60).map(i => (i, i))
+    val ds = spark.createDataset(spark.sparkContext.parallelize(rows, 3))
+    val key: Int => String = i => if (i % 3 == 0) null else (i % 3).toString
+    val value: Int => String = i => if (i % 2 == 0) null else i.toString
+    val render: Iterator[String] => String =
+      vs => vs.map(v => if (v == null) "-" else v).toSeq.sorted.mkString(",")
+    val out = MapReduce.run[Int, Int, String, String, String, String](
+      ds, (k, v) => Iterator((key(k), value(v))),
+      (k, g) => Iterator((k, render(g.map(_._2))))).collect().toMap
+    val want = rows.groupBy(r => key(r._1))
+      .map { case (k, g) => k -> render(g.iterator.map(r => value(r._2))) }
+    assert(out === want)
+    assert(out.contains(null))
+  }
+
+  test("run rejects a pair encoder that is not a two-field product encoder") {
+    import spark.implicits._
+    val ds = spark.createDataset(Seq((1, "a")))
+    val err = intercept[IllegalArgumentException] {
+      MapReduce.run[Int, String, String, Int, String, Int](
+        ds, (_, s) => Iterator((s, 1)), (k, g) => Iterator((k, g.size)))(
+        org.apache.spark.sql.Encoders.kryo[(String, Int)], implicitly, implicitly)
+    }
+    assert(err.getMessage.contains("two-field product encoder"), err.getMessage)
   }
 
   test("opaque composite key type with custom ordering groups correctly") {

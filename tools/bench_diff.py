@@ -24,10 +24,14 @@ def main() -> None:
     common = sorted(set(qa) & set(qb))
     ta = sum(qa[q] for q in common)
     tb = sum(qb[q] for q in common)
-    geo = math.exp(sum(math.log(qa[q] / qb[q]) for q in common
-                       if qa[q] > 0 and qb[q] > 0) / max(len(common), 1))
+    # Queries with a zero time on either side have no defined ratio: the
+    # geomean covers only the pairs it sums, and says how many it left out.
+    ratios = [qa[q] / qb[q] for q in common if qa[q] > 0 and qb[q] > 0]
+    geo = (math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+           if ratios else float("nan"))
     print(f"common={len(common)} before_total={ta:.1f}s after_total={tb:.1f}s "
-          f"total_speedup={ta/tb:.3f}x geomean_speedup={geo:.3f}x")
+          f"total_speedup={ta/tb:.3f}x geomean_speedup={geo:.3f}x "
+          f"geomean_excluded={len(common) - len(ratios)}")
     deltas = [(qa[q] - qb[q], q) for q in common]
     deltas.sort()
     print("\nbiggest improvements (before -> after):")

@@ -2,11 +2,14 @@
 # Targeted bench of a query subset, retried until a calm window: runs
 # graft.Bench restricted to $2 (comma list) with reps=$3 (default 3),
 # then checks the artifact's telemetry for accepted passes at
-# steal_frac <= 0.03; retries up to 4 times otherwise.
+# steal_frac <= 0.02 (the same bound the calm-window probe waits for);
+# retries up to 4 times otherwise, and fails an attempt that wrote no
+# artifact.
 # Usage: targeted_bench.sh <artifact.json> <q1,q2,...> [reps]
 set -u
 ART="$1"; ONLY="$2"; REPS="${3:-3}"
 for attempt in 1 2 3 4; do
+  rm -f "$ART"  # never validate a previous attempt's artifact
   # wait for a calm 10 s sample before burning a run
   for i in $(seq 1 60); do
     s0=$(awk '/^cpu /{print $9}' /proc/stat); b0=$(awk '/^cpu /{print $2+$3+$4}' /proc/stat)
@@ -22,11 +25,15 @@ for attempt in 1 2 3 4; do
     SPARK_GRAFT_BENCH_ONLY="$ONLY" SPARK_GRAFT_BENCH_REPS="$REPS" \
     SPARK_GRAFT_BENCH_SLOPE_DIR= SPARK_GRAFT_BENCH_ARTIFACT="$ART" \
     sbt -batch "runMain graft.Bench" 2>&1 | grep -E "^\[info\] (#|\{)" | tail -2
+  if [ ! -f "$ART" ]; then
+    echo "[targeted] attempt $attempt wrote no artifact, retrying"
+    continue
+  fi
   bad=$(python3 - "$ART" <<'EOF'
 import json,sys
 t=json.load(open(sys.argv[1]))["telemetry"]
 acc=[p for p in t if not p.get("discarded")]
-print(sum(1 for p in acc if p["steal_frac"]>0.03))
+print(sum(1 for p in acc if p["steal_frac"]>0.02))
 EOF
 )
   if [ "$bad" = "0" ]; then echo "[targeted] CLEAN artifact $ART"; exit 0; fi
