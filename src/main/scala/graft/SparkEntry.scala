@@ -48,4 +48,37 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Scan-split floor. Split size is min(maxPartitionBytes,
+    * max(openCostInBytes, totalBytes/parallelism)); the 4 MB default
+    * floors the scale-adaptive term, so a single small parquet file (every
+    * base table here is one file, 0.3-11 MB) plans into 1-3 map tasks and
+    * a scan-heavy stage runs on 1-3 of 32 cores (q03's scan+partial-agg
+    * stage: 1.29 s wall on a 75 ms-per-core job). 128 KB keeps the
+    * adaptive term in charge at every scale; at 100 TB splits still cap at
+    * maxPartitionBytes.
+    */
+  private val OpenCostBytes: Long = 128 * 1024
+
+  /** Whole-stage-codegen class cache entries (Spark's default is 100). A
+    * full registry pass generates ~5.4k codegen units, so a smaller cache
+    * evicts everything and every stage recompiles on every pass (~10-40 ms
+    * per unit, serial with the query). Measured by per-pass
+    * CodegenMetrics counts: at 5000 a pass still recompiled ~4.7k units;
+    * 12000 holds a pass with headroom (~1.0k). The entries are weakly
+    * referenced compiled classes, not data.
+    */
+  private val CodegenCacheEntries: Int = 12000
+
+  /** The session every main runs queries in — Bench, Verify and Explain —
+    * so the plans Explain prints are the plans that get measured.
+    */
+  def session(cpus: Int): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.files.openCostInBytes", OpenCostBytes.toString)
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .getOrCreate()
 }

@@ -25,6 +25,8 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object EventWindows {
 
+  private val StreamStatePartitions = 4
+
   /** Shuffle-partition override for the STREAMING queries' state stores,
     * applied for the duration of one streaming run and then restored.
     * A stateful streaming query creates one state store per shuffle
@@ -35,12 +37,8 @@ object EventWindows {
     * scoped conf is the per-query mechanism — batch queries in the same
     * session still get the session default. On a real cluster this knob
     * is sized to state volume, not core count.
-    */
-  private val StreamStatePartitions = 4
-  private def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
-    withStreamPartitionsN(s, StreamStatePartitions)(body)
-
-  /** Width note (optimization r18, measured and REJECTED): running the
+    *
+    * Width note (optimization r18, measured and REJECTED): running the
     * five stream-stream join fixtures (q74/q182/q202/q224/q254) at
     * compute-width state partitioning (min(defaultParallelism, 16) = 16
     * here) roughly DOUBLED them — cleanest-pass A/B at 4 vs 16
@@ -52,10 +50,10 @@ object EventWindows {
     * default; a deployment sizes this to key spread × arrival rate,
     * where the join compute term dominates and wider wins.
     */
-  private def withStreamPartitionsN[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
+  private def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
+    s.conf.set(key, StreamStatePartitions.toString)
     try body finally s.conf.set(key, prev)
   }
 

@@ -83,15 +83,6 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.cpuInflationMs(cpu, 1) > Bench.cpuInflationMs(cpu, 2))
   }
 
-  test("steal backoff doubles per consecutive discard, caps, and resets at zero") {
-    assert(Bench.stealBackoffMs(0, 10000L, 120000L) === 0L)
-    assert(Bench.stealBackoffMs(1, 10000L, 120000L) === 10000L)
-    assert(Bench.stealBackoffMs(2, 10000L, 120000L) === 20000L)
-    assert(Bench.stealBackoffMs(3, 10000L, 120000L) === 40000L)
-    assert(Bench.stealBackoffMs(5, 10000L, 120000L) === 120000L) // capped
-    assert(Bench.stealBackoffMs(60, 10000L, 120000L) === 120000L) // no overflow
-  }
-
   test("slope flags catch the quadratic shape and nothing else") {
     val rowRatio = 10.0; val factor = 2.0; val floorSec = 1.0
     val main = Seq(
@@ -159,5 +150,89 @@ class BenchGateSpec extends AnyFunSuite {
       "q_small_blowup" -> 1.0, "q_broadcast_only" -> 0.0)
     assert(Bench.shuffleSlopeFlags(mainMb, smallMb, rowRatio)
       === Seq("q_blowup"))
+  }
+
+  // summarize: every gate is a flag over the collected passes; nothing is
+  // re-measured, and the medians come from the passes no gate flagged
+  private def pass(steal: Double, qs: (Double, Long)*): Bench.Pass =
+    Bench.Pass(qs.map { case (sec, cpu) =>
+      Right(Bench.QSample(sec, 0L, cpu, 0L, 0L, 0L))
+    }.toIndexedSeq, steal, Seq("steal_frac" -> steal.toString))
+
+  test("summarize: a steal-flagged pass and a CPU-flagged pass stay out of the medians") {
+    val passes = Seq(
+      pass(0.001, 1.5 -> 1000L, 3.0 -> 10000L), // cold pass 0
+      pass(0.20, 9.0 -> 1000L, 9.0 -> 10000L), // steal storm
+      pass(0.002, 8.0 -> 1000L, 8.0 -> 50000L), // same-box contention
+      pass(0.001, 1.0 -> 1000L, 2.0 -> 10000L),
+      pass(0.001, 1.2 -> 1000L, 2.4 -> 10000L))
+    val s = Bench.summarize(Seq("qa", "qb"), passes)
+    assert(s.flags === IndexedSeq(Nil, Seq("over_max_steal"), Seq("over_cpu_inflation"), Nil, Nil))
+    assert(s.used === IndexedSeq(0, 3, 4))
+    assert(s.queries === Seq("qa" -> 1.2, "qb" -> 2.4))
+    val json = s.fields.toMap
+    assert(json("medians_from") === "\"unflagged_passes\"")
+    assert(json("telemetry").contains("\"over_max_steal\":true"))
+    assert(json("telemetry").contains("\"over_cpu_inflation\":true"))
+  }
+
+  test("summarize: with an even count of passes the median takes the lower sample, never the mean") {
+    // a flagged warm pass leaves the cold pass 0 paired with one warm pass
+    val passes = Seq(
+      pass(0.003, 2.4 -> 8500L), pass(0.05, 0.9 -> 2800L), pass(0.004, 0.6 -> 1600L))
+    val s = Bench.summarize(Seq("q141"), passes)
+    assert(s.used === IndexedSeq(0, 2))
+    assert(s.queries === Seq("q141" -> 0.6))
+  }
+
+  test("summarize: when every pass is flagged, all passes are used and the JSON says so") {
+    val passes = Seq(
+      pass(0.10, 1.0 -> 100L), pass(0.10, 3.0 -> 100L), pass(0.10, 2.0 -> 100L))
+    val s = Bench.summarize(Seq("qa"), passes)
+    assert(s.flags.forall(_ === Seq("over_max_steal")))
+    assert(s.used === IndexedSeq(0, 1, 2))
+    assert(s.queries === Seq("qa" -> 2.0))
+    assert(s.fields.toMap.apply("medians_from") === "\"all_passes\"")
+  }
+
+  test("summarize: a lone unflagged pass is no median; all passes are used") {
+    // a steal storm over passes 1-2 leaves only the cold pass 0 unflagged
+    val passes = Seq(
+      pass(0.02, 1.24 -> 4300L), pass(0.09, 0.79 -> 2300L), pass(0.17, 0.69 -> 1500L))
+    val s = Bench.summarize(Seq("q03"), passes)
+    assert(s.flags === IndexedSeq(Nil, Seq("over_max_steal"), Seq("over_max_steal")))
+    assert(s.used === IndexedSeq(0, 1, 2))
+    assert(s.queries === Seq("q03" -> 0.79))
+    assert(s.fields.toMap.apply("medians_from") === "\"all_passes\"")
+  }
+
+  test("summarize: the r17 q152 shape is an outlier flag and the median stays raw") {
+    val passes = Seq(
+      pass(0.0, 7.913 -> 900L, 1.0 -> 900L),
+      pass(0.0, 0.881 -> 900L, 1.02 -> 900L),
+      pass(0.0, 15.626 -> 900L, 0.98 -> 900L))
+    val s = Bench.summarize(Seq("q152", "qb"), passes)
+    assert(s.outliers === Seq((2, 0)))
+    assert(s.queries.toMap.apply("q152") === 7.913)
+    val flags = s.fields.toMap.apply("outlier_flags")
+    assert(flags.contains("\"query\":\"q152\",\"pass\":2,\"sec\":15.626,\"min_sec\":0.881"))
+    assert(flags.contains("\"cpu_ms\":900"))
+  }
+
+  test("summarize: a query that throws is a failed_queries entry, not a time") {
+    val names = Seq("qa", "qb", "qc")
+    val p = Bench.timedPass(names,
+      n => if (n == "qb") throw new IllegalStateException("boom \"quoted\"\nmore"),
+      () => 0L)
+    assert(p.samples(1).isLeft && p.samples(0).isRight && p.samples(2).isRight)
+    val s = Bench.summarize(names, Seq(p))
+    assert(s.failed.map(f => (f._1, f._2)) === Seq(("qb", 0)))
+    assert(s.failed.head._3.contains("boom"))
+    assert(s.queries.map(_._1) === Seq("qa", "qc"))
+    assert(s.total === s.queries.map(_._2).sum)
+    val failed = s.fields.toMap.apply("failed_queries")
+    assert(failed.startsWith("[{\"query\":\"qb\",\"pass\":0,\"error\":"))
+    assert(failed.contains("boom \\\"quoted\\\""))
+    assert(!s.fields.toMap.apply("queries").contains("qb"))
   }
 }

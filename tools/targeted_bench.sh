@@ -1,10 +1,11 @@
 #!/bin/bash
 # Targeted bench of a query subset, retried until a calm window: runs
 # graft.Bench restricted to $2 (comma list) with reps=$3 (default 3),
-# then checks the artifact's telemetry for accepted passes at
-# steal_frac <= 0.02 (the same bound the calm-window probe waits for);
-# retries up to 4 times otherwise, and fails an attempt that wrote no
-# artifact.
+# then checks the artifact's telemetry: every pass that entered the
+# medians (the unflagged passes, or all of them when the artifact's
+# medians_from is "all_passes") must have steal_frac <= 0.02, the same
+# bound the calm-window probe waits for. Retries up to 4 times
+# otherwise, and fails an attempt that wrote no artifact.
 # Usage: targeted_bench.sh <artifact.json> <q1,q2,...> [reps]
 set -u
 ART="$1"; ONLY="$2"; REPS="${3:-3}"
@@ -31,13 +32,15 @@ for attempt in 1 2 3 4; do
   fi
   bad=$(python3 - "$ART" <<'EOF'
 import json,sys
-t=json.load(open(sys.argv[1]))["telemetry"]
-acc=[p for p in t if not p.get("discarded")]
-print(sum(1 for p in acc if p["steal_frac"]>0.02))
+a=json.load(open(sys.argv[1]))
+t=a["telemetry"]
+used=t if a["medians_from"]=="all_passes" else [
+    p for p in t if not p.get("over_max_steal") and not p.get("over_cpu_inflation")]
+print(sum(1 for p in used if p["steal_frac"]>0.02))
 EOF
 )
   if [ "$bad" = "0" ]; then echo "[targeted] CLEAN artifact $ART"; exit 0; fi
-  echo "[targeted] attempt $attempt contaminated ($bad stormy accepted passes), retrying"
+  echo "[targeted] attempt $attempt contaminated ($bad stormy passes in the medians), retrying"
 done
 echo "[targeted] giving up; last artifact kept (suspect)"
 exit 1
