@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -64,6 +64,11 @@ object Bench {
     * bus thread, where job descriptions are invisible). Reset to "-" only
     * after the bus is drained, so each query's events are attributed exactly. */
   @volatile private var currentQuery: String = "-"
+
+  /** Spark jobs started since the JVM began, counted by the listener in
+    * [[main]]; a pass's delta is its `jobs` telemetry. Exact per pass,
+    * since every query's `settle` drains the listener bus. */
+  private val jobsStarted = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** (cumulative codegen compilations, their mean ms): a per-pass count
     * delta shows whether the codegen cache holds a pass, immune to noise. */
@@ -199,6 +204,7 @@ object Bench {
     val gc0 = gcMillis
     val pc0 = processCpuNanos
     val (cg0, _) = codegenStats
+    val jobs0 = jobsStarted.get
     val samples = names.toIndexedSeq.map { n =>
       val sb0 = settle()
       val (_, s0, i0) = cpuJiffies
@@ -227,6 +233,7 @@ object Bench {
       "busy_jiffies" -> db.toString, "steal_jiffies" -> ds.toString,
       "iowait_jiffies" -> di.toString, "iowait_frac" -> fmt(iowaitFrac, 4),
       "process_cpu_ms" -> cpuMs.toString, "codegen_units" -> (cg1 - cg0).toString,
+      "jobs" -> (jobsStarted.get - jobs0).toString,
       "codegen_mean_ms" -> fmt(cgMean, 1), "gc_ms" -> (gcMillis - gc0).toString,
       "heap_used_mb" -> heapMb.toString))
   }
@@ -332,10 +339,12 @@ object Bench {
         override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
       })
 
-    // Per-query shuffle-write bytes via a task-end listener, read after
-    // draining the async listener bus, outside every timed region.
+    // Per-query shuffle-write bytes and per-pass job starts via one
+    // listener, read after draining the async listener bus, outside every
+    // timed region.
     val shuffleWritten = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobsStarted.incrementAndGet()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
         if (m != null) shuffleWritten.addAndGet(m.shuffleWriteMetrics.bytesWritten)

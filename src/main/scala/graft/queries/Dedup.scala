@@ -1766,7 +1766,7 @@ object Dedup {
       s.conf.set("spark.sql.shuffle.partitions", "4")
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
+      val schema = Tables.schema(s, d, "documents")
       val name = "stream_neardup_" + java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"neardup_chk_$name")
       runNearDupStream(s,

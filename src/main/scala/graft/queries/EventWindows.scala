@@ -132,7 +132,7 @@ object EventWindows {
     "q37_stream_tumbling",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_tumbling_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         // The file-stream source wants a directory: stream the sf dir,
@@ -171,7 +171,7 @@ object EventWindows {
     "q61_stream_tumbling_append",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_append_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -215,7 +215,7 @@ object EventWindows {
     "q78_stream_file_sink",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       // fresh sink + checkpoint per EXECUTION: reusing a checkpoint
       // within one JVM would make every later run a no-op (the file
       // source's seen-files log already contains the input), silently
@@ -310,7 +310,7 @@ object EventWindows {
     "q64_stream_dedup",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_dedup_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         def src = Tables.nanosTsToMicros(
@@ -343,7 +343,7 @@ object EventWindows {
     "q74_stream_interval_join",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_join_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         def src = Tables.nanosTsToMicros(
@@ -404,7 +404,7 @@ object EventWindows {
     "q182_stream_outer_join",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_oj_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         def src = Tables.nanosTsToMicros(
@@ -493,7 +493,7 @@ object EventWindows {
     "q186_stream_chained_windows",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_chain_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -549,7 +549,7 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_rocks_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -666,7 +666,7 @@ object EventWindows {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_tws_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -724,7 +724,7 @@ object EventWindows {
     "q191_state_store_read",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"state_read_chk_$runId")
       withStreamPartitions(s) {
@@ -789,7 +789,7 @@ object EventWindows {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"tws_read_chk_$runId")
       withStreamPartitions(s) {
@@ -843,7 +843,7 @@ object EventWindows {
     "q202_join_state_read",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"join_state_chk_$runId")
       withStreamPartitions(s) {
@@ -903,7 +903,7 @@ object EventWindows {
     "q203_stream_dedup_within_wm",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_dwm_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         def src = Tables.nanosTsToMicros(
@@ -953,7 +953,7 @@ object EventWindows {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_timers_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -1026,7 +1026,7 @@ object EventWindows {
     "q205_stream_session_window",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_sessw_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -1094,7 +1094,7 @@ object EventWindows {
     "q138_stream_static_join",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_enrich_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val dim = Tables.events(s, d).groupBy("event_type")
@@ -1360,7 +1360,7 @@ object EventWindows {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_twsm_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -1424,7 +1424,7 @@ object EventWindows {
     "q224_stream_full_outer",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_foj_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         def src = Tables.nanosTsToMicros(
@@ -1528,7 +1528,7 @@ object EventWindows {
         .map(t => (t._1, (t._2, t._3)))
         .groupByKey(_._1)
         .mapValues(_._2)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_twsi_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -1638,7 +1638,7 @@ object EventWindows {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_tws_list_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -1699,7 +1699,7 @@ object EventWindows {
     "q259_stream_update_agg",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_update_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         val q = Tables.nanosTsToMicros(
@@ -1767,7 +1767,7 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_tws_ttl_" + java.util.UUID.randomUUID().toString.take(8)
       // completion target for the poll: one emission per click user
       val expectedUsers = Tables.events(s, d)
@@ -1830,7 +1830,7 @@ object EventWindows {
     "q254_stream_semi_join",
     (s, d) => {
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_semi_" + java.util.UUID.randomUUID().toString.take(8)
       withStreamPartitions(s) {
         def src = Tables.nanosTsToMicros(
@@ -2052,7 +2052,7 @@ object EventWindows {
     (s, d) => {
       import s.implicits._
       Tables.eventsNanosConf(s)
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schema(s, d, "events")
       val name = "stream_obs_" + java.util.UUID.randomUUID().toString.take(8)
       var rows = Seq.empty[(Long, Long, Long)]
       withStreamPartitions(s) {
