@@ -377,9 +377,8 @@ object Bench {
       finally spark.sparkContext.setJobDescription(null)
     }
     def warmCorpus(dir: String): Unit =
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings", "events").foreach { t =>
-        try noop(if (t == "events") Tables.events(spark, dir) else Tables(spark, dir, t))
+      Tables.names.foreach { t =>
+        try noop(Tables(spark, dir, t))
         catch { case e: Throwable =>
           System.err.println(s"[bench] corpus warm $t ($dir) failed: ${e.getMessage}")
         }

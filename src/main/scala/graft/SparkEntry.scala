@@ -70,8 +70,20 @@ object SparkEntry {
     */
   private val CodegenCacheEntries: Int = 12000
 
-  /** The session every main runs queries in — Bench, Verify and Explain —
-    * so the plans Explain prints are the plans that get measured.
+  /** Read a parquet TIMESTAMP(NANOS) column as its raw nanos long instead
+    * of failing the read: some data generations write `events.ts` as
+    * NANOS, and `Tables.nanosTsToMicros` converts the long losslessly. It
+    * is a session constant rather than a per-query set-and-restore scope
+    * because the reader consults it when a plan executes: a query returns
+    * a lazy DataFrame that runs after the query's code has returned, and
+    * a stream reads at micro-batch time. MICROS columns read the same
+    * either way.
+    */
+  private val NanosAsLong = true
+
+  /** The session every main runs queries in — Bench, Verify and Explain,
+    * and the test suite's shared session — so the plans Explain prints and
+    * the specs check are the plans that get measured.
     */
   def session(cpus: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
@@ -80,5 +92,6 @@ object SparkEntry {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.files.openCostInBytes", OpenCostBytes.toString)
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .config("spark.sql.legacy.parquet.nanosAsLong", NanosAsLong.toString)
     .getOrCreate()
 }

@@ -76,20 +76,17 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")
   /** `events.ts` has shipped in two physical encodings across driver
     * generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized
-    * reader rejects outright — read as a raw nanos long via the legacy
-    * conf, then convert; the data is µs-aligned per TESTDATA.md) and
-    * plain TIMESTAMP(MICROS) `isAdjustedToUTC=false`, which Spark 4
-    * infers as TIMESTAMP_NTZ. `nanosTsToMicros` normalizes EITHER
-    * encoding to a session-local TimestampType — the session timezone is
-    * pinned to UTC in every entry point, so the NTZ→LTZ cast preserves
-    * instants exactly and both generations produce identical values.
-    * `eventsNanosConf` + `nanosTsToMicros` are shared with the streaming
-    * twins (q37 etc.) so batch and stream can never diverge on the
-    * conversion.
+    * reader rejects outright — read as a raw nanos long under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which `SparkEntry.session`
+    * sets for every session, then convert; the data is µs-aligned per
+    * TESTDATA.md) and plain TIMESTAMP(MICROS) `isAdjustedToUTC=false`,
+    * which Spark 4 infers as TIMESTAMP_NTZ. `nanosTsToMicros` normalizes
+    * EITHER encoding to a session-local TimestampType — the session
+    * timezone is pinned to UTC in every entry point, so the NTZ→LTZ cast
+    * preserves instants exactly and both generations produce identical
+    * values. [[events]] and [[eventStream]] share it, so batch and
+    * stream can never diverge on the conversion.
     */
-  def eventsNanosConf(s: SparkSession): Unit =
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
   def nanosTsToMicros(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
@@ -99,10 +96,15 @@ object Tables {
     }
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    eventsNanosConf(s)
-    nanosTsToMicros(apply(s, d, "events"))
-  }
+  def events(s: SparkSession, d: String): DataFrame = nanosTsToMicros(apply(s, d, "events"))
+
+  /** `events` as a file stream: the file source wants a directory, so it
+    * streams the scale-factor directory filtered down to the events file,
+    * under the cached schema and the same `ts` normalization as [[events]]. */
+  def eventStream(s: SparkSession, d: String): DataFrame =
+    nanosTsToMicros(s.readStream.schema(schema(s, d, "events"))
+      .option("pathGlobFilter", "events.parquet").parquet(d))
+
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

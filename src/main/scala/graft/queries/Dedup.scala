@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.TextFns
+import graft.streaming.StreamFixture
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite — the core LLM-training-pipeline operators
@@ -1687,21 +1688,19 @@ object Dedup {
   private[graft] def runNearDupStream(s: org.apache.spark.sql.SparkSession,
       docsStream: org.apache.spark.sql.DataFrame, name: String, chk: String): Unit = {
     import s.implicits._
-    val q = rowLocalBands(docsStream)
-      .withWatermark("ts", s"$StreamHorizonSec seconds")
-      .select(col("bk"), col("doc_id"), col("ts"), col("n"))
-      .as[(String, Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.BandMatcher(StreamHorizonSec),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      .toDF("da", "db", "na", "nb")
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamFixture.drain(
+      rowLocalBands(docsStream)
+        .withWatermark("ts", s"$StreamHorizonSec seconds")
+        .select(col("bk"), col("doc_id"), col("ts"), col("n"))
+        .as[(String, Long, java.sql.Timestamp, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.BandMatcher(StreamHorizonSec),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          org.apache.spark.sql.streaming.OutputMode.Append())
+        .toDF("da", "db", "na", "nb")
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", chk)
+        .outputMode("append"))
   }
 
   /** Exact-Jaccard verification of a streamed candidate-pair table —

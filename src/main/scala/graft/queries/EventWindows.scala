@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.Q.{dsum2, sqlSum2}
+import graft.streaming.StreamFixture.{drain, toMemory, withStreamPartitions}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Event-time windowing over the `events` table: tumbling, sliding, and
   * session windows — batch first (DuckDB-verifiable), then the same
@@ -24,38 +24,6 @@ import org.apache.spark.sql.streaming.Trigger
   * and read back only for the oracle compare.
   */
 object EventWindows {
-
-  private val StreamStatePartitions = 4
-
-  /** Shuffle-partition override for the STREAMING queries' state stores,
-    * applied for the duration of one streaming run and then restored.
-    * A stateful streaming query creates one state store per shuffle
-    * partition per stateful operator and pays per-batch maintenance on
-    * every one of them; 32 stores for a few thousand windows/keys is
-    * pure fixed overhead (BASELINE.md's round-2 analysis). The partition
-    * count is frozen into the query's checkpoint at first start, so the
-    * scoped conf is the per-query mechanism — batch queries in the same
-    * session still get the session default. On a real cluster this knob
-    * is sized to state volume, not core count.
-    *
-    * Width note (optimization r18, measured and REJECTED): running the
-    * five stream-stream join fixtures (q74/q182/q202/q224/q254) at
-    * compute-width state partitioning (min(defaultParallelism, 16) = 16
-    * here) roughly DOUBLED them — cleanest-pass A/B at 4 vs 16
-    * partitions: q254 1.85→4.2 s, q224 2.0→4.9 s, q74 3.2→4.2 s, with
-    * process-CPU up ~2× — the per-partition state-store lifecycle (a
-    * symmetric join keeps 4 stores per partition, each snapshotted per
-    * batch, plus the no-data watermark batch) costs far more than the
-    * extra cores return at bench SF. 4 partitions stays the scoped
-    * default; a deployment sizes this to key spread × arrival rate,
-    * where the join compute term dominates and wider wins.
-    */
-  private def withStreamPartitions[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, StreamStatePartitions.toString)
-    try body finally s.conf.set(key, prev)
-  }
 
   /** q34 — tumbling 1-hour windows per event type. */
   val tumbling = Q(
@@ -131,25 +99,13 @@ object EventWindows {
   val streamTumbling = Q(
     "q37_stream_tumbling",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_tumbling_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        // The file-stream source wants a directory: stream the sf dir,
-        // filtered down to the events file.
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-          .select(col("window.start").as("wstart"), col("event_type"), col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .select(col("window.start").as("wstart"), col("event_type"), col("n"), col("sum_value")),
+        "complete")
     },
     Some(s"""SELECT time_bucket(INTERVAL '1 hour', ts) AS wstart, event_type,
              count(*) AS n, ${sqlSum2("value")} AS sum_value
@@ -170,26 +126,17 @@ object EventWindows {
   val streamTumblingAppend = Q(
     "q61_stream_tumbling_append",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_append_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
           .select(col("window.start").as("wstart"), col("window.end").as("wend"),
-            col("event_type"), col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            col("event_type"), col("n"), col("sum_value")),
+        "append")
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR")).as("closed_before"))
-      s.table(name)
+      streamed
         .crossJoin(cutoff)
         .where(col("wend") <= col("closed_before"))
         .select(col("wstart"), col("event_type"), col("n"), col("sum_value"))
@@ -214,8 +161,6 @@ object EventWindows {
   val streamFileSink = Q(
     "q78_stream_file_sink",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
       // fresh sink + checkpoint per EXECUTION: reusing a checkpoint
       // within one JVM would make every later run a no-op (the file
       // source's seen-files log already contains the input), silently
@@ -224,10 +169,8 @@ object EventWindows {
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val out = graft.sources.Sources.scratchLeaf(d, s"stream_file_sink_$runId")
       val chk = graft.sources.Sources.scratchLeaf(d, s"stream_file_sink_chk_$runId")
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      withStreamPartitions(s)(drain(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
@@ -236,10 +179,7 @@ object EventWindows {
           .writeStream.format("parquet")
           .option("path", out)
           .option("checkpointLocation", chk)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .outputMode("append")))
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR")).as("closed_before"))
       s.read.parquet(out)
@@ -309,23 +249,13 @@ object EventWindows {
   val streamDedup = Q(
     "q64_stream_dedup",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_dedup_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-        val q = src.union(src) // duplicate every record
+      def src = Tables.eventStream(s, d)
+      toMemory(
+        src.union(src) // duplicate every record
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
-          .select(col("event_id"), col("user_id"), col("event_type"), col("ts"), col("value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .select(col("event_id"), col("user_id"), col("event_type"), col("ts"), col("value")),
+        "append")
     },
     Some("SELECT event_id, user_id, event_type, ts, value FROM events")
   )
@@ -342,30 +272,20 @@ object EventWindows {
   val streamIntervalJoin = Q(
     "q74_stream_interval_join",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_join_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          .withWatermark("ts", "10 minutes")
-        val a = src.select(col("user_id"), col("event_id").as("id_a"),
-          col("ts").as("ts_a"), col("value").as("val_a"))
-        val b = src.select(col("user_id").as("user_b"), col("event_id").as("id_b"),
-          col("ts").as("ts_b"), col("value").as("val_b"))
-        val q = a.join(b,
+      def src = Tables.eventStream(s, d)
+        .withWatermark("ts", "10 minutes")
+      val a = src.select(col("user_id"), col("event_id").as("id_a"),
+        col("ts").as("ts_a"), col("value").as("val_a"))
+      val b = src.select(col("user_id").as("user_b"), col("event_id").as("id_b"),
+        col("ts").as("ts_b"), col("value").as("val_b"))
+      toMemory(
+        a.join(b,
             col("user_id") === col("user_b") &&
               col("id_a") < col("id_b") &&
               col("ts_b") >= col("ts_a") - expr("INTERVAL 5 MINUTES") &&
               col("ts_b") <= col("ts_a") + expr("INTERVAL 5 MINUTES"))
-          .select(col("user_id"), col("id_a"), col("id_b"), col("ts_a"), col("ts_b"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .select(col("user_id"), col("id_a"), col("id_b"), col("ts_a"), col("ts_b")),
+        "append")
     },
     Some("""SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
                    a.ts AS ts_a, b.ts AS ts_b
@@ -403,21 +323,16 @@ object EventWindows {
   val streamOuterJoin = Q(
     "q182_stream_outer_join",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_oj_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          .withWatermark("ts", "1 hour")
-        val views = src.where(col("event_type") === "view")
-          .select(col("user_id"), col("event_id").as("view_id"),
-            col("ts").as("ts_view"))
-        val buys = src.where(col("event_type") === "purchase")
-          .select(col("user_id").as("user_b"), col("event_id").as("purchase_id"),
-            col("ts").as("ts_buy"))
-        val q = views.join(buys,
+      def src = Tables.eventStream(s, d)
+        .withWatermark("ts", "1 hour")
+      val views = src.where(col("event_type") === "view")
+        .select(col("user_id"), col("event_id").as("view_id"),
+          col("ts").as("ts_view"))
+      val buys = src.where(col("event_type") === "purchase")
+        .select(col("user_id").as("user_b"), col("event_id").as("purchase_id"),
+          col("ts").as("ts_buy"))
+      val streamed = toMemory(
+        views.join(buys,
             col("user_id") === col("user_b") &&
               col("ts_buy") >= col("ts_view") &&
               col("ts_buy") <= col("ts_view") + expr("INTERVAL 6 HOURS"),
@@ -425,12 +340,8 @@ object EventWindows {
           .select(col("user_id"), col("view_id"), col("ts_view"),
             coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
             coalesce(col("ts_buy"),
-              to_timestamp(lit("1970-01-01 00:00:00"))).as("ts_buy"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+              to_timestamp(lit("1970-01-01 00:00:00"))).as("ts_buy")),
+        "append")
       // The query's final watermark is the MIN over both inputs' event
       // clocks — Catalyst pushes each side's type filter below its
       // watermark node, so the views side advances to max(view ts) − 1 h
@@ -443,7 +354,7 @@ object EventWindows {
         .groupBy("event_type").agg(max(col("ts")).as("mx"))
         .agg((min(col("mx")) - expr("INTERVAL 7 HOURS") -
           expr("INTERVAL 1 SECOND")).as("closed_before"))
-      s.table(name)
+      streamed
         .crossJoin(cutoff)
         .where(col("ts_view") < col("closed_before"))
         .select(col("user_id"), col("view_id"), col("ts_view"),
@@ -492,13 +403,8 @@ object EventWindows {
   val streamChainedWindows = Q(
     "q186_stream_chained_windows",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_chain_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n1"), dsum2(col("value")).as("sv1"))
@@ -506,15 +412,11 @@ object EventWindows {
             col("event_type"))
           .agg(sum(col("n1")).as("n"), dsum2(col("sv1")).as("sum_value"))
           .select(col("window.start").as("wstart"), col("window.end").as("wend"),
-            col("event_type"), col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            col("event_type"), col("n"), col("sum_value")),
+        "append")
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR")).as("closed_before"))
-      s.table(name)
+      streamed
         .crossJoin(cutoff)
         .where(col("wend") <= col("closed_before"))
         .select(col("wstart"), col("event_type"), col("n"), col("sum_value"))
@@ -548,26 +450,17 @@ object EventWindows {
       val s = s0.newSession()
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_rocks_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
           .select(col("window.start").as("wstart"), col("window.end").as("wend"),
-            col("event_type"), col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            col("event_type"), col("n"), col("sum_value")),
+        "append")
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR")).as("closed_before"))
-      s.table(name)
+      streamed
         .crossJoin(cutoff)
         .where(col("wend") <= col("closed_before"))
         .select(col("wstart"), col("event_type"), col("n"), col("sum_value"))
@@ -665,25 +558,16 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_tws_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .transformWithState(new graft.streaming.RunningTotals(),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "n", "sum_value")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .toDF("user_id", "n", "sum_value"),
+        "update")
+      streamed
         .groupBy("user_id")
         .agg(max(struct(col("n"), col("sum_value"))).as("b"))
         .select(col("user_id"), col("b.n").as("n"), col("b.sum_value").as("sum_value"))
@@ -723,23 +607,16 @@ object EventWindows {
   val stateStoreRead = Q(
     "q191_state_store_read",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"state_read_chk_$runId")
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      withStreamPartitions(s)(drain(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
           .writeStream.format("noop")
           .option("checkpointLocation", chk)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .outputMode("append")))
       // state-metadata names the operator whose store we read — 1 row,
       // metadata-plane; carrying it in the output pins that the listing
       // side of the reader works too
@@ -788,14 +665,10 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"tws_read_chk_$runId")
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      withStreamPartitions(s)(drain(
+        Tables.eventStream(s, d)
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
           .transformWithState(new graft.streaming.RunningTotals(),
@@ -804,10 +677,7 @@ object EventWindows {
           .toDF("user_id", "n", "sum_value")
           .writeStream.format("noop")
           .option("checkpointLocation", chk)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .outputMode("update")))
       s.read.format("statestore").option("stateVarName", "totals").load(chk)
         .select(col("key.value").as("user_id"),
           col("value._1").as("n"),
@@ -842,20 +712,16 @@ object EventWindows {
   val joinStateRead = Q(
     "q202_join_state_read",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"join_state_chk_$runId")
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          .withWatermark("ts", "10 minutes")
-        val a = src.select(col("user_id"), col("event_id").as("id_a"),
-          col("ts").as("ts_a"), col("value").as("val_a"))
-        val b = src.select(col("user_id").as("user_b"), col("event_id").as("id_b"),
-          col("ts").as("ts_b"), col("value").as("val_b"))
-        val q = a.join(b,
+      def src = Tables.eventStream(s, d)
+        .withWatermark("ts", "10 minutes")
+      val a = src.select(col("user_id"), col("event_id").as("id_a"),
+        col("ts").as("ts_a"), col("value").as("val_a"))
+      val b = src.select(col("user_id").as("user_b"), col("event_id").as("id_b"),
+        col("ts").as("ts_b"), col("value").as("val_b"))
+      withStreamPartitions(s)(drain(
+        a.join(b,
             col("user_id") === col("user_b") &&
               col("id_a") < col("id_b") &&
               col("ts_b") >= col("ts_a") - expr("INTERVAL 5 MINUTES") &&
@@ -863,10 +729,7 @@ object EventWindows {
           .select(col("user_id"), col("id_a"), col("id_b"))
           .writeStream.format("noop")
           .option("checkpointLocation", chk)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .outputMode("append")))
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 15 MINUTES") + expr("INTERVAL 1 SECOND"))
           .as("retained_after"))
@@ -902,25 +765,15 @@ object EventWindows {
   val streamDedupWithinWatermark = Q(
     "q203_stream_dedup_within_wm",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_dwm_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-        val retransmit = src.withColumn("ts", col("ts") + expr("INTERVAL 1 MINUTE"))
-        val q = src.unionAll(retransmit)
+      def src = Tables.eventStream(s, d)
+        .select(col("event_id"), col("event_type"), col("value"), col("ts"))
+      val retransmit = src.withColumn("ts", col("ts") + expr("INTERVAL 1 MINUTE"))
+      toMemory(
+        src.unionAll(retransmit)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
-          .select("event_id", "event_type", "value")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .select("event_id", "event_type", "value"),
+        "append")
     },
     Some("SELECT event_id, event_type, value FROM events")
   )
@@ -952,13 +805,8 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_timers_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
             expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
@@ -968,16 +816,12 @@ object EventWindows {
             new graft.streaming.SessionTimers(gapUs = 15L * 60 * 1000000),
             org.apache.spark.sql.streaming.TimeMode.EventTime(),
             org.apache.spark.sql.streaming.OutputMode.Append())
-          .toDF("user_id", "start_us", "last_us", "n", "sum_value")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+          .toDF("user_id", "start_us", "last_us", "n", "sum_value"),
+        "append")
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR") - expr("INTERVAL 1 SECOND"))
           .as("sealed_before"))
-      s.table(name)
+      streamed
         .select(col("user_id"),
           timestamp_micros(col("start_us")).as("session_start"),
           timestamp_micros(col("last_us")).as("session_last"),
@@ -1025,28 +869,19 @@ object EventWindows {
   val streamSessionWindow = Q(
     "q205_stream_session_window",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_sessw_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "15 minutes"), col("user_id"))
           .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_last"),
             count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
           .select(col("user_id"), col("session_start"), col("session_last"),
-            col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            col("n"), col("sum_value")),
+        "append")
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR") - expr("INTERVAL 1 SECOND"))
           .as("sealed_before"))
-      s.table(name)
+      streamed
         .crossJoin(cutoff)
         .where(col("session_last") + expr("INTERVAL 15 MINUTES") <= col("sealed_before"))
         .select("user_id", "session_start", "session_last", "n", "sum_value")
@@ -1093,23 +928,12 @@ object EventWindows {
   val streamStaticJoin = Q(
     "q138_stream_static_join",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_enrich_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val dim = Tables.events(s, d).groupBy("event_type")
-          .agg(count(lit(1)).as("type_count"))
-        val src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-        val q = src.join(dim, Seq("event_type"))
-          .select(col("event_id"), col("event_type"), col("type_count"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      val dim = Tables.events(s, d).groupBy("event_type")
+        .agg(count(lit(1)).as("type_count"))
+      toMemory(
+        Tables.eventStream(s, d).join(dim, Seq("event_type"))
+          .select(col("event_id"), col("event_type"), col("type_count")),
+        "append")
     },
     Some("""WITH c AS (SELECT event_type, count(*) AS type_count
                        FROM events GROUP BY event_type)
@@ -1138,7 +962,6 @@ object EventWindows {
   val streamUpsert = Q(
     "q150_stream_upsert",
     (s, d) => {
-      Tables.eventsNanosConf(s)
       val src = graft.sources.Sources.scratchLeaf(d, "upsert_src")
       // store + checkpoint are per-EXECUTION: a reused checkpoint would
       // make every later run (bench reps!) an empty no-op stream
@@ -1167,16 +990,12 @@ object EventWindows {
           merged.write.mode("overwrite").parquet(s"$storeRoot/v${version + 1}")
           version += 1
         }
-      withStreamPartitions(s) {
-        val q = s.readStream.schema(schema)
+      withStreamPartitions(s)(drain(
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(src)
           .writeStream.foreachBatch(mergeBatch)
-          .trigger(Trigger.AvailableNow())
           .option("checkpointLocation",
-            graft.sources.Sources.scratchLeaf(d, s"upsert_chk_$runId"))
-          .start()
-        q.awaitTermination()
-      }
+            graft.sources.Sources.scratchLeaf(d, s"upsert_chk_$runId"))))
       require(version >= 2, s"expected multiple micro-batches, got $version")
       s.read.parquet(s"$storeRoot/v$version")
         .select(col("user_id"), col("ts").as("last_ts"),
@@ -1359,26 +1178,17 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_twsm_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .select(col("user_id"), col("event_type"), col("value"))
           .as[(Long, String, Double)]
           .groupByKey(_._1)
           .transformWithState(new graft.streaming.TypeTotals(),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "event_type", "n", "cents", "n_types")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .toDF("user_id", "event_type", "n", "cents", "n_types"),
+        "update")
+      streamed
         .groupBy("user_id", "event_type")
         .agg(max(struct(col("n"), col("cents"))).as("b"),
           max(col("n_types")).as("n_types"))
@@ -1423,36 +1233,27 @@ object EventWindows {
   val streamFullOuterJoin = Q(
     "q224_stream_full_outer",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_foj_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          .withWatermark("ts", "1 hour")
-        val views = src.where(col("event_type") === "view")
-          .select(col("user_id").as("user_v"), col("event_id").as("view_id"),
-            col("ts").as("ts_view"))
-        val buys = src.where(col("event_type") === "purchase")
-          .select(col("user_id").as("user_b"), col("event_id").as("purchase_id"),
-            col("ts").as("ts_buy"))
-        val q = views.join(buys,
+      def src = Tables.eventStream(s, d)
+        .withWatermark("ts", "1 hour")
+      val views = src.where(col("event_type") === "view")
+        .select(col("user_id").as("user_v"), col("event_id").as("view_id"),
+          col("ts").as("ts_view"))
+      val buys = src.where(col("event_type") === "purchase")
+        .select(col("user_id").as("user_b"), col("event_id").as("purchase_id"),
+          col("ts").as("ts_buy"))
+      val streamed = toMemory(
+        views.join(buys,
             col("user_v") === col("user_b") &&
               col("ts_buy") >= col("ts_view") &&
               col("ts_buy") <= col("ts_view") + expr("INTERVAL 6 HOURS"),
-            "fullOuter")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+            "fullOuter"),
+        "append")
       val cutoff = Tables.events(s, d)
         .where(col("event_type").isin("view", "purchase"))
         .groupBy("event_type").agg(max(col("ts")).as("mx"))
         .agg((min(col("mx")) - expr("INTERVAL 7 HOURS") -
           expr("INTERVAL 1 SECOND")).as("closed_before"))
-      s.table(name)
+      streamed
         .crossJoin(cutoff)
         .where(when(col("view_id").isNotNull,
             col("ts_view") < col("closed_before"))
@@ -1517,7 +1318,6 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
-      Tables.eventsNanosConf(s)
       val cutoff = "2024-01-16 00:00:00"
       val history = Tables.events(s, d)
         .where(col("ts") < lit(cutoff).cast("timestamp"))
@@ -1528,12 +1328,8 @@ object EventWindows {
         .map(t => (t._1, (t._2, t._3)))
         .groupByKey(_._1)
         .mapValues(_._2)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_twsi_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .where(col("ts") >= lit(cutoff).cast("timestamp"))
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
@@ -1541,13 +1337,9 @@ object EventWindows {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update(),
             history)
-          .toDF("user_id", "n", "sum_value")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .toDF("user_id", "n", "sum_value"),
+        "update")
+      streamed
         .groupBy("user_id")
         .agg(max(struct(col("n"), col("sum_value"))).as("b"))
         .select(col("user_id"), col("b.n").as("n"), col("b.sum_value").as("sum_value"))
@@ -1637,13 +1429,8 @@ object EventWindows {
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_tws_list_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .where(col("event_type") === "purchase")
           .select(col("user_id"), unix_micros(col("ts")).as("tsu"), col("event_id"))
           .as[(Long, Long, Long)]
@@ -1651,13 +1438,9 @@ object EventWindows {
           .transformWithState(new graft.streaming.RecentPurchases(),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "n_purch", "last3")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+          .toDF("user_id", "n_purch", "last3"),
+        "update")
+      streamed
         .groupBy("user_id")
         .agg(max(struct(col("n_purch"), col("last3"))).as("b"))
         .select(col("user_id"), col("b.n_purch").as("n_purch"), col("b.last3").as("last3"))
@@ -1698,24 +1481,15 @@ object EventWindows {
   val streamTumblingUpdate = Q(
     "q259_stream_update_agg",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_update_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val streamed = toMemory(
+        Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
           .select(col("window.start").as("wstart"), col("event_type"),
-            col("n"), col("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+            col("n"), col("sum_value")),
+        "update")
+      streamed
         .groupBy("wstart", "event_type")
         .agg(max(struct(col("n"), col("sum_value"))).as("b"))
         .select(col("wstart"), col("event_type"),
@@ -1766,17 +1540,15 @@ object EventWindows {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
       val name = "stream_tws_ttl_" + java.util.UUID.randomUUID().toString.take(8)
       // completion target for the poll: one emission per click user
       val expectedUsers = Tables.events(s, d)
         .where(col("event_type") === "click")
         .select("user_id").distinct().count()
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      // the stream clones the session when it starts, so the state scope
+      // needs to cover only the start
+      val q = withStreamPartitions(s)(
+        Tables.eventStream(s, d)
           .where(col("event_type") === "click")
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
@@ -1786,16 +1558,15 @@ object EventWindows {
           .toDF("user_id", "n_click", "cents")
           .writeStream.format("memory").queryName(name)
           .outputMode("update")
-          .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          while (q.isActive && System.nanoTime() < deadline &&
-            s.table(name).select("user_id").distinct().count() < expectedUsers)
-            Thread.sleep(100)
-        } finally {
-          q.stop()
-          q.awaitTermination()
-        }
+          .start())
+      try {
+        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+        while (q.isActive && System.nanoTime() < deadline &&
+          s.table(name).select("user_id").distinct().count() < expectedUsers)
+          Thread.sleep(100)
+      } finally {
+        q.stop()
+        q.awaitTermination()
       }
       s.table(name)
         .groupBy("user_id")
@@ -1829,30 +1600,21 @@ object EventWindows {
   val streamSemiJoin = Q(
     "q254_stream_semi_join",
     (s, d) => {
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
-      val name = "stream_semi_" + java.util.UUID.randomUUID().toString.take(8)
-      withStreamPartitions(s) {
-        def src = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
-          .withWatermark("ts", "1 hour")
-        val views = src.where(col("event_type") === "view")
-          .select(col("user_id").as("user_v"), col("event_id").as("view_id"),
-            col("ts").as("ts_view"))
-        val buys = src.where(col("event_type") === "purchase")
-          .select(col("user_id").as("user_b"), col("ts").as("ts_buy"))
-        val q = views.join(buys,
+      def src = Tables.eventStream(s, d)
+        .withWatermark("ts", "1 hour")
+      val views = src.where(col("event_type") === "view")
+        .select(col("user_id").as("user_v"), col("event_id").as("view_id"),
+          col("ts").as("ts_view"))
+      val buys = src.where(col("event_type") === "purchase")
+        .select(col("user_id").as("user_b"), col("ts").as("ts_buy"))
+      val streamed = toMemory(
+        views.join(buys,
             col("user_v") === col("user_b") &&
               col("ts_buy") >= col("ts_view") &&
               col("ts_buy") <= col("ts_view") + expr("INTERVAL 6 HOURS"),
-            "left_semi")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+            "left_semi"),
+        "append")
+      streamed
         .select(col("user_v").as("user_id"), col("view_id"), col("ts_view"))
     },
     Some("""SELECT v.user_id, v.event_id AS view_id, v.ts AS ts_view
@@ -2051,28 +1813,20 @@ object EventWindows {
     "q267_stream_observe",
     (s, d) => {
       import s.implicits._
-      Tables.eventsNanosConf(s)
-      val schema = Tables.schema(s, d, "events")
       val name = "stream_obs_" + java.util.UUID.randomUUID().toString.take(8)
-      var rows = Seq.empty[(Long, Long, Long)]
-      withStreamPartitions(s) {
-        val q = Tables.nanosTsToMicros(
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet").parquet(d))
+      val q = withStreamPartitions(s)(drain(
+        Tables.eventStream(s, d)
           .select(col("event_id"), col("value"))
           .observe("audit",
             count(lit(1)).as("n_rows"),
             sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"),
             count(when(col("value").isNull, 1)).as("n_null"))
           .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        rows = q.recentProgress.toSeq
-          .flatMap(p => Option(p.observedMetrics.get("audit")))
-          .map(r => (r.getAs[Long]("n_rows"), r.getAs[Long]("cents"),
-            r.getAs[Long]("n_null")))
-      }
+          .outputMode("append")))
+      val rows = q.recentProgress.toSeq
+        .flatMap(p => Option(p.observedMetrics.get("audit")))
+        .map(r => (r.getAs[Long]("n_rows"), r.getAs[Long]("cents"),
+          r.getAs[Long]("n_null")))
       // sum the per-batch observations — losslessness across batches is
       // exactly the claim the oracle checks
       val total = rows.foldLeft((0L, 0L, 0L)) { case ((a, b, c), (x, y, z)) =>

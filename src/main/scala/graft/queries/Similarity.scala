@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{CosineSimilarity, ScoredId, SeqDot, TopKAggregator}
+import graft.streaming.StreamFixture
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1083,14 +1084,12 @@ object Similarity {
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
         }
       }
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream.foreachBatch(serve)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        graft.sources.Sources.scratchLeaf(d, s"ann_serve_chk_$runId"))
-      .start()
-    q.awaitTermination()
+    StreamFixture.drain(
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.foreachBatch(serve)
+        .option("checkpointLocation",
+          graft.sources.Sources.scratchLeaf(d, s"ann_serve_chk_$runId")))
     (s.read.parquet(sink), batches.get())
   }
 
@@ -1182,14 +1181,12 @@ object Similarity {
           }
         }
       }
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream.foreachBatch(serve)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        graft.sources.Sources.scratchLeaf(d, s"ann_live_chk_$runId"))
-      .start()
-    q.awaitTermination()
+    StreamFixture.drain(
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.foreachBatch(serve)
+        .option("checkpointLocation",
+          graft.sources.Sources.scratchLeaf(d, s"ann_live_chk_$runId")))
     import scala.jdk.CollectionConverters._
     (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1))
   }
@@ -1280,14 +1277,12 @@ object Similarity {
           }
         }
       }
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream.foreachBatch(serve)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        graft.sources.Sources.scratchLeaf(d, s"ann_vac_chk_$runId"))
-      .start()
-    q.awaitTermination()
+    StreamFixture.drain(
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.foreachBatch(serve)
+        .option("checkpointLocation",
+          graft.sources.Sources.scratchLeaf(d, s"ann_vac_chk_$runId")))
     import scala.jdk.CollectionConverters._
     (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1), repRef.get())
   }
@@ -2203,14 +2198,12 @@ object Similarity {
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
         }
       }
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream.foreachBatch(serve)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        graft.sources.Sources.scratchLeaf(d, s"pq_serve_chk_$runId"))
-      .start()
-    q.awaitTermination()
+    StreamFixture.drain(
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.foreachBatch(serve)
+        .option("checkpointLocation",
+          graft.sources.Sources.scratchLeaf(d, s"pq_serve_chk_$runId")))
     (s.read.parquet(sink), batches.get())
   }
 
@@ -2397,14 +2390,12 @@ object Similarity {
           }
         }
       }
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-      .writeStream.foreachBatch(serve)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        graft.sources.Sources.scratchLeaf(d, s"pq_live_chk_$runId"))
-      .start()
-    q.awaitTermination()
+    StreamFixture.drain(
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.foreachBatch(serve)
+        .option("checkpointLocation",
+          graft.sources.Sources.scratchLeaf(d, s"pq_live_chk_$runId")))
     import scala.jdk.CollectionConverters._
     (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1))
   }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{Q, Tables}
+import graft.streaming.StreamFixture
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1157,16 +1158,14 @@ object Sources {
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val p = leaf(d, s"blob_stream_$runId")
       val chk = leaf(d, s"blob_stream_chk_$runId")
-      val q = s.readStream.format("graft.sources.docgen")
-        .option("rows", "100000").option("slices", "8")
-        .option("rowsPerBatch", "25000")
-        .load()
-        .writeStream.format("graft.sources.blob")
-        .option("path", p).option("checkpointLocation", chk)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamFixture.drain(
+        s.readStream.format("graft.sources.docgen")
+          .option("rows", "100000").option("slices", "8")
+          .option("rowsPerBatch", "25000")
+          .load()
+          .writeStream.format("graft.sources.blob")
+          .option("path", p).option("checkpointLocation", chk)
+          .outputMode("append"))
       s.read.format("graft.sources.blob").option("path", p).load()
         .groupBy("lang")
         .agg(count(lit(1)).as("n"),
@@ -1390,21 +1389,19 @@ object Sources {
       // agg sizes state partitions to keys for exactly this reason; the
       // per-query session pins it at FIRST run as the checkpoint does.
       s2.conf.set("spark.sql.shuffle.partitions", "5")
-      val q = s2.readStream.format("graft.sources.docgen")
-        .option("rows", "100000").option("slices", "8")
-        .option("rowsPerBatch", "12500")
-        .load()
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(col("tokens")).as("sum_tokens"),
-          min(col("id")).as("min_id"),
-          max(col("id")).as("max_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      StreamFixture.drain(
+        s2.readStream.format("graft.sources.docgen")
+          .option("rows", "100000").option("slices", "8")
+          .option("rowsPerBatch", "12500")
+          .load()
+          .groupBy("lang")
+          .agg(
+            count(lit(1)).as("n"),
+            sum(col("tokens")).as("sum_tokens"),
+            min(col("id")).as("min_id"),
+            max(col("id")).as("max_id"))
+          .writeStream.format("memory").queryName(name)
+          .outputMode("complete"))
       s2.table(name)
     },
     Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n,

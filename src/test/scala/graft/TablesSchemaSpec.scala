@@ -45,12 +45,32 @@ class TablesSchemaSpec extends AnyFunSuite {
       assert(Tables.schema(s, d, name) === rawSchema(s, d, name), s"$d $name")
       assert(Tables(s, d, name).schema === rawSchema(s, d, name), s"$d $name")
     }
-    for (d <- Seq(TestSpark.Sf0001, TestSpark.Sf001)) {
-      val nanos = spark.newSession()
-      Tables.eventsNanosConf(nanos)
-      assert(Tables.schema(nanos, d, "events") === rawSchema(nanos, d, "events"))
-      assert(Tables.events(nanos, d).schema("ts").dataType === TimestampType)
+    // the nanos conf is a constant of the session recipe, so the shared
+    // session and every session made from it read events under it
+    for (d <- Seq(TestSpark.Sf0001, TestSpark.Sf001); s <- Seq(spark, spark.newSession())) {
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+      assert(Tables.schema(s, d, "events") === rawSchema(s, d, "events"))
+      assert(Tables.events(s, d).schema("ts").dataType === TimestampType)
     }
+  }
+
+  test("after an events read, the schema cache holds one entry per table path") {
+    // a private copy of the tables, so no other spec's conf variant of
+    // the shared test data lands in the count
+    val d = Files.createTempDirectory("graft_tables_keys")
+    for (name <- Tables.names)
+      Files.copy(Paths.get(TestSpark.Sf0001, s"$name.parquet"), d.resolve(s"$name.parquet"))
+    val s = spark.newSession()
+    val reads: Seq[(org.apache.spark.sql.SparkSession, String) => Any] = Seq(
+      Tables.region, Tables.nation, Tables.customer, Tables.supplier, Tables.part,
+      Tables.orders, Tables.lineitem, Tables.documents, Tables.embeddings)
+    val before = s.conf.getAll
+    reads.foreach(_(s, d.toString))
+    Tables.events(s, d.toString)
+    reads.foreach(_(s, d.toString))
+    for (name <- Tables.names)
+      assert(Tables.schemas.keySet.asScala.count(_._1 == s"$d/$name.parquet") === 1, name)
+    assert(s.conf.getAll === before)
   }
 
   test("the key holds the session's parquet confs: one file, two conf variants") {
@@ -68,7 +88,6 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("a cached table opens with no Spark job, in this session and in a new one") {
     val d = TestSpark.Sf0001
-    // events first: its nanosAsLong conf is part of every later key
     Tables.events(spark, d)
     Tables.lineitem(spark, d)
     // the listener does see the inference job a plain read pays
