@@ -27,7 +27,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Output: after each timed pass a JSON line marked `"provisional":true`,
   * so a run cut short still leaves data; at the end a "# trailer" line and
   * the final JSON line, always the last stdout line. The full artifact
-  * (every per-pass sample, the pass telemetry) goes to
+  * (every per-pass sample, the pass telemetry, and `warm_codegen_units`:
+  * the queries that still compile after the first pass) goes to
   * SPARK_GRAFT_BENCH_ARTIFACT (default ./BENCH_local_latest.json).
   *
   * Knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS,
@@ -45,9 +46,11 @@ object Bench {
   private val SlopeFactor = 2.0 // see slopeFlags
   private val SlopeFloorSec = 1.0
 
-  /** One timed materialization of one query and its attribution. */
+  /** One timed materialization of one query and its attribution;
+    * `codegenUnits` counts the classes it compiled (0 on a cache hit). */
   private[graft] final case class QSample(sec: Double, gcMs: Long,
-      cpuMs: Long, shuffleBytes: Long, stealJf: Long, iowaitJf: Long)
+      cpuMs: Long, shuffleBytes: Long, stealJf: Long, iowaitJf: Long,
+      codegenUnits: Long = 0L)
 
   /** One timed pass: per query in name order, its sample or the error it
     * threw; plus the pass's steal fraction and telemetry fields. */
@@ -210,6 +213,7 @@ object Bench {
       val (_, s0, i0) = cpuJiffies
       val g0 = gcMillis
       val c0 = processCpuNanos
+      val (u0, _) = codegenStats
       val t0 = System.nanoTime()
       val err = try { run(n); None } catch { case e: Throwable =>
         System.err.println(s"[bench] $n failed: ${e.getMessage}")
@@ -219,7 +223,8 @@ object Bench {
       val gq = gcMillis - g0
       val cq = if (c0 < 0) -1L else (processCpuNanos - c0) / 1000000L
       val (_, s1, i1) = cpuJiffies
-      err.toLeft(QSample(dt, gq, cq, settle() - sb0, s1 - s0, i1 - i0))
+      val (u1, _) = codegenStats
+      err.toLeft(QSample(dt, gq, cq, settle() - sb0, s1 - s0, i1 - i0, u1 - u0))
     }
     val (cg1, cgMean) = codegenStats
     val rt = Runtime.getRuntime
@@ -253,6 +258,12 @@ object Bench {
     def perPass(f: QSample => String, names: Seq[String] = ok): String =
       obj(names.map(ok.indexOf).map(j => ok(j) -> arr(grid.map(p => f(p(j))))))
     def slowest10: Seq[String] = queries.sortBy(-_._2).take(10).map(_._1)
+    /** Per query, the codegen units compiled over every pass after the
+      * first; only queries that compiled any. A query the cache holds
+      * compiles nothing once warm, so each entry names a recompiling one. */
+    def warmCodegenUnits: Seq[(String, Long)] = ok.indices
+      .map(j => ok(j) -> grid.drop(1).map(_(j).codegenUnits).sum)
+      .filter(_._2 > 0)
     /** The fields every published JSON object carries. */
     def fields: Seq[(String, String)] = Seq(
       "metric" -> str("total"), "value" -> total.toString, "unit" -> str("sec"),
@@ -434,6 +445,7 @@ object Bench {
             case (n, s0) if s0 > 0.0 && med.contains(n) => n -> med(n) / s0 }, 2),
           "slope_secs" -> byName(slopeSecs, 3),
           "shuffle_mb" -> byName(s.shuffleMb.toMap, 1),
+          "warm_codegen_units" -> obj(s.warmCodegenUnits.map { case (n, u) => n -> u.toString }),
           "slope_shuffle_mb" -> byName(slopeMb, 1),
           // first used pass over median: ~1.0 steady, >>1 a one-time build
           "pass0_over_median" -> obj(s.ok.indices.map { j =>

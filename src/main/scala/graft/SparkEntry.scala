@@ -65,8 +65,16 @@ object SparkEntry {
     * evicts everything and every stage recompiles on every pass (~10-40 ms
     * per unit, serial with the query). Measured by per-pass
     * CodegenMetrics counts: at 5000 a pass still recompiled ~4.7k units;
-    * 12000 holds a pass with headroom (~1.0k). The entries are weakly
-    * referenced compiled classes, not data.
+    * 12000 holds a pass. The ~1.1k units a warm pass still compiled were
+    * not evictions: Spark keys the cache on (class loader, code), and every
+    * child session and every stream's session clone ran its tasks under an
+    * artifact class loader of its own, so its byte-identical code missed
+    * on every call. With `StreamFixture.child` and `StreamFixture.drain`
+    * sharing the class loader, a warm sf0.01 pass on 4 cores compiles 209
+    * units (from 1092), in 31 queries whose generated code differs between
+    * calls, mostly only in a whole-stage class's stage id or a fresh
+    * variable name; Bench's artifact names them (`warm_codegen_units`).
+    * The entries are weakly referenced compiled classes, not data.
     */
   private val CodegenCacheEntries: Int = 12000
 

@@ -156,11 +156,11 @@ object AsOfJoin {
         attr(rp, rightKey), attr(rp, rightTs)))
   }
 
-  /** An isolated child session carrying the strategy (q92's newSession
+  /** A child session carrying the strategy (q92's own-session
     * discipline — the shared session's planner is never mutated).
     */
   def session(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val ses = s.newSession()
+    val ses = graft.streaming.StreamFixture.child(s)
     ses.experimental.extraStrategies = Seq(AsOfJoinStrategy)
     ses
   }

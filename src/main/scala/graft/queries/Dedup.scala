@@ -1688,7 +1688,7 @@ object Dedup {
   private[graft] def runNearDupStream(s: org.apache.spark.sql.SparkSession,
       docsStream: org.apache.spark.sql.DataFrame, name: String, chk: String): Unit = {
     import s.implicits._
-    StreamFixture.drain(
+    StreamFixture.drain(s)(
       rowLocalBands(docsStream)
         .withWatermark("ts", s"$StreamHorizonSec seconds")
         .select(col("bk"), col("doc_id"), col("ts"), col("n"))
@@ -1757,14 +1757,12 @@ object Dedup {
   val streamNearDup = Q(
     "q342_stream_neardup",
     (s0, d) => {
-      val s = s0.newSession()
       // keyed-state partitions sized small for the test/bench scale
       // (q166's sizing rule); production sizes to band-key spread.
       // RocksDB provider: transformWithState's multi-column-family
       // state is not supported by the HDFS-backed default (q223).
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = StreamFixture.child(s0, "spark.sql.shuffle.partitions" -> "4",
+        StreamFixture.RocksDbState)
       val schema = Tables.schema(s, d, "documents")
       val name = "stream_neardup_" + java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"neardup_chk_$name")

@@ -2,7 +2,8 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.Q.{dsum2, sqlSum2}
-import graft.streaming.StreamFixture.{drain, toMemory, withStreamPartitions}
+import graft.streaming.StreamFixture.{RocksDbState, child, drain, shareClasses, toMemory,
+  withStreamPartitions}
 import org.apache.spark.sql.functions._
 
 /** Event-time windowing over the `events` table: tumbling, sliding, and
@@ -169,7 +170,7 @@ object EventWindows {
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val out = graft.sources.Sources.scratchLeaf(d, s"stream_file_sink_$runId")
       val chk = graft.sources.Sources.scratchLeaf(d, s"stream_file_sink_chk_$runId")
-      withStreamPartitions(s)(drain(
+      withStreamPartitions(s)(drain(s)(
         Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -441,15 +442,13 @@ object EventWindows {
     * set — which is exactly what the unchanged q61 oracle checks, and
     * the q37/q61 pair discipline (same aggregation, different
     * machinery) extends to a third execution path. Provider is a
-    * per-query conf read at stream start; `newSession` isolation (q92/
+    * per-query conf read at stream start; a `child` session (q92/
     * q184 discipline) keeps it from leaking into other queries.
     */
   val streamRocksDb = Q(
     "q187_stream_rocksdb_state",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       val streamed = toMemory(
         Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
@@ -554,9 +553,7 @@ object EventWindows {
   val transformWithStateTotals = Q(
     "q189_transform_with_state",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       import s.implicits._
       val streamed = toMemory(
         Tables.eventStream(s, d)
@@ -609,7 +606,7 @@ object EventWindows {
     (s, d) => {
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"state_read_chk_$runId")
-      withStreamPartitions(s)(drain(
+      withStreamPartitions(s)(drain(s)(
         Tables.eventStream(s, d)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -661,13 +658,11 @@ object EventWindows {
   val twsStateRead = Q(
     "q199_tws_state_read",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       import s.implicits._
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val chk = graft.sources.Sources.scratchLeaf(d, s"tws_read_chk_$runId")
-      withStreamPartitions(s)(drain(
+      withStreamPartitions(s)(drain(s)(
         Tables.eventStream(s, d)
           .select(col("user_id"), col("value")).as[(Long, Double)]
           .groupByKey(_._1)
@@ -720,7 +715,7 @@ object EventWindows {
         col("ts").as("ts_a"), col("value").as("val_a"))
       val b = src.select(col("user_id").as("user_b"), col("event_id").as("id_b"),
         col("ts").as("ts_b"), col("value").as("val_b"))
-      withStreamPartitions(s)(drain(
+      withStreamPartitions(s)(drain(s)(
         a.join(b,
             col("user_id") === col("user_b") &&
               col("id_a") < col("id_b") &&
@@ -801,9 +796,7 @@ object EventWindows {
   val sessionTimers = Q(
     "q195_session_timers",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       import s.implicits._
       val streamed = toMemory(
         Tables.eventStream(s, d)
@@ -990,7 +983,7 @@ object EventWindows {
           merged.write.mode("overwrite").parquet(s"$storeRoot/v${version + 1}")
           version += 1
         }
-      withStreamPartitions(s)(drain(
+      withStreamPartitions(s)(drain(s)(
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(src)
           .writeStream.foreachBatch(mergeBatch)
@@ -1174,9 +1167,7 @@ object EventWindows {
   val transformWithMapState = Q(
     "q223_tws_mapstate",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       import s.implicits._
       val streamed = toMemory(
         Tables.eventStream(s, d)
@@ -1314,9 +1305,7 @@ object EventWindows {
   val transformWithInitialState = Q(
     "q225_tws_initial_state",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       import s.implicits._
       val cutoff = "2024-01-16 00:00:00"
       val history = Tables.events(s, d)
@@ -1425,9 +1414,7 @@ object EventWindows {
   val transformWithListState = Q(
     "q251_tws_liststate",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val s = child(s0, RocksDbState)
       import s.implicits._
       val streamed = toMemory(
         Tables.eventStream(s, d)
@@ -1535,19 +1522,17 @@ object EventWindows {
       // because their async-close future has deadlocked RocksDB
       // snapshot uploads under rapid tiny batches in this environment
       // (ChecksumCancellableFSDataOutputStream.close never completing)
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      val s = child(s0, RocksDbState,
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
       import s.implicits._
       val name = "stream_tws_ttl_" + java.util.UUID.randomUUID().toString.take(8)
       // completion target for the poll: one emission per click user
       val expectedUsers = Tables.events(s, d)
         .where(col("event_type") === "click")
         .select("user_id").distinct().count()
-      // the stream clones the session when it starts, so the state scope
-      // needs to cover only the start
-      val q = withStreamPartitions(s)(
+      // the stream clones the session when it starts, so the state and
+      // class-sharing scopes need to cover only the start
+      val q = withStreamPartitions(s)(shareClasses(s)(
         Tables.eventStream(s, d)
           .where(col("event_type") === "click")
           .select(col("user_id"), col("value")).as[(Long, Double)]
@@ -1558,7 +1543,7 @@ object EventWindows {
           .toDF("user_id", "n_click", "cents")
           .writeStream.format("memory").queryName(name)
           .outputMode("update")
-          .start())
+          .start()))
       try {
         val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
         while (q.isActive && System.nanoTime() < deadline &&
@@ -1814,7 +1799,7 @@ object EventWindows {
     (s, d) => {
       import s.implicits._
       val name = "stream_obs_" + java.util.UUID.randomUUID().toString.take(8)
-      val q = withStreamPartitions(s)(drain(
+      val q = withStreamPartitions(s)(drain(s)(
         Tables.eventStream(s, d)
           .select(col("event_id"), col("value"))
           .observe("audit",

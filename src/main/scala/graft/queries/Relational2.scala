@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.Q.{dsum2, sqlSum2, sqlSum4}
 import graft.functions.TextFns
+import graft.streaming.StreamFixture.child
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -542,11 +543,10 @@ object Relational2 {
   val bloomJoin = Q(
     "q92_bloom_join",
     (s, d) => {
-      val iso = s.newSession()
-      iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      iso.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      iso.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      iso.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
+      val iso = child(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
       Tables.lineitem(iso, d)
         .join(Tables.orders(iso, d).where(col("o_orderpriority") === "1-URGENT"),
           col("l_orderkey") === col("o_orderkey"))
@@ -579,8 +579,7 @@ object Relational2 {
   val saltedJoin = Q(
     "q128_salted_join",
     (s, d) => {
-      val iso = s.newSession()
-      iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val iso = child(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
       val ev = Tables.events(iso, d).select(col("event_id"), col("event_type"))
       val dim = ev.groupBy("event_type").agg(count(lit(1)).as("type_count"))
       val fact = ev.withColumn("salt", col("event_id") % 8)
@@ -1030,11 +1029,10 @@ object Relational2 {
   val variantShred = Q(
     "q184_variant_shred_store",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.variant.writeShredding.enabled", "true")
-      s.conf.set("spark.sql.variant.inferShreddingSchema", "true")
-      s.conf.set("spark.sql.variant.allowReadingShredded", "true")
-      s.conf.set("spark.sql.variant.pushVariantIntoScan", "true")
+      val s = child(s0, "spark.sql.variant.writeShredding.enabled" -> "true",
+        "spark.sql.variant.inferShreddingSchema" -> "true",
+        "spark.sql.variant.allowReadingShredded" -> "true",
+        "spark.sql.variant.pushVariantIntoScan" -> "true")
       val store = graft.sources.Sources.scratchLeaf(d, "variant_store")
       Tables.events(s, d)
         .select(col("event_type"), parse_json(col("props")).as("v"))
@@ -1324,11 +1322,10 @@ object Relational2 {
   val aqeSkewJoin = Q(
     "q201_aqe_skew_join",
     (s, d) => {
-      val iso = s.newSession()
-      iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      iso.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      iso.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      iso.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
+      val iso = child(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB")
       // fixed-size fixture (~400k fact rows at every sf): the demo
       // targets the MECHANISM, so its cost should not scale with the
       // corpus; the 1-row count collect is metadata-plane
@@ -2128,15 +2125,13 @@ object Relational2 {
     "q234_timestamp_ntz",
     (s0, d) => {
       val store = graft.sources.Sources.scratchLeaf(d, "ntz_store")
-      val sUtc = s0.newSession()
-      sUtc.conf.set("spark.sql.session.timeZone", "UTC")
+      val sUtc = child(s0, "spark.sql.session.timeZone" -> "UTC")
       Tables.events(sUtc, d)
         .select(col("event_id"), col("event_type"), col("ts"),
           col("ts").cast("timestamp_ntz").as("tsn"),
           hour(col("ts")).as("h_utc"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val sNy = s0.newSession()
-      sNy.conf.set("spark.sql.session.timeZone", "America/New_York")
+      val sNy = child(s0, "spark.sql.session.timeZone" -> "America/New_York")
       sNy.read.parquet(store)
         .select(col("event_type"), col("h_utc"),
           hour(col("ts")).as("h_ny"), hour(col("tsn")).as("h_ntz"))
@@ -2585,17 +2580,14 @@ object Relational2 {
     * concentrates it in one partition, and the executed plan shows
     * AQEShuffleRead over a REBALANCE_PARTITIONS exchange.
     */
-  private[graft] def rebalanceSession(s0: org.apache.spark.sql.SparkSession) = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    // tight advisory so the hot partition splits at test scale (the
-    // whole sf0.001 table is ~40 KB — anything larger coalesces to one
-    // partition); at 100 TB the default 64 MB advisory plays the same
-    // role
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2048")
-    s.conf.set("spark.sql.adaptive.rebalancePartitionsSmallPartitionFactor", "0.2")
-    s
-  }
+  private[graft] def rebalanceSession(s0: org.apache.spark.sql.SparkSession) =
+    child(s0, "spark.sql.adaptive.enabled" -> "true",
+      // tight advisory so the hot partition splits at test scale (the
+      // whole sf0.001 table is ~40 KB — anything larger coalesces to one
+      // partition); at 100 TB the default 64 MB advisory plays the same
+      // role
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048",
+      "spark.sql.adaptive.rebalancePartitionsSmallPartitionFactor" -> "0.2")
 
   private[graft] def rebalanced(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
@@ -2643,13 +2635,10 @@ object Relational2 {
     * `AqeDemotionSpec` gates the physics: initial plan SortMergeJoin,
     * final plan BroadcastHashJoin, and with AQE off the SMJ persists.
     */
-  private[graft] def demotionSession(s0: org.apache.spark.sql.SparkSession) = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
-    s
-  }
+  private[graft] def demotionSession(s0: org.apache.spark.sql.SparkSession) =
+    child(s0, "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10485760")
 
   private[graft] def demotedJoin(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {

@@ -1084,7 +1084,7 @@ object Similarity {
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
         }
       }
-    StreamFixture.drain(
+    StreamFixture.drain(s)(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve)
@@ -1181,7 +1181,7 @@ object Similarity {
           }
         }
       }
-    StreamFixture.drain(
+    StreamFixture.drain(s)(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve)
@@ -1277,7 +1277,7 @@ object Similarity {
           }
         }
       }
-    StreamFixture.drain(
+    StreamFixture.drain(s)(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve)
@@ -2198,7 +2198,7 @@ object Similarity {
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
         }
       }
-    StreamFixture.drain(
+    StreamFixture.drain(s)(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve)
@@ -2390,7 +2390,7 @@ object Similarity {
           }
         }
       }
-    StreamFixture.drain(
+    StreamFixture.drain(s)(
       s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve)

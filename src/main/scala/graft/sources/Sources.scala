@@ -616,7 +616,7 @@ object Sources {
     * full-table rewrite — same contract as Hive's dynamic-partition
     * INSERT OVERWRITE and the Delta `replaceWhere` shape.
     *
-    * Session-conf isolation via `newSession` (q92/q184 discipline).
+    * Session-conf isolation via a `StreamFixture.child` session (q92/q184 discipline).
     * Oracle reconstructs the post-correction state in closed form
     * (CASE on the corrected day). `DynamicOverwriteSpec` pins the
     * physics the oracle can't see: untouched partitions keep their
@@ -626,11 +626,8 @@ object Sources {
     */
   private[graft] val DpoDay = "2024-01-03"
 
-  private[graft] def dpoSession(s0: SparkSession): SparkSession = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    s
-  }
+  private[graft] def dpoSession(s0: SparkSession): SparkSession =
+    StreamFixture.child(s0, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
 
   /** Day-partitioned base store of the events table. */
   private[graft] def dpoWriteBase(s: SparkSession, d: String, tag: String): String = {
@@ -1158,7 +1155,7 @@ object Sources {
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val p = leaf(d, s"blob_stream_$runId")
       val chk = leaf(d, s"blob_stream_chk_$runId")
-      StreamFixture.drain(
+      StreamFixture.drain(s)(
         s.readStream.format("graft.sources.docgen")
           .option("rows", "100000").option("slices", "8")
           .option("rowsPerBatch", "25000")
@@ -1293,8 +1290,7 @@ object Sources {
   val docgenKeyGroupedAgg = Q(
     "q244_v2_keygrouped_agg",
     (s, _) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      val s2 = StreamFixture.child(s, "spark.sql.sources.v2.bucketing.enabled" -> "true")
       s2.read.format("graft.sources.docgen")
         .option("rows", "1000000").option("partitionBy", "lang").load()
         .groupBy("lang")
@@ -1327,9 +1323,8 @@ object Sources {
   val docgenSpjJoin = Q(
     "q245_v2_spj",
     (s, _) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val s2 = StreamFixture.child(s, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
       def read(rows: Long) = s2.read.format("graft.sources.docgen")
         .option("rows", rows.toString).option("partitionBy", "lang").load()
       val a = read(1000000L).groupBy("lang")
@@ -1379,7 +1374,6 @@ object Sources {
     "q166_stream_source",
     (s, _) => {
       val name = "docgen_stream_" + java.util.UUID.randomUUID().toString.take(8)
-      val s2 = s.newSession()
       // State partitions sized to key cardinality (5 langs), not the
       // session's 32: complete mode rewrites and re-emits EVERY state
       // partition each micro-batch, so 32 near-empty state stores paid
@@ -1388,8 +1382,8 @@ object Sources {
       // 3.1 s, 1.7 s irreducible startup+drain. A production streaming
       // agg sizes state partitions to keys for exactly this reason; the
       // per-query session pins it at FIRST run as the checkpoint does.
-      s2.conf.set("spark.sql.shuffle.partitions", "5")
-      StreamFixture.drain(
+      val s2 = StreamFixture.child(s, "spark.sql.shuffle.partitions" -> "5")
+      StreamFixture.drain(s2)(
         s2.readStream.format("graft.sources.docgen")
           .option("rows", "100000").option("slices", "8")
           .option("rowsPerBatch", "12500")
@@ -1629,9 +1623,8 @@ object Sources {
       // path both sides ride at 100 TB, where neither table broadcasts.
       // Both the static and the AQE runtime broadcast thresholds are
       // disabled so the demonstrated plan is the at-scale plan.
-      val s = s0.newSession()
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      val s = StreamFixture.child(s0, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       val fact = s.table(bucketStore(s, d))
       val dim = s.table(custBucketStore(s, d))
       fact.join(dim, col("o_custkey") === col("c_custkey"))
@@ -1762,11 +1755,10 @@ object Sources {
   val cboReorder = Q(
     "q309_cbo_reorder",
     (s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      val s = StreamFixture.child(s0, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       val (facts, sides, dim) = cboStore(s, d)
       s.sql(s"""SELECT f.event_type, count(*) AS n_pairs
                 FROM $facts f
