@@ -3,7 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.{CosineSimilarity, ScoredId, SeqDot, TopKAggregator}
 import graft.streaming.StreamFixture
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,12 +53,15 @@ object Similarity {
             WHERE rnk <= 10""")
   )
 
-  /** Deterministic pseudo-random hyperplane component in [-0.5, 0.5),
-    * derived from md5(p,i) — reproducible across runs and executors.
+  /** Deterministic pseudo-random component in [-0.5, 0.5) from the
+    * first 32 bits of md5(key) — reproducible across runs and executors,
+    * and mirrored by the oracles' `md5(concat(...))`. Seeds the LSH
+    * planes (`"$p,$i"`), the IVF centroids (`"c$j,$i"`) and the PQ
+    * codebooks (`"q$m,$k,$i"`); the key prefixes keep the families
+    * disjoint.
     */
-  private def planeComponent(p: Int, i: Int): Double = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$p,$i".getBytes("UTF-8"))
+  private def hashUnit(key: String): Double = {
+    val h = java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
     val u = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
     u.toDouble / (1L << 32).toDouble - 0.5
   }
@@ -69,7 +72,7 @@ object Similarity {
     // native SeqDot: one fused codegen'd loop per plane projection,
     // replacing the interpreted aggregate(zip_with(...)) HOF pair
     def dotPlane(p: Int): Column =
-      SeqDot(col("v"), typedLit((0 until Dim).map(i => planeComponent(p, i))))
+      SeqDot(col("v"), typedLit((0 until Dim).map(i => hashUnit(s"$p,$i"))))
     (0 until nPlanes)
       .map(p => when(dotPlane(p) >= 0, lit(1 << p)).otherwise(lit(0)))
       .reduce(_ + _)
@@ -200,16 +203,6 @@ object Similarity {
   private val IvfNProbe = 2 // learned centroids need fewer probes than random ones
   private val IvfSampleMod = 7 // deterministic ~14% training sample for the Lloyd step
 
-  /** Hash-derived IVF centroid component (seed prefix 'c' keeps the
-    * family disjoint from the LSH planes).
-    */
-  private def centComponent(j: Int, i: Int): Double = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"c$j,$i".getBytes("UTF-8"))
-    val u = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-    u.toDouble / (1L << 32).toDouble - 0.5
-  }
-
   /** q63 — ANN via an IVF (inverted-file) coarse quantizer with LEARNED
     * centroids, the other classic ANN family next to LSH (q28/q62).
     * Training is `IvfLloydSteps` deterministic Lloyd (k-means) steps on
@@ -316,7 +309,7 @@ object Similarity {
     val cacheKey = s"$d@${graft.sources.Sources.dirFingerprint(d)}#$maxId"
     val (rows, schema) = centCache.getOrElseUpdate((cacheKey, steps, k), {
       val seeds = (0 until k)
-        .map(j => (0 until Dim).map(i => centComponent(j, i)))
+        .map(j => (0 until Dim).map(i => hashUnit(s"c$j,$i")))
       val seedRow = seeds.zipWithIndex.map { case (c, j) => (j, c) }
         .toDF("cell", "c")
         .agg(array_sort(collect_list(struct(col("cell"), col("c")))).as("cs"))
@@ -521,6 +514,73 @@ object Similarity {
       .select(col("vec_id"), col("v"), element_at(col("cells"), 1)("j").as("cell"))
   }
 
+  /** A serving tier of the ANN store lifecycle (q341-q353): full-
+    * precision IVF rows or PQ codes. `tag` keys the tier's artifacts and
+    * scratch dirs; `encode(s, d, d0, rows)` turns cell-assigned
+    * (vec_id, v, cell) rows into what the store lands, against
+    * quantizers trained below `d0`; `valCols` are the stored value
+    * columns; `probes(s, d, maxId)` is the 8-probe set (one row per
+    * probed cell) against quantizers trained below `maxId`; and
+    * `rank(s, d, probes, store)` is the top-5 search over a store
+    * relation.
+    */
+  private[graft] final case class ServeTier(tag: String, valCols: Seq[String],
+      encode: (SparkSession, String, Long, DataFrame) => DataFrame,
+      probes: (SparkSession, String, Long) => DataFrame,
+      rank: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
+
+  /** Vectors land verbatim; exact cosine over the probed cells. */
+  private[graft] val IvfTier: ServeTier = ServeTier("ivf", Seq("v"),
+    (_, _, _, rows) => rows,
+    (s, d, maxId) => ivfProbes(withCells(
+      vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = maxId))),
+    (_, _, probes, store) => ivfRank(probes, store))
+
+  /** Every landed slice PQ-encoded against the codebooks frozen at the
+    * cut — the store holds (vec_id, codes, cell), never a float vector,
+    * and the row-local encode keeps each append O(wave). Each probe row
+    * carries its 8×8 ADC lookup table; the search is q111's ADC scan,
+    * candidate cut and exact rerank against the base vectors.
+    */
+  private[graft] val PqTier: ServeTier = ServeTier("pq", Seq("codes"),
+    (s, d, d0, rows) => pqEncode(rows, pqBooksRow(pqBooks(s, d, maxId = d0))),
+    (s, d, maxId) => pqProbesLut(IvfTier.probes(s, d, maxId),
+      pqBooksRow(pqBooks(s, d, maxId = maxId))),
+    (s, d, probes, store) => pqAdcRank(probes, store, vectors(s, d)))
+
+  /** The immutable base store of a tier (the base slice assigned with
+    * the base-trained centroids, encoded, cell-partitioned) — a
+    * per-corpus-snapshot artifact shared by the append (q341/q349),
+    * compaction and serving stages: they all operate on the SAME stored
+    * base, as they would in a deployment.
+    */
+  private[graft] def baseStore(s: SparkSession, d: String, d0: Long,
+      tier: ServeTier): String =
+    // d0 folded into the artifact key (ADVICE r15): two callers with
+    // different cuts must build two artifacts, not silently share the
+    // first caller's — the invariant is structural, not call-site luck
+    graft.sources.Sources.artifactOnce(d, s"${tier.tag}_delta_base_$d0") { p =>
+      tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = false))
+        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(p)
+    }
+
+  /** The q341/q349 body: land the delta slice, encoded by the tier, as a
+    * cell-partitioned increment beside the tier's immutable base, then
+    * search base + increment. The increment dir is run-unique: bench
+    * reps must re-measure the append, not accumulate duplicates into a
+    * shared store.
+    */
+  private def deltaAppend(s: SparkSession, d: String, tier: ServeTier): DataFrame = {
+    val d0 = deltaCut(s, d)
+    val base = baseStore(s, d, d0, tier)
+    val inc = graft.sources.Sources.scratchLeaf(d,
+      s"${tier.tag}_delta_inc_${java.util.UUID.randomUUID().toString.take(8)}")
+    tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = true))
+      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(inc)
+    tier.rank(s, d, tier.probes(s, d, d0),
+      s.read.parquet(base).unionByName(s.read.parquet(inc)))
+  }
+
   /** q341 — INCREMENTAL ANN INDEX MAINTENANCE (round-14 verdict task 4):
     * a delta vector batch is appended into the q76-style cell-partitioned
     * serving store using the STORED centroids — no retrain — and the
@@ -544,43 +604,9 @@ object Similarity {
     * proof that append-then-probe ≡ rebuild-then-probe; `IvfDeltaSpec`
     * additionally proves it in-engine against a fresh full rebuild.
     */
-  /** The immutable base inverted file (the base slice assigned with the
-    * base-trained centroids, cell-partitioned) — a per-corpus-snapshot
-    * artifact shared by q341 (append) and q343 (compaction): both
-    * lifecycle stages operate on the SAME stored base, as they would in
-    * a deployment.
-    */
-  private[graft] def baseStore(s: SparkSession, d: String, d0: Long,
-      tag: String, enc: (Long, DataFrame) => DataFrame): String =
-    // d0 folded into the artifact key (ADVICE r15): two callers with
-    // different cuts must build two artifacts, not silently share the
-    // first caller's — the invariant is structural, not call-site luck
-    graft.sources.Sources.artifactOnce(d, s"${tag}_delta_base_$d0") { p =>
-      enc(d0, deltaAssign(s, d, d0, delta = false))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(p)
-    }
-
-  private[graft] def ivfBaseStore(s: SparkSession, d: String, d0: Long): String =
-    baseStore(s, d, d0, "ivf", (_, df) => df)
-
   val annIndexDelta = Q(
     "q341_ann_index_delta",
-    (s, d) => {
-      val d0 = deltaCut(s, d)
-      val base = ivfBaseStore(s, d, d0)
-      // run-unique increment dir: bench reps must re-measure the append,
-      // not accumulate duplicates into a shared store
-      val inc = graft.sources.Sources.scratchLeaf(d,
-        s"ivf_delta_inc_${java.util.UUID.randomUUID().toString.take(8)}")
-      deltaAssign(s, d, d0, delta = true)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(inc)
-      val store = s.read.parquet(base).unionByName(s.read.parquet(inc))
-      val probes = ivfProbes(
-        withCells(vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = d0)))
-      ivfRank(probes, store)
-    },
+    (s, d) => deltaAppend(s, d, IvfTier),
     Some(ivfOracle(IvfLloydSteps,
       "AND vec_id < (SELECT (max(vec_id) * 9) // 10 FROM embeddings)"))
   )
@@ -685,37 +711,21 @@ object Similarity {
     */
   private[graft] final case class IvfStoreV3(
       root: String, d0: Long, dMid: Long, base: String,
-      incA: String, incB: String, compactDir: String, manifestDir: String,
-      cells: Seq[Long], v3: Map[Long, Seq[String]])
+      incA: String, incB: String, compactDir: String,
+      cells: Seq[Long], v3: Map[Long, Seq[String]], tier: ServeTier)
 
-  private[graft] def buildStoreV3(s: SparkSession, d: String,
-      privateBase: Boolean = false): IvfStoreV3 =
-    buildStoreV3Enc(s, d, privateBase, "ivf", (_, df) => df)
-
-  /** q350/q351's code-store twin: the SAME v3 store lifecycle with every
-    * landed slice PQ-ENCODED against the base-frozen codebooks — the
-    * store holds (vec_id, codes, cell), never a float vector. The
-    * encode is row-local (broadcast codebook row), so each append stays
-    * O(wave).
+  /** The v3 store builder: base + two increment waves, each slice
+    * encoded by the tier before landing (the float store lands rows
+    * verbatim; the PQ store encodes them), then one atomic manifest
+    * commit of versions 1..3.
     */
-  private[graft] def buildPqStoreV3(s: SparkSession, d: String,
-      privateBase: Boolean = false): IvfStoreV3 =
-    buildStoreV3Enc(s, d, privateBase, "pq",
-      (d0, df) => pqEncode(df, pqBooksRow(pqBooks(s, d, maxId = d0))))
-
-  /** The generic v3 store builder: base + two increment waves, each
-    * slice transformed by `enc(d0, assignedRows)` before landing (the
-    * float store lands rows verbatim; the PQ store encodes them), then
-    * one atomic manifest commit of versions 1..3.
-    */
-  private[graft] def buildStoreV3Enc(s: SparkSession, d: String,
-      privateBase: Boolean, tag: String,
-      enc: (Long, DataFrame) => DataFrame): IvfStoreV3 = {
+  private[graft] def buildStoreV3(s: SparkSession, d: String, tier: ServeTier,
+      privateBase: Boolean = false): IvfStoreV3 = {
     val mx = maxVecId(s, d)
     val d0 = mx * 9 / 10
     val dMid = (d0 + mx + 1) / 2
     val root = graft.sources.Sources.scratchLeaf(d,
-      s"${tag}_compact_${java.util.UUID.randomUUID().toString.take(8)}")
+      s"${tier.tag}_compact_${java.util.UUID.randomUUID().toString.take(8)}")
     // Byte-copy a shared per-corpus artifact under the run root. Scale
     // boundary: FileUtil.copy is SINGLE-THREADED DRIVER I/O — right for
     // this fixture slice (a few MB), but at deployment scale the real
@@ -740,10 +750,10 @@ object Similarity {
         // each bench rep of the vacuum fixtures re-paid that job for a
         // result that is bit-identical by construction (optimization
         // r17, guide §1.2: don't recompute what is already stored).
-        copyUnderRoot(baseStore(s, d, d0, tag, enc), s"$root/base")
-      } else baseStore(s, d, d0, tag, enc)
+        copyUnderRoot(baseStore(s, d, d0, tier), s"$root/base")
+      } else baseStore(s, d, d0, tier)
     val incA = s"$root/inc_a"; val incB = s"$root/inc_b"
-    val compactDir = s"$root/compact"; val manifestDir = s"$root/manifest"
+    val compactDir = s"$root/compact"
     // The two increment waves are deterministic corpus slices encoded
     // against the base-frozen centroids/codebooks — bit-identical on
     // every build by construction, exactly like the base. Build each
@@ -758,8 +768,8 @@ object Similarity {
     // vacuum / live-serve operators this family measures.
     def landWave(sub: String, lo: Long, hi: Long, dest: String): Unit = {
       val shared = graft.sources.Sources.artifactOnce(
-        d, s"${tag}_inc_${sub}_${d0}_$dMid") { p =>
-        enc(d0, waveAssign(s, d, d0, lo, hi))
+        d, s"${tier.tag}_inc_${sub}_${d0}_$dMid") { p =>
+        tier.encode(s, d, d0, waveAssign(s, d, d0, lo, hi))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("cell").parquet(p)
       }
@@ -770,7 +780,7 @@ object Similarity {
     val baseDirs = cellDirs(s, base); val aDirs = cellDirs(s, incA); val bDirs = cellDirs(s, incB)
     val cells = (baseDirs.keySet ++ aDirs.keySet ++ bDirs.keySet).toSeq.sorted
     // each cell's live-dir list kept lexicographically sorted so the
-    // handle and manifestAsOf (which re-sorts after the collect) agree
+    // handle and StoreManifest.asOf (which re-sorts on resolve) agree
     val v3 = cells.map(j =>
       j -> (baseDirs.get(j).toSeq ++ aDirs.get(j).toSeq ++ bDirs.get(j).toSeq).sorted).toMap
     // versions 1..3 (base, +incA, +incB) in one metadata commit — a
@@ -786,15 +796,14 @@ object Similarity {
         cells.map(j => (3L, j, v3(j)))
     graft.sources.StoreManifest.commit(s, root)(_ =>
       upTo3.flatMap { case (v, j, ps) => ps.map(p => (v, j, p)) })
-    IvfStoreV3(root, d0, dMid, base, incA, incB, compactDir, manifestDir, cells, v3)
+    IvfStoreV3(root, d0, dMid, base, incA, incB, compactDir, cells, v3, tier)
   }
 
   /** The v3 → v4 compaction commit over a built store — factored from
-    * [[compactStore]] so q346 can fire it BETWEEN serving micro-batches
+    * [[compactStore]] so q346/q353 can fire it BETWEEN serving micro-batches
     * (a live commit under a running reader loop).
     */
-  private[graft] def commitCompaction(s: SparkSession, st: IvfStoreV3,
-      valCols: Seq[String] = Seq("v")): IvfCompactStore = {
+  private[graft] def commitCompaction(s: SparkSession, st: IvfStoreV3): IvfCompactStore = {
     import st._
     // the compaction DECISION: ONE bounded metadata aggregate over the
     // three store components tagged base/increment (grouped on the
@@ -824,7 +833,7 @@ object Similarity {
     val cDirs =
       if (compacted.isEmpty) Map.empty[Long, String]
       else {
-        readStore(s, v3.filter(kv => compacted(kv._1)), valCols)
+        readStore(s, v3.filter(kv => compacted(kv._1)), tier.valCols)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("cell").parquet(compactDir)
         cellDirs(s, compactDir)
@@ -840,17 +849,27 @@ object Similarity {
     IvfCompactStore(root, d0, dMid, compactDir, v3, v4, compacted)
   }
 
-  private[graft] def compactStore(s: SparkSession, d: String,
+  private[graft] def compactStore(s: SparkSession, d: String, tier: ServeTier,
       privateBase: Boolean = false): IvfCompactStore =
-    commitCompaction(s, buildStoreV3(s, d, privateBase))
+    commitCompaction(s, buildStoreV3(s, d, tier, privateBase))
 
-  /** Resolve a manifest version to its per-cell live dirs — the read
-    * path every q343 probe takes (bounded collect: ≤ cells × 3 rows of
-    * (cell, path) metadata).
+  /** The probe set searched through one pinned manifest version of a
+    * built store, tagged by `phase` — the read path of q343/q345 and
+    * their code-store twins q350/q351.
     */
-  private[graft] def manifestAsOf(s: SparkSession, root: String,
-      v: Long): Map[Long, Seq[String]] =
-    graft.sources.StoreManifest.asOf(s, root, v)
+  private def servePinned(s: SparkSession, d: String, tier: ServeTier,
+      st: IvfCompactStore)(v: Long, phase: String): DataFrame =
+    tier.rank(s, d, tier.probes(s, d, st.d0),
+      readStore(s, graft.sources.StoreManifest.asOf(s, st.root, v), tier.valCols))
+      .withColumn("phase", lit(phase))
+
+  /** The q343/q350 body: build and compact a store, then serve the
+    * probe set through v3 and v4.
+    */
+  private def compactServe(s: SparkSession, d: String, tier: ServeTier): DataFrame = {
+    val serve = servePinned(s, d, tier, compactStore(s, d, tier)) _
+    serve(3L, "pre").unionByName(serve(4L, "post"))
+  }
 
   /** q343 — ANN INCREMENT COMPACTION (round-14 verdict task 2), the
     * lifecycle half q341's scaladoc deferred: increments accumulate
@@ -873,15 +892,7 @@ object Similarity {
     */
   val annIndexCompact = Q(
     "q343_ann_index_compact",
-    (s, d) => {
-      val st = compactStore(s, d)
-      val probes = ivfProbes(withCells(
-        vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = st.d0)))
-      def serve(v: Long, phase: String): DataFrame =
-        ivfRank(probes, readStore(s, manifestAsOf(s, st.root, v)))
-          .withColumn("phase", lit(phase))
-      serve(3L, "pre").unionByName(serve(4L, "post"))
-    },
+    (s, d) => compactServe(s, d, IvfTier),
     Some(s"""${ivfOracleCtes(IvfLloydSteps,
         "AND vec_id < (SELECT (max(vec_id) * 9) // 10 FROM embeddings)")},
             scored AS (
@@ -973,6 +984,22 @@ object Similarity {
     VacuumReport(dead, kept, (all.length - retained.length).toLong)
   }
 
+  /** The q345/q351 body: build a store that owns its base, compact it,
+    * serve v4 and materialize that result, vacuum at retention floor v4,
+    * and serve v4 again.
+    */
+  private def vacuumServe(s: SparkSession, d: String, tier: ServeTier): DataFrame = {
+    val st = compactStore(s, d, tier, privateBase = true)
+    val serve = servePinned(s, d, tier, st) _
+    val preDf = serve(4L, "pre")
+    val preRows = preDf.collect() // bounded: probes × top-5
+    val rep = vacuumStore(s, st.root, keepFrom = 4L)
+    require(rep.deleted.nonEmpty,
+      "vacuum retired nothing — fixture dead (no cell compacted?)")
+    s.createDataFrame(java.util.Arrays.asList(preRows: _*), preDf.schema)
+      .unionByName(serve(4L, "post"))
+  }
+
   /** q345 — ANN STORE VACUUM (round-15 verdict task 3), the lifecycle
     * stage q343's scaladoc deferred: after the v4 compaction commit,
     * the retired increments (and, on a store that owns its base, the
@@ -991,106 +1018,102 @@ object Similarity {
     */
   val annStoreVacuum = Q(
     "q345_ann_store_vacuum",
-    (s, d) => {
-      val st = compactStore(s, d, privateBase = true)
-      val probes = ivfProbes(withCells(
-        vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = st.d0)))
-      def serve(phase: String): DataFrame =
-        ivfRank(probes, readStore(s, manifestAsOf(s, st.root, 4L)))
-          .withColumn("phase", lit(phase))
-      val preDf = serve("pre")
-      val preRows = preDf.collect() // bounded: probes × top-5
-      val rep = vacuumStore(s, st.root, keepFrom = 4L)
-      require(rep.deleted.nonEmpty,
-        "vacuum retired nothing — fixture dead (no cell compacted?)")
-      s.createDataFrame(java.util.Arrays.asList(preRows: _*), preDf.schema)
-        .unionByName(serve("post"))
-    },
+    (s, d) => vacuumServe(s, d, IvfTier),
     annIndexCompact.oracle // same semantics: vacuum must change nothing a reader sees
   )
 
-  /** One serving step: a probe micro-batch against the stored inverted
-    * file (base + increment), with the store scan PRUNED to the batch's
-    * probed cells — the router step of an ANN serving tier. The probed
-    * cell set is a bounded collect (≤ batch probes × IvfNProbe values),
-    * and the `isInCollection` predicate on the partition column lands in
-    * the scan's PartitionFilters (`AnnServeSpec` plan-gates it), so each
-    * micro-batch reads `nprobe/k` of the index, never the whole store —
-    * at 100 TB the difference between a serving tier and a rescan.
+  /** The one ANN serving loop — q344 and q347 over a static store,
+    * q346/q353 across a live compaction commit, q348 across a live
+    * vacuum: per-trigger probing of a stored index, the shape of *Time
+    * Series Similarity Search for Streaming Data in Distributed Systems*
+    * (EDBT 2019).
+    *
+    * The probe set is staged as `nFiles` files repartitioned by
+    * `vec_id`: both of a probe's `IvfNProbe` cell rows must ride in the
+    * same micro-batch, or its per-batch top-5 would rank over half its
+    * candidates. The staged files' modification times are then set in
+    * part order, so every call drains the same batches in the same order
+    * (the file source orders by modification time, and parallel writers
+    * finish in any order); the stream reads one file per trigger
+    * (`maxFilesPerTrigger=1`) through `StreamFixture.drain(s)`.
+    *
+    * Each trigger runs ONE bounded `collect()` of its batch — at most
+    * probes × `IvfNProbe` rows — and derives from it emptiness (empty
+    * batches are skipped), the probed-cell set and a local probe
+    * relation (the probe side is broadcast anyway), so no further job
+    * re-reads the batch files. `step(session, probes, cells, batchId)`
+    * returns the served rows, appended to the sink, and a tag for the
+    * `(batchId, tag)` trail. `afterFirst` runs once, after the first
+    * served batch: q346/q353's compaction commit or q348's vacuum, so
+    * later batches open what it published. Returns the sink and the
+    * trail in batch order.
     */
-  private[graft] def serveBatch(s: SparkSession, probes: DataFrame,
-      base: String, inc: String): DataFrame = {
-    val cells = probes.select(col("cell")).distinct().collect().map(_.get(0))
-    serveBatchCells(s, probes, base, inc, cells)
+  private def serveLoop(s: SparkSession, d: String, name: String, nFiles: Int,
+      probes: DataFrame, afterFirst: SparkSession => Unit = _ => ())(
+      step: (SparkSession, DataFrame, Set[Long], Long) => (DataFrame, Long))
+      : (DataFrame, Seq[(Long, Long)]) = {
+    val runId = java.util.UUID.randomUUID().toString.take(8)
+    def leaf(kind: String) = graft.sources.Sources.scratchLeaf(d, s"${name}_${kind}_$runId")
+    val src = leaf("src"); val sink = leaf("out")
+    probes.repartition(nFiles, col("vec_id")).write.mode(SaveMode.Overwrite).parquet(src)
+    val fs = graft.sources.StoreManifest.hfs(s, src)
+    val t0 = System.currentTimeMillis()
+    fs.listStatus(new org.apache.hadoop.fs.Path(src)).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName).zipWithIndex
+      .foreach { case (p, i) => fs.setTimes(p, t0 + i, -1L) }
+    val schema = s.read.parquet(src).schema
+    val trail = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val serve: (Dataset[Row], Long) => Unit = (batch, batchId) => {
+      val rows = batch.collect()
+      if (rows.nonEmpty) {
+        val ss = batch.sparkSession
+        val local = ss.createDataFrame(java.util.Arrays.asList(rows: _*), batch.schema)
+        val cells = rows.map(_.getAs[Number]("cell").longValue).toSet
+        val (out, tag) = step(ss, local, cells, batchId)
+        out.write.mode(SaveMode.Append).parquet(sink)
+        trail.add((batchId, tag))
+        if (trail.size == 1) afterFirst(ss)
+      }
+    }
+    StreamFixture.drain(s)(
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream.foreachBatch(serve).option("checkpointLocation", leaf("chk")))
+    require(nFiles < 2 || trail.size >= 2,
+      s"expected multiple serving micro-batches, got ${trail.size}")
+    import scala.jdk.CollectionConverters._
+    (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1))
   }
 
-  /** serveBatch with the probed-cell set already in hand — the streaming
-    * loop (q344) collects each bounded probe micro-batch ONCE and derives
-    * the cells driver-side, instead of paying three separate jobs per
-    * trigger (isEmpty, distinct-cells collect, then the serve re-reading
-    * the batch's files a third time). See [[streamServe]].
+  /** One serving step against a static store: a probe micro-batch
+    * ranked by the tier over the union of the store `paths`, with the
+    * scan PRUNED to the batch's probed `cells` — the router step of an
+    * ANN serving tier. The `isInCollection` predicate on the partition
+    * column lands in the scan's PartitionFilters (`AnnServeSpec` and
+    * `AnnPqServeSpec` plan-gate it), so each micro-batch reads
+    * `nprobe/k` of the index, never the whole store — at 100 TB the
+    * difference between a serving tier and a rescan.
     */
-  private[graft] def serveBatchCells(s: SparkSession, probes: DataFrame,
-      base: String, inc: String, cells: Seq[Any]): DataFrame = {
-    val store = s.read.parquet(base).unionByName(s.read.parquet(inc))
-      .where(col("cell").isInCollection(cells))
-    ivfRank(probes, store)
-  }
+  private[graft] def serveBatch(s: SparkSession, d: String, tier: ServeTier,
+      probes: DataFrame, paths: Seq[String], cells: Iterable[Long]): DataFrame =
+    tier.rank(s, d, probes, paths.map(s.read.parquet(_)).reduce(_ unionByName _)
+      .where(col("cell").isInCollection(cells)))
 
-  /** q344's full serving loop, factored so `AnnServeSpec` can drive the
-    * batching layout: stage the probe set as `nFiles` files keyed by
-    * probe (repartition on vec_id — BOTH of a probe's IvfNProbe cell
-    * rows must ride in the same micro-batch, or its per-batch top-5
-    * would rank over half its candidates), then stream them through
-    * `foreachBatch` with one file per trigger, serving each micro-batch
-    * against the stored index. Returns the served result and the number
-    * of non-empty micro-batches.
+  /** q344's serving: the probe set against the stored float inverted
+    * file (base + increment, both per-corpus-snapshot artifacts).
+    * Returns the served rows and the number of served micro-batches.
     */
   private[graft] def streamServe(s: SparkSession, d: String,
       nFiles: Int): (DataFrame, Long) = {
     val d0 = deltaCut(s, d)
-    val base = ivfBaseStore(s, d, d0)
+    val base = baseStore(s, d, d0, IvfTier)
     val inc = graft.sources.Sources.artifactOnce(d, "ivf_inc_shared") { p =>
       deltaAssign(s, d, d0, delta = true)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(p)
+        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(p)
     }
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val src = graft.sources.Sources.scratchLeaf(d, s"ann_probe_src_$runId")
-    val sink = graft.sources.Sources.scratchLeaf(d, s"ann_serve_out_$runId")
-    val probes = ivfProbes(withCells(
-      vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = d0)))
-    probes.repartition(nFiles, col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(src)
-    val schema = s.read.parquet(src).schema
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    // One bounded collect per trigger (≤ probes × IvfNProbe rows — the
-    // serving contract), from which emptiness, the probed-cell set AND
-    // the local probe relation all derive: the previous shape paid
-    // three separate jobs per micro-batch (isEmpty, distinct-cells
-    // collect, serve re-scanning the batch files), optimization r17.
-    // The probe side was broadcast anyway, so a local relation changes
-    // nothing downstream.
-    val serve: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          batches.incrementAndGet()
-          val ss = batch.sparkSession
-          val local = ss.createDataFrame(
-            java.util.Arrays.asList(rows: _*), batch.schema)
-          val cells = rows.map(_.getAs[Any]("cell")).distinct.toSeq
-          serveBatchCells(ss, local, base, inc, cells)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
-        }
-      }
-    StreamFixture.drain(s)(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation",
-          graft.sources.Sources.scratchLeaf(d, s"ann_serve_chk_$runId")))
-    (s.read.parquet(sink), batches.get())
+    val (res, trail) = serveLoop(s, d, "ivf_serve", nFiles, IvfTier.probes(s, d, d0)) {
+      (ss, local, cells, _) => (serveBatch(ss, d, IvfTier, local, Seq(base, inc), cells), 0L)
+    }
+    (res, trail.size.toLong)
   }
 
   /** q344 — STREAMING ANN SERVING (round-14 verdict task 3), the
@@ -1111,84 +1134,51 @@ object Similarity {
     */
   val annStreamServe = Q(
     "q344_ann_stream_serve",
-    (s, d) => {
-      val (res, n) = streamServe(s, d, nFiles = 4)
-      require(n >= 2, s"expected multiple serving micro-batches, got $n")
-      res
-    },
+    (s, d) => streamServe(s, d, nFiles = 4)._1,
     Some(ivfOracle(IvfLloydSteps,
       "AND vec_id < (SELECT (max(vec_id) * 9) // 10 FROM embeddings)"))
   )
 
-  /** q346's serving loop ACROSS a live compaction commit (round-15
-    * verdict task 4): q344's micro-batch serving driven over a q343
-    * store while the v3 → v4 commit fires MID-STREAM — after the first
-    * non-empty batch completes, the compaction commits inside the same
-    * driver loop, so later batches open a different manifest version
-    * than earlier ones. Every batch resolves the LATEST manifest
-    * version at its start (one bounded metadata read), mounts ONLY its
-    * probed cells' live dirs from that version (the manifest IS the
-    * partition-level prune — unprobed cells contribute no scan at all),
-    * and records which version it served. Returns the served rows
-    * (tagged per batch with batch id and resolved version, for the
-    * spec's per-version replay) plus the (batchId, version) trail.
+  /** A batch's probes ranked against the probed cells' live dirs of
+    * one resolved manifest view — the manifest IS the partition-level
+    * prune, so unprobed cells contribute no scan at all. Empty-filter
+    * guard (ADVICE r16): a batch whose probed cells are all absent from
+    * the manifest (a centroid cell with zero assigned vectors) must not
+    * reduce over an empty scan list, so it falls back to the full map
+    * (the join still scores only the probed cells).
     */
-  private[graft] def streamServeLive(s: SparkSession, d: String,
+  private def serveView(s: SparkSession, d: String, tier: ServeTier, probes: DataFrame,
+      cells: Set[Long], m: Map[Long, Seq[String]]): DataFrame = {
+    val probed = m.filter(kv => cells(kv._1))
+    tier.rank(s, d, probes, readStore(s, if (probed.isEmpty) m else probed, tier.valCols))
+  }
+
+  /** q346/q353's serving loop ACROSS a live compaction commit (round-15
+    * verdict task 4): micro-batch serving over a v3 store of the tier
+    * while the v3 → v4 commit fires MID-STREAM, after the first served
+    * batch, inside the same driver loop — so later batches open a
+    * different manifest version than earlier ones. Every batch resolves
+    * the LIVE manifest head at its start (one snapshot read resolves
+    * version + cell map together; a version pinned at stream start would
+    * never see the commit), mounts ONLY its probed cells' live dirs from
+    * that version, and records the version it served. Returns the served
+    * rows (tagged per batch with batch id, resolved version and store
+    * root, for the specs' per-version replay) plus the (batchId,
+    * version) trail.
+    */
+  private[graft] def streamServeLive(s: SparkSession, d: String, tier: ServeTier,
       nFiles: Int): (DataFrame, Seq[(Long, Long)]) = {
-    val st3 = buildStoreV3(s, d)
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val src = graft.sources.Sources.scratchLeaf(d, s"ann_live_src_$runId")
-    val sink = graft.sources.Sources.scratchLeaf(d, s"ann_live_out_$runId")
-    val probes = ivfProbes(withCells(
-      vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = st3.d0)))
-    probes.repartition(nFiles, col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(src)
-    val schema = s.read.parquet(src).schema
-    val trail = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
-    val committed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val serve: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        // one bounded collect per trigger derives emptiness, the probed
-        // cells and the local probe relation (see streamServe) — the
-        // probe side was broadcast anyway
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          val ss = batch.sparkSession
-          val local = ss.createDataFrame(
-            java.util.Arrays.asList(rows: _*), batch.schema)
-          // resolve the LIVE manifest head — not a version pinned at
-          // stream start: this is what makes the commit visible to the
-          // loop, and what the commit protocol must keep consistent
-          // (one snapshot read resolves version + cell map together)
-          val (v, m) = graft.sources.StoreManifest.headVersion(ss, st3.root)
-          val cells = rows.map(_.getAs[Number]("cell").longValue).toSet
-          // empty-filter guard (ADVICE r16): a batch whose probed cells
-          // are all absent from the manifest (a centroid cell with zero
-          // assigned vectors) must not reduce over an empty scan list —
-          // fall back to the full manifest map (the join still scores
-          // only the probed cells)
-          val probed = m.filter(kv => cells(kv._1))
-          ivfRank(local, readStore(ss, if (probed.isEmpty) m else probed))
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("version", lit(v))
-            .withColumn("store_root", lit(st3.root))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
-          trail.add((batchId, v))
-          // the live commit: fire the compaction AFTER the first served
-          // batch, inside the serving loop — every later batch opens v4
-          if (committed.compareAndSet(false, true)) {
-            commitCompaction(ss, st3); ()
-          }
-        }
-      }
-    StreamFixture.drain(s)(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation",
-          graft.sources.Sources.scratchLeaf(d, s"ann_live_chk_$runId")))
-    import scala.jdk.CollectionConverters._
-    (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1))
+    val st3 = buildStoreV3(s, d, tier)
+    val (res, trail) = serveLoop(s, d, s"${tier.tag}_live", nFiles,
+        tier.probes(s, d, st3.d0), ss => { commitCompaction(ss, st3); () }) {
+      (ss, local, cells, batchId) =>
+        val (v, m) = graft.sources.StoreManifest.headVersion(ss, st3.root)
+        (serveView(ss, d, tier, local, cells, m).withColumn("batch_id", lit(batchId))
+          .withColumn("version", lit(v)).withColumn("store_root", lit(st3.root)), v)
+    }
+    val vs = trail.map(_._2).toSet
+    require(vs == Set(3L, 4L), s"serving loop did not span the live commit: saw versions $vs")
+    (res, trail)
   }
 
   /** q346 — SERVING ACROSS A LIVE COMPACTION COMMIT (round-15 verdict
@@ -1208,15 +1198,8 @@ object Similarity {
     */
   val annServeLiveCommit = Q(
     "q346_ann_serve_live_commit",
-    (s, d) => {
-      val (res, trail) = streamServeLive(s, d, nFiles = 4)
-      require(trail.size >= 2,
-        s"expected multiple serving micro-batches, got ${trail.size}")
-      val vs = trail.map(_._2).toSet
-      require(vs == Set(3L, 4L),
-        s"serving loop did not span the live commit: saw versions $vs")
-      res.drop("batch_id", "version", "store_root")
-    },
+    (s, d) => streamServeLive(s, d, IvfTier, nFiles = 4)._1
+      .drop("batch_id", "version", "store_root"),
     annStreamServe.oracle // same store content on both sides of the commit
   )
 
@@ -1224,67 +1207,34 @@ object Similarity {
     * the q346 discipline applied to q345): the store is built with a
     * private base, the v3 → v4 compaction commits BEFORE the stream (so
     * retired dirs sit on disk as real garbage), and the vacuum at
-    * retention floor v4 fires BETWEEN serving micro-batches — after the
-    * first non-empty batch completes, inside the same driver loop.
-    * Every batch resolves the live manifest head (version + cell map in
-    * one snapshot read) and records the manifest GENERATION it resolved:
-    * pre-vacuum batches read the compaction's snapshot, post-vacuum
-    * batches read the pruned snapshot the vacuum published atomically.
-    * Returns the served rows, the (batchId, generation) trail, and the
-    * vacuum's report.
+    * retention floor v4 fires after the first served batch, inside the
+    * same driver loop. Every batch resolves the live manifest head
+    * (version + cell map in one snapshot read) and records the manifest
+    * GENERATION it resolved: pre-vacuum batches read the compaction's
+    * snapshot, post-vacuum batches read the pruned snapshot the vacuum
+    * published atomically. Returns the served rows, the (batchId,
+    * generation) trail, and the vacuum's report.
     */
   private[graft] def streamServeLiveVacuum(s: SparkSession, d: String,
       nFiles: Int): (DataFrame, Seq[(Long, Long)], VacuumReport) = {
     val SM = graft.sources.StoreManifest
-    val st3 = buildStoreV3(s, d, privateBase = true)
-    commitCompaction(s, st3) // v4 live; the retired v3-only dirs are garbage
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val src = graft.sources.Sources.scratchLeaf(d, s"ann_vac_src_$runId")
-    val sink = graft.sources.Sources.scratchLeaf(d, s"ann_vac_out_$runId")
-    val probes = ivfProbes(withCells(
-      vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = st3.d0)))
-    probes.repartition(nFiles, col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(src)
-    val schema = s.read.parquet(src).schema
-    val trail = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val repRef = new java.util.concurrent.atomic.AtomicReference[VacuumReport]
-    val serve: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        // one bounded collect per trigger (see streamServe)
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          val ss = batch.sparkSession
-          val local = ss.createDataFrame(
-            java.util.Arrays.asList(rows: _*), batch.schema)
-          val gen = SM.gens(ss, st3.root).last._1
-          val (v, m) = SM.headVersion(ss, st3.root)
-          // the vacuum must be invisible: the head VERSION never moves
-          require(v == 4L, s"live vacuum moved the head version to $v")
-          val cells = rows.map(_.getAs[Number]("cell").longValue).toSet
-          val probed = m.filter(kv => cells(kv._1))
-          ivfRank(local, readStore(ss, if (probed.isEmpty) m else probed))
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("gen", lit(gen))
-            .withColumn("store_root", lit(st3.root))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
-          trail.add((batchId, gen))
-          // the live pass: vacuum AFTER the first served batch, inside
-          // the serving loop — every later batch resolves the pruned
-          // manifest generation
-          if (fired.compareAndSet(false, true)) {
-            repRef.set(vacuumStore(ss, st3.root, keepFrom = 4L)); ()
-          }
-        }
-      }
-    StreamFixture.drain(s)(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation",
-          graft.sources.Sources.scratchLeaf(d, s"ann_vac_chk_$runId")))
-    import scala.jdk.CollectionConverters._
-    (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1), repRef.get())
+    val st = compactStore(s, d, IvfTier, privateBase = true) // retired v3-only dirs are garbage
+    val rep = new java.util.concurrent.atomic.AtomicReference[VacuumReport]
+    val (res, trail) = serveLoop(s, d, "ivf_vac", nFiles, IvfTier.probes(s, d, st.d0),
+        ss => rep.set(vacuumStore(ss, st.root, keepFrom = 4L))) {
+      (ss, local, cells, batchId) =>
+        val gen = SM.gens(ss, st.root).last._1
+        val (v, m) = SM.headVersion(ss, st.root)
+        // the vacuum must be invisible: the head VERSION never moves
+        require(v == 4L, s"live vacuum moved the head version to $v")
+        (serveView(ss, d, IvfTier, local, cells, m).withColumn("batch_id", lit(batchId))
+          .withColumn("gen", lit(gen)).withColumn("store_root", lit(st.root)), gen)
+    }
+    val gs = trail.map(_._2).toSet
+    require(gs.size == 2, s"serving loop did not span the live vacuum: saw generations $gs")
+    require(rep.get != null && rep.get.deleted.nonEmpty,
+      "vacuum retired nothing — fixture dead (no cell compacted?)")
+    (res, trail, rep.get)
   }
 
   /** q348 — SERVING ACROSS A LIVE VACUUM (round-16 verdict task 1), the
@@ -1307,17 +1257,7 @@ object Similarity {
     */
   val annServeLiveVacuum = Q(
     "q348_ann_serve_live_vacuum",
-    (s, d) => {
-      val (res, trail, rep) = streamServeLiveVacuum(s, d, nFiles = 4)
-      require(trail.size >= 2,
-        s"expected multiple serving micro-batches, got ${trail.size}")
-      val gs = trail.map(_._2).toSet
-      require(gs.size == 2,
-        s"serving loop did not span the live vacuum: saw generations $gs")
-      require(rep != null && rep.deleted.nonEmpty,
-        "vacuum retired nothing — fixture dead (no cell compacted?)")
-      res.drop("batch_id", "gen", "store_root")
-    },
+    (s, d) => streamServeLiveVacuum(s, d, nFiles = 4)._1.drop("batch_id", "gen", "store_root"),
     annStreamServe.oracle // the vacuum must change nothing a reader sees
   )
 
@@ -1907,16 +1847,6 @@ object Similarity {
   private val PqK = 8 // codes per subspace
   private[graft] val PqLloydSteps = 2
 
-  /** Hash-derived PQ seed component (prefix 'q' keeps the family
-    * disjoint from the LSH planes 'p'-free scheme and the IVF 'c').
-    */
-  private def pqSeedComponent(m: Int, k: Int, i: Int): Double = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"q$m,$k,$i".getBytes("UTF-8"))
-    val u = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) | ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
-    u.toDouble / (1L << 32).toDouble - 0.5
-  }
-
   /** The PQ training sample: each finite sample vector exploded into
     * its `PqM` subvectors — (m, vec_id, sv). `maxId` freezes training
     * on a base snapshot (the q341/ivfCents discipline) for the PQ
@@ -1984,7 +1914,7 @@ object Similarity {
       val seedRow = (for {
         m <- 0 until PqM
         k <- 0 until PqK
-      } yield (m, k, (0 until PqSubDim).map(i => pqSeedComponent(m, k, i))))
+      } yield (m, k, (0 until PqSubDim).map(i => hashUnit(s"q$m,$k,$i"))))
         .toDF("m", "cell", "c")
         .groupBy("m")
         .agg(array_sort(collect_list(struct(col("cell"), col("c")))).as("cs"))
@@ -2130,81 +2060,24 @@ object Similarity {
     annIvfPq.oracle // identical semantics: the code file is q111, materialized
   )
 
-  /** One PQ serving step (q347): a probe micro-batch — each probe row
-    * carrying its precomputed 8×8 ADC lookup table — scored against the
-    * materialized PQ code file with the scan pruned to the batch's
-    * probed cells, then exact-reranked candidate-sized against the base
-    * vector table. Factored so `AnnPqServeSpec` can plan-gate the
-    * partition prune on a static batch.
-    */
-  private[graft] def servePqBatch(s: SparkSession, batch: DataFrame,
-      encPath: String, d: String): DataFrame = {
-    val cells = batch.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    servePqBatchCells(s, batch, encPath, d, cells)
-  }
-
-  /** servePqBatch with the probed-cell set already in hand — the
-    * streaming loop collects each bounded probe micro-batch once and
-    * derives the cells driver-side (see [[serveBatchCells]]).
-    */
-  private[graft] def servePqBatchCells(s: SparkSession, batch: DataFrame,
-      encPath: String, d: String, cells: Seq[Long]): DataFrame = {
-    val enc = s.read.parquet(encPath)
-      .where(col("cell").isInCollection(cells))
-    pqAdcRank(batch, enc, vectors(s, d))
-  }
-
-  /** q347's serving loop: q344's streaming shape with q114's
-    * compressed store as the serving tier. The PQ code file and the
-    * probe LUTs are built ONCE before the stream (train-once — the
-    * loop measures serving); probes stage as `nFiles` files keyed by
-    * vec_id (a probe's IvfNProbe cell rows must share a micro-batch or
-    * its candidate cut would rank over half its candidates) and stream
-    * through `foreachBatch`, each batch ADC-scanning only its probed
-    * cells' CODES and fetching full vectors only for the candidate-
-    * sized rerank join.
+  /** q347's serving: q344's loop over q114's compressed store, the
+    * full-corpus PQ code file built once per corpus snapshot
+    * (train-once — the loop measures serving). Each batch ADC-scans only
+    * its probed cells' CODES and fetches full vectors only for the
+    * candidate-sized rerank join. Returns the served rows and the
+    * number of served micro-batches.
     */
   private[graft] def streamServePq(s: SparkSession, d: String,
       nFiles: Int): (DataFrame, Long) = {
-    val ev = ivfWithCells(s, d, ivfCents(s, d))
-    val booksRow = pqBooksRow(pqBooks(s, d))
     val enc = graft.sources.Sources.artifactOnce(d, "ivf_pq_file_serve") { p =>
-      val corpus = ev.select(col("vec_id"), col("v"),
-        element_at(col("cells"), 1)("j").as("cell"))
-      pqEncode(corpus, booksRow)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(p)
+      PqTier.encode(s, d, Long.MaxValue, ivfWithCells(s, d, ivfCents(s, d))
+        .select(col("vec_id"), col("v"), element_at(col("cells"), 1)("j").as("cell")))
+        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(p)
     }
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val src = graft.sources.Sources.scratchLeaf(d, s"pq_probe_src_$runId")
-    val sink = graft.sources.Sources.scratchLeaf(d, s"pq_serve_out_$runId")
-    pqProbesLut(ivfProbes(ev), booksRow)
-      .repartition(nFiles, col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(src)
-    val schema = s.read.parquet(src).schema
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val serve: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        // one bounded collect per trigger (see streamServe)
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          batches.incrementAndGet()
-          val ss = batch.sparkSession
-          val local = ss.createDataFrame(
-            java.util.Arrays.asList(rows: _*), batch.schema)
-          val cells = rows.map(_.getAs[Number]("cell").longValue).distinct.toSeq
-          servePqBatchCells(ss, local, enc, d, cells)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
-        }
-      }
-    StreamFixture.drain(s)(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation",
-          graft.sources.Sources.scratchLeaf(d, s"pq_serve_chk_$runId")))
-    (s.read.parquet(sink), batches.get())
+    val (res, trail) = serveLoop(s, d, "pq_serve", nFiles, PqTier.probes(s, d, Long.MaxValue)) {
+      (ss, local, cells, _) => (serveBatch(ss, d, PqTier, local, Seq(enc), cells), 0L)
+    }
+    (res, trail.size.toLong)
   }
 
   /** q347 — PQ-COMPRESSED STREAMING SERVING (round-15 verdict task 6):
@@ -2226,11 +2099,7 @@ object Similarity {
     */
   val annPqStreamServe = Q(
     "q347_ann_pq_stream_serve",
-    (s, d) => {
-      val (res, n) = streamServePq(s, d, nFiles = 4)
-      require(n >= 2, s"expected multiple serving micro-batches, got $n")
-      res
-    },
+    (s, d) => streamServePq(s, d, nFiles = 4)._1,
     annIvfPq.oracle // the compressed serving path must equal the one-shot ADC search
   )
 
@@ -2259,20 +2128,7 @@ object Similarity {
     */
   val annPqIndexDelta = Q(
     "q349_ann_pq_index_delta",
-    (s, d) => {
-      val d0 = deltaCut(s, d)
-      val booksRow = pqBooksRow(pqBooks(s, d, maxId = d0))
-      val base = baseStore(s, d, d0, "pq", (_, df) => pqEncode(df, booksRow))
-      val inc = graft.sources.Sources.scratchLeaf(d,
-        s"pq_delta_inc_${java.util.UUID.randomUUID().toString.take(8)}")
-      pqEncode(deltaAssign(s, d, d0, delta = true), booksRow)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(inc)
-      val codes = s.read.parquet(base).unionByName(s.read.parquet(inc))
-      val ev = withCells(vectors(s, d).where(col("vec_id") < 8),
-        ivfCents(s, d, maxId = d0))
-      pqAdcRank(pqProbesLut(ivfProbes(ev), booksRow), codes, vectors(s, d))
-    },
+    (s, d) => deltaAppend(s, d, PqTier),
     Some(pqOracle(IvfLloydSteps, PqLloydSteps, BaseTrainFilter))
   )
 
@@ -2293,18 +2149,7 @@ object Similarity {
     */
   val annPqIndexCompact = Q(
     "q350_ann_pq_index_compact",
-    (s, d) => {
-      val st = commitCompaction(s, buildPqStoreV3(s, d), valCols = Seq("codes"))
-      val booksRow = pqBooksRow(pqBooks(s, d, maxId = st.d0))
-      val ev = withCells(vectors(s, d).where(col("vec_id") < 8),
-        ivfCents(s, d, maxId = st.d0))
-      val probes = pqProbesLut(ivfProbes(ev), booksRow)
-      def serve(v: Long, phase: String): DataFrame =
-        pqAdcRank(probes,
-          readStore(s, manifestAsOf(s, st.root, v), Seq("codes")), vectors(s, d))
-          .withColumn("phase", lit(phase))
-      serve(3L, "pre").unionByName(serve(4L, "post"))
-    },
+    (s, d) => compactServe(s, d, PqTier),
     Some(pqOraclePhased(IvfLloydSteps, PqLloydSteps, BaseTrainFilter))
   )
 
@@ -2320,85 +2165,9 @@ object Similarity {
     */
   val annPqStoreVacuum = Q(
     "q351_ann_pq_store_vacuum",
-    (s, d) => {
-      val st = commitCompaction(s, buildPqStoreV3(s, d, privateBase = true),
-        valCols = Seq("codes"))
-      val booksRow = pqBooksRow(pqBooks(s, d, maxId = st.d0))
-      val ev = withCells(vectors(s, d).where(col("vec_id") < 8),
-        ivfCents(s, d, maxId = st.d0))
-      val probes = pqProbesLut(ivfProbes(ev), booksRow)
-      def serve(phase: String): DataFrame =
-        pqAdcRank(probes,
-          readStore(s, manifestAsOf(s, st.root, 4L), Seq("codes")), vectors(s, d))
-          .withColumn("phase", lit(phase))
-      val preDf = serve("pre")
-      val preRows = preDf.collect() // bounded: probes × top-5
-      val rep = vacuumStore(s, st.root, keepFrom = 4L)
-      require(rep.deleted.nonEmpty,
-        "vacuum retired nothing — fixture dead (no cell compacted?)")
-      s.createDataFrame(java.util.Arrays.asList(preRows: _*), preDf.schema)
-        .unionByName(serve("post"))
-    },
+    (s, d) => vacuumServe(s, d, PqTier),
     annPqIndexCompact.oracle // the vacuum must change nothing a reader sees
   )
-
-  /** q353's serving loop ACROSS a live code-store compaction — q346's
-    * shape with q350's compressed store as the serving tier: probe
-    * micro-batches (each carrying its 8×8 ADC lookup table) resolve the
-    * LIVE manifest head at their start, ADC-scan only their probed
-    * cells' code dirs from that snapshot, and the v3 → v4 compaction
-    * commits inside the loop after the first served batch. Returns the
-    * served rows (tagged with batch id + resolved version) and the
-    * (batchId, version) trail.
-    */
-  private[graft] def streamServeLivePq(s: SparkSession, d: String,
-      nFiles: Int): (DataFrame, Seq[(Long, Long)]) = {
-    val st3 = buildPqStoreV3(s, d)
-    val booksRow = pqBooksRow(pqBooks(s, d, maxId = st3.d0))
-    val ev = withCells(vectors(s, d).where(col("vec_id") < 8),
-      ivfCents(s, d, maxId = st3.d0))
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val src = graft.sources.Sources.scratchLeaf(d, s"pq_live_src_$runId")
-    val sink = graft.sources.Sources.scratchLeaf(d, s"pq_live_out_$runId")
-    pqProbesLut(ivfProbes(ev), booksRow)
-      .repartition(nFiles, col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(src)
-    val schema = s.read.parquet(src).schema
-    val trail = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
-    val committed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val serve: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, batchId) => {
-        // one bounded collect per trigger (see streamServe)
-        val rows = batch.collect()
-        if (rows.nonEmpty) {
-          val ss = batch.sparkSession
-          val local = ss.createDataFrame(
-            java.util.Arrays.asList(rows: _*), batch.schema)
-          val (v, m) = graft.sources.StoreManifest.headVersion(ss, st3.root)
-          val cells = rows.map(_.getAs[Number]("cell").longValue).toSet
-          val probed = m.filter(kv => cells(kv._1))
-          pqAdcRank(local,
-            readStore(ss, if (probed.isEmpty) m else probed, Seq("codes")),
-            vectors(ss, d))
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("version", lit(v))
-            .withColumn("store_root", lit(st3.root))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sink)
-          trail.add((batchId, v))
-          if (committed.compareAndSet(false, true)) {
-            commitCompaction(ss, st3, valCols = Seq("codes")); ()
-          }
-        }
-      }
-    StreamFixture.drain(s)(
-      s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation",
-          graft.sources.Sources.scratchLeaf(d, s"pq_live_chk_$runId")))
-    import scala.jdk.CollectionConverters._
-    (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1))
-  }
 
   /** q353 — PQ SERVING ACROSS A LIVE COMPACTION COMMIT, completing the
     * dynamic-reader symmetry between the tiers: the float store has
@@ -2416,15 +2185,8 @@ object Similarity {
     */
   val annPqServeLiveCommit = Q(
     "q353_ann_pq_serve_live_commit",
-    (s, d) => {
-      val (res, trail) = streamServeLivePq(s, d, nFiles = 4)
-      require(trail.size >= 2,
-        s"expected multiple serving micro-batches, got ${trail.size}")
-      val vs = trail.map(_._2).toSet
-      require(vs == Set(3L, 4L),
-        s"serving loop did not span the live commit: saw versions $vs")
-      res.drop("batch_id", "version", "store_root")
-    },
+    (s, d) => streamServeLive(s, d, PqTier, nFiles = 4)._1
+      .drop("batch_id", "version", "store_root"),
     Some(pqOracle(IvfLloydSteps, PqLloydSteps, BaseTrainFilter))
   )
 

@@ -49,7 +49,8 @@ class AnnPqServeSpec extends AnyFunSuite {
     }
     val probe = S.pqProbesLut(
       S.ivfProbes(ev).where(col("vec_id") === 0), booksRow)
-    val served = S.servePqBatch(spark, probe, enc, d)
+    val cells = probe.select(col("cell").cast("long")).distinct().collect().map(_.getLong(0))
+    val served = S.serveBatch(spark, d, S.PqTier, probe, Seq(enc), cells)
     served.collect() // force execution so the plan is final
     val plan = served.queryExecution.executedPlan.toString
     val pruned = "PartitionFilters: \\[[^\\]]*cell[^\\]]* IN ".r

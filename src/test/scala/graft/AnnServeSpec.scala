@@ -33,7 +33,7 @@ class AnnServeSpec extends AnyFunSuite {
 
   test("q344: a serving batch's store scan is partition-pruned to the probed cells") {
     val d0 = S.deltaCut(spark, d)
-    val base = S.ivfBaseStore(spark, d, d0)
+    val base = S.baseStore(spark, d, d0, S.IvfTier)
     val inc = graft.sources.Sources.artifactOnce(d, "ivf_inc_shared") { p =>
       S.deltaAssign(spark, d, d0, delta = true)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -43,7 +43,8 @@ class AnnServeSpec extends AnyFunSuite {
     // partition filter, not scan the store and filter rows after
     val probe = S.ivfProbes(S.withCells(
       S.vectors(spark, d).where(col("vec_id") === 0), S.ivfCents(spark, d, maxId = d0)))
-    val served = S.serveBatch(spark, probe, base, inc)
+    val cells = probe.select(col("cell").cast("long")).distinct().collect().map(_.getLong(0))
+    val served = S.serveBatch(spark, d, S.IvfTier, probe, Seq(base, inc), cells)
     served.collect() // force execution so the plan is final
     val plan = served.queryExecution.executedPlan.toString
     val pruned = "PartitionFilters: \\[[^\\]]*cell[^\\]]* IN ".r

@@ -42,7 +42,7 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
       S.vectors(spark, d).where(col("vec_id") < 8),
       S.ivfCents(spark, d, maxId = d0)))
     val oneShot = S.ivfRank(probes,
-      S.readStore(spark, S.manifestAsOf(spark, root, 4L)))
+      S.readStore(spark, graft.sources.StoreManifest.asOf(spark, root, 4L)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .sortBy(key)
     val streamed = rows.map(r =>
@@ -53,8 +53,8 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
   }
 
   test("q348: manifest resolution is never torn while a vacuum pass runs (hammer)") {
-    val st = S.compactStore(spark, d, privateBase = true)
-    val expected = S.manifestAsOf(spark, st.root, 4L)
+    val st = S.compactStore(spark, d, S.IvfTier, privateBase = true)
+    val expected = graft.sources.StoreManifest.asOf(spark, st.root, 4L)
     assert(expected.nonEmpty)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
@@ -65,7 +65,7 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
           // the v4 view must be COMPLETE and IDENTICAL on every resolve,
           // before, during, and after the prune — the vacuum never
           // changes what a floor-or-above reader sees
-          val m = S.manifestAsOf(spark, st.root, 4L)
+          val m = graft.sources.StoreManifest.asOf(spark, st.root, 4L)
           assert(m == expected, s"v4 view changed mid-vacuum: $m")
           reads.incrementAndGet(); ()
         } catch { case t: Throwable => errs.add(t); () }
@@ -79,6 +79,6 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
     assert(reads.get() > 0, "hammer never completed a read")
     assert(rep2.deleted.nonEmpty && rep2.prunedManifestRows > 0)
     // and the post-vacuum view still matches
-    assert(S.manifestAsOf(spark, st.root, 4L) == expected)
+    assert(graft.sources.StoreManifest.asOf(spark, st.root, 4L) == expected)
   }
 }

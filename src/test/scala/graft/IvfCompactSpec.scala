@@ -21,7 +21,7 @@ class IvfCompactSpec extends AnyFunSuite {
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
 
-  private lazy val st = S.compactStore(spark, d)
+  private lazy val st = S.compactStore(spark, d, S.IvfTier)
 
   test("q343: both compaction regimes are non-empty and the decision matches recounted fractions") {
     val untouched = st.v3.keySet -- st.compacted
@@ -66,10 +66,10 @@ class IvfCompactSpec extends AnyFunSuite {
   }
 
   test("q343: manifest versions resolve and the persisted v3/v4 match the handle") {
-    assert(S.manifestAsOf(spark, st.root, 3L) == st.v3)
-    assert(S.manifestAsOf(spark, st.root, 4L) == st.v4)
+    assert(graft.sources.StoreManifest.asOf(spark, st.root, 3L) == st.v3)
+    assert(graft.sources.StoreManifest.asOf(spark, st.root, 4L) == st.v4)
     // v1 is the base alone: one dir per base cell, none under the run root
-    val v1 = S.manifestAsOf(spark, st.root, 1L)
+    val v1 = graft.sources.StoreManifest.asOf(spark, st.root, 1L)
     assert(v1.values.forall(ps => ps.size == 1 && !ps.head.startsWith(st.root + "/")))
   }
 

@@ -48,7 +48,7 @@ class IvfDeltaSpec extends AnyFunSuite {
 
   test("q341: increment write order does not change probe results (r14 verdict task 5)") {
     val d0 = S.deltaCut(spark, d)
-    val base = S.ivfBaseStore(spark, d, d0)
+    val base = S.baseStore(spark, d, d0, S.IvfTier)
     val delta = S.deltaAssign(spark, d, d0, delta = true)
     def probeWith(inc: org.apache.spark.sql.DataFrame, leafName: String) = {
       val p = graft.sources.Sources.scratchLeaf(d, leafName)

@@ -21,7 +21,7 @@ class IvfVacuumSpec extends AnyFunSuite {
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
 
-  private lazy val st = S.compactStore(spark, d, privateBase = true)
+  private lazy val st = S.compactStore(spark, d, S.IvfTier, privateBase = true)
 
   private def v4Rows(m: Map[Long, Seq[String]]): Seq[(Long, Long)] =
     S.readStore(spark, m).select("cell", "vec_id").collect()
@@ -39,8 +39,8 @@ class IvfVacuumSpec extends AnyFunSuite {
     v4Live.foreach(p => assert(new java.io.File(p).exists(), s"live dir $p deleted"))
     // the pruned manifest still resolves v4 to the same dirs, and reads
     // through it are row-identical to the pre-vacuum store
-    assert(S.manifestAsOf(spark, st.root, 4L) == st.v4)
-    assert(v4Rows(S.manifestAsOf(spark, st.root, 4L)) == before,
+    assert(graft.sources.StoreManifest.asOf(spark, st.root, 4L) == st.v4)
+    assert(v4Rows(graft.sources.StoreManifest.asOf(spark, st.root, 4L)) == before,
       "vacuum changed what a v4 reader sees")
     // below-floor rows are gone from the published head snapshot
     val vers = graft.sources.StoreManifest.readRows(spark, st.root)
@@ -52,7 +52,7 @@ class IvfVacuumSpec extends AnyFunSuite {
   test("q345: compacted cells retire base+increments; untouched cells retire nothing") {
     // build a fresh private store so this test is independent of the
     // vacuum the shared handle's test already ran
-    val st2 = S.compactStore(spark, d, privateBase = true)
+    val st2 = S.compactStore(spark, d, S.IvfTier, privateBase = true)
     val rep = S.vacuumStore(spark, st2.root, keepFrom = 4L)
     st2.v3.keys.foreach { j =>
       val retired = st2.v3(j).filterNot(st2.v4(j).contains)
@@ -66,7 +66,7 @@ class IvfVacuumSpec extends AnyFunSuite {
   }
 
   test("q345: a shared-base store never loses the shared artifact to a vacuum") {
-    val shared = S.compactStore(spark, d) // base = the per-corpus artifact
+    val shared = S.compactStore(spark, d, S.IvfTier) // base = the per-corpus artifact
     val baseDirs = shared.v3.values.flatten.filterNot(_.startsWith(shared.root + "/")).toSeq
     assert(baseDirs.nonEmpty, "shared store has no out-of-root base dirs?")
     val rep = S.vacuumStore(spark, shared.root, keepFrom = 4L)
@@ -77,7 +77,7 @@ class IvfVacuumSpec extends AnyFunSuite {
   }
 
   test("q345: full retention deletes nothing; a floor above the newest version refuses") {
-    val st2 = S.compactStore(spark, d, privateBase = true)
+    val st2 = S.compactStore(spark, d, S.IvfTier, privateBase = true)
     val rep = S.vacuumStore(spark, st2.root, keepFrom = 1L)
     assert(rep.deleted.isEmpty && rep.prunedManifestRows == 0L)
     intercept[IllegalArgumentException] {

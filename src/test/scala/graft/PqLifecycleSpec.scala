@@ -47,8 +47,7 @@ class PqLifecycleSpec extends AnyFunSuite {
   }
 
   test("q350: code-store file economics across the compaction commit") {
-    val st = S.commitCompaction(spark, S.buildPqStoreV3(spark, d),
-      valCols = Seq("codes"))
+    val st = S.compactStore(spark, d, S.PqTier)
     assert(st.compacted.nonEmpty && st.compacted != st.v3.keySet,
       "fixture dead: need both compacted and carried cells")
     st.v3.keys.foreach { j =>
@@ -63,8 +62,8 @@ class PqLifecycleSpec extends AnyFunSuite {
           s"untouched cell $j not carried by reference")
     }
     // the manifest resolves both versions to the handle's maps
-    assert(S.manifestAsOf(spark, st.root, 3L) == st.v3)
-    assert(S.manifestAsOf(spark, st.root, 4L) == st.v4)
+    assert(graft.sources.StoreManifest.asOf(spark, st.root, 3L) == st.v3)
+    assert(graft.sources.StoreManifest.asOf(spark, st.root, 4L) == st.v4)
     // compression thesis: NO lifecycle stage's files carry a vector
     (st.v3.values.flatten ++ st.v4.values.flatten).toSeq.distinct.foreach { dir =>
       val fields = spark.read.parquet(dir).schema.fieldNames.toSet
@@ -74,11 +73,10 @@ class PqLifecycleSpec extends AnyFunSuite {
   }
 
   test("q351: vacuum retires exactly the below-floor-only dirs; the v4 search is unchanged") {
-    val st = S.commitCompaction(spark, S.buildPqStoreV3(spark, d, privateBase = true),
-      valCols = Seq("codes"))
+    val st = S.compactStore(spark, d, S.PqTier, privateBase = true)
     val (_, probes) = frozenParts(st.d0)
     def serve() = rows(S.pqAdcRank(probes,
-      S.readStore(spark, S.manifestAsOf(spark, st.root, 4L), Seq("codes")),
+      S.readStore(spark, graft.sources.StoreManifest.asOf(spark, st.root, 4L), Seq("codes")),
       S.vectors(spark, d)))
     val before = serve()
     val v4Live = st.v4.values.flatten.toSet
@@ -92,7 +90,7 @@ class PqLifecycleSpec extends AnyFunSuite {
   }
 
   test("q353: the version trail spans the live code-store commit; batches replay pinned") {
-    val (res, trail) = S.streamServeLivePq(spark, d, nFiles = 4)
+    val (res, trail) = S.streamServeLive(spark, d, S.PqTier, nFiles = 4)
     assert(trail.size >= 2, s"need multiple batches, got $trail")
     val vs = trail.map(_._2)
     assert(vs.head == 3L && vs.last == 4L && vs.sorted == vs,
@@ -112,7 +110,7 @@ class PqLifecycleSpec extends AnyFunSuite {
       val probeIds = served.map(_._1).toSet
       val replay = rows(S.pqAdcRank(
         probes.where(col("vec_id").isin(probeIds.toSeq: _*)),
-        S.readStore(spark, S.manifestAsOf(spark, root, v), Seq("codes")),
+        S.readStore(spark, graft.sources.StoreManifest.asOf(spark, root, v), Seq("codes")),
         S.vectors(spark, d)))
       assert(served == replay,
         s"batch $bid (version $v): mid-stream ADC result diverged from a pinned v$v replay")
