@@ -2,10 +2,13 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{CosineSimilarity, ScoredId, SeqDot, TopKAggregator}
+import graft.sources.StoreManifest
+import graft.sources.StoreManifest.{VacuumReport, cellDirs, readComponent, readStore, vacuumStore}
 import graft.streaming.StreamFixture
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Similarity search over the `embeddings.embedding` (array<float>) column:
   * brute-force cosine top-k as the verified baseline, and a random-
@@ -518,19 +521,21 @@ object Similarity {
     * precision IVF rows or PQ codes. `tag` keys the tier's artifacts and
     * scratch dirs; `encode(s, d, d0, rows)` turns cell-assigned
     * (vec_id, v, cell) rows into what the store lands, against
-    * quantizers trained below `d0`; `valCols` are the stored value
-    * columns; `probes(s, d, maxId)` is the 8-probe set (one row per
+    * quantizers trained below `d0`; `schema` is what a store file holds
+    * (vec_id and the value column; `cell` is the dir name), handed to
+    * every store read so none infers it; `probes(s, d, maxId)` is the 8-probe set (one row per
     * probed cell) against quantizers trained below `maxId`; and
     * `rank(s, d, probes, store)` is the top-5 search over a store
     * relation.
     */
-  private[graft] final case class ServeTier(tag: String, valCols: Seq[String],
+  private[graft] final case class ServeTier(tag: String, schema: StructType,
       encode: (SparkSession, String, Long, DataFrame) => DataFrame,
       probes: (SparkSession, String, Long) => DataFrame,
       rank: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
 
   /** Vectors land verbatim; exact cosine over the probed cells. */
-  private[graft] val IvfTier: ServeTier = ServeTier("ivf", Seq("v"),
+  private[graft] val IvfTier: ServeTier = ServeTier("ivf",
+    StructType(Seq(StructField("vec_id", LongType), StructField("v", ArrayType(DoubleType)))),
     (_, _, _, rows) => rows,
     (s, d, maxId) => ivfProbes(withCells(
       vectors(s, d).where(col("vec_id") < 8), ivfCents(s, d, maxId = maxId))),
@@ -542,7 +547,8 @@ object Similarity {
     * carries its 8×8 ADC lookup table; the search is q111's ADC scan,
     * candidate cut and exact rerank against the base vectors.
     */
-  private[graft] val PqTier: ServeTier = ServeTier("pq", Seq("codes"),
+  private[graft] val PqTier: ServeTier = ServeTier("pq",
+    StructType(Seq(StructField("vec_id", LongType), StructField("codes", ArrayType(IntegerType)))),
     (s, d, d0, rows) => pqEncode(rows, pqBooksRow(pqBooks(s, d, maxId = d0))),
     (s, d, maxId) => pqProbesLut(IvfTier.probes(s, d, maxId),
       pqBooksRow(pqBooks(s, d, maxId = maxId))),
@@ -578,7 +584,7 @@ object Similarity {
     tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = true))
       .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(inc)
     tier.rank(s, d, tier.probes(s, d, d0),
-      s.read.parquet(base).unionByName(s.read.parquet(inc)))
+      readComponent(s, base, tier.schema).unionByName(readComponent(s, inc, tier.schema)))
   }
 
   /** q341 — INCREMENTAL ANN INDEX MAINTENANCE (round-14 verdict task 4):
@@ -650,42 +656,6 @@ object Similarity {
       v3: Map[Long, Seq[String]], v4: Map[Long, Seq[String]],
       compacted: Set[Long])
 
-  /** The `cell=N` partition dirs of one store component, via the Hadoop
-    * FileSystem of the component's scheme (round-16 verdict task 4: the
-    * lifecycle file ops must run wherever the store lives — a
-    * `java.io.File` walk returns nothing on an object-store scratch
-    * root and the lifecycle would silently see an empty component).
-    */
-  private def cellDirs(s: SparkSession, p: String): Map[Long, String] = {
-    val fs = graft.sources.StoreManifest.hfs(s, p)
-    val dir = new org.apache.hadoop.fs.Path(p)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(st => st.getPath.getName.drop(5).toLong ->
-        graft.sources.StoreManifest.pathStr(st.getPath)).toMap
-  }
-
-  /** Read a manifest view. The live dirs are GROUPED BY their store
-    * root and each group mounts as ONE partition-discovering scan
-    * (`basePath` = the root, so the cell partition column comes back
-    * from the dir names) — one scan per store component (≤ 4: base,
-    * two increments, compact) instead of one per (cell, dir) leaf
-    * (≤ 24), which was most of q343's first-cut 6 s: per-scan planning
-    * overhead, not data. Selecting only the live leaf dirs under each
-    * basePath IS the manifest's partition-level liveness filter.
-    */
-  private[graft] def readStore(s: SparkSession,
-      m: Map[Long, Seq[String]], valCols: Seq[String] = Seq("v")): DataFrame =
-    m.values.flatten.toSeq.distinct
-      .groupBy(p => p.substring(0, p.lastIndexOf('/')))
-      .toSeq.sortBy(_._1)
-      .map { case (root, ds) =>
-        s.read.option("basePath", root).parquet(ds.sorted: _*)
-          .select(col("vec_id") +: valCols.map(col) :+
-            col("cell").cast("long").as("cell"): _*)
-      }.reduce(_ unionByName _)
-
   /** q343's full store lifecycle — base, two increment appends, the
     * per-cell compaction decision, the compaction commit — returning
     * the handle. Run-unique root: bench reps re-measure the maintenance
@@ -732,7 +702,7 @@ object Similarity {
     // design is manifest/reference sharing (never copying bytes) or a
     // distcp-style parallel copy; do not scale this call.
     def copyUnderRoot(shared: String, dest: String): String = {
-      val fs = graft.sources.StoreManifest.hfs(s, dest)
+      val fs = StoreManifest.hfs(s, dest)
       org.apache.hadoop.fs.FileUtil.copy(
         fs, new org.apache.hadoop.fs.Path(shared),
         fs, new org.apache.hadoop.fs.Path(dest),
@@ -794,7 +764,7 @@ object Similarity {
       cells.map(j => (1L, j, baseDirs.get(j).toSeq)) ++
         cells.map(j => (2L, j, baseDirs.get(j).toSeq ++ aDirs.get(j).toSeq)) ++
         cells.map(j => (3L, j, v3(j)))
-    graft.sources.StoreManifest.commit(s, root)(_ =>
+    StoreManifest.commit(s, root)(_ =>
       upTo3.flatMap { case (v, j, ps) => ps.map(p => (v, j, p)) })
     IvfStoreV3(root, d0, dMid, base, incA, incB, compactDir, cells, v3, tier)
   }
@@ -811,8 +781,7 @@ object Similarity {
     // scan; ≤ 2·cells result rows), then integer-ratio per-cell triggers
     val cnt = Seq(base -> "b", incA -> "i", incB -> "i")
       .map { case (comp, tag) =>
-        s.read.parquet(comp)
-          .select(col("cell").cast("long").as("cell"), lit(tag).as("t"))
+        readComponent(s, comp, tier.schema).select(col("cell"), lit(tag).as("t"))
       }.reduce(_ unionByName _)
       .groupBy("cell", "t").agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -829,11 +798,10 @@ object Similarity {
     // empty-trigger guard (ADVICE r15): when NO cell crosses the
     // threshold (a shrinking or skewed delta), the commit is a no-op —
     // v4 republishes v3's paths verbatim and nothing is rewritten
-    // (readStore on an empty map would have no scan to reduce over)
     val cDirs =
       if (compacted.isEmpty) Map.empty[Long, String]
       else {
-        readStore(s, v3.filter(kv => compacted(kv._1)), tier.valCols)
+        readStore(s, v3.filter(kv => compacted(kv._1)), tier.schema)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("cell").parquet(compactDir)
         cellDirs(s, compactDir)
@@ -844,7 +812,7 @@ object Similarity {
     // manifest head (round-16 verdict task 3): a second committer racing
     // this one gets the NEXT version, never a duplicate of this one —
     // ManifestCasSpec races two appendVersion writers and pins it
-    graft.sources.StoreManifest.appendVersion(s, root)(nv =>
+    StoreManifest.appendVersion(s, root)(nv =>
       v4.toSeq.flatMap { case (j, ps) => ps.map(p => (nv, j, p)) })
     IvfCompactStore(root, d0, dMid, compactDir, v3, v4, compacted)
   }
@@ -860,7 +828,7 @@ object Similarity {
   private def servePinned(s: SparkSession, d: String, tier: ServeTier,
       st: IvfCompactStore)(v: Long, phase: String): DataFrame =
     tier.rank(s, d, tier.probes(s, d, st.d0),
-      readStore(s, graft.sources.StoreManifest.asOf(s, st.root, v), tier.valCols))
+      readStore(s, StoreManifest.asOf(s, st.root, v), tier.schema))
       .withColumn("phase", lit(phase))
 
   /** The q343/q350 body: build and compact a store, then serve the
@@ -909,80 +877,6 @@ object Similarity {
             SELECT ph.phase, res.probe_id, res.neighbor_id, res.cos_sim, res.rnk
             FROM (VALUES ('pre'), ('post')) ph(phase) CROSS JOIN res""")
   )
-
-  /** What a vacuum pass retired and retained, for the spec's file
-    * economics (`prunedManifestRows` counts the dropped below-floor
-    * manifest entries).
-    */
-  private[graft] final case class VacuumReport(
-      deleted: Seq[String], kept: Seq[String], prunedManifestRows: Long)
-
-  /** q345's GC pass — q168's vacuum discipline applied to the ANN store
-    * (the debt q343's commit protocol declared): delete every cell dir
-    * UNDER THE STORE ROOT that no manifest version ≥ `keepFrom`
-    * references, and prune the manifest to the retention floor in the
-    * same maintenance commit. The manifest — not the filesystem —
-    * defines liveness, so the pass is pure bounded metadata: one
-    * manifest collect (≤ versions × cells rows), one directory listing
-    * per store component, filesystem deletes proportional to the
-    * retired dirs — never a data scan, at any corpus size. Safety is
-    * structural: candidates come only from under the root, so a store
-    * whose base is the SHARED corpus artifact (q343's cheap default)
-    * can never lose it to a vacuum — only a `privateBase` store (q345),
-    * whose manifest owns everything it references, retires base dirs.
-    * READER-ATOMIC (round-17): the manifest prune publishes as one
-    * StoreManifest generation commit BEFORE any file is deleted — a
-    * concurrent reader resolves the old complete snapshot or the pruned
-    * complete snapshot, never a torn one, and readers pinned to
-    * versions ≥ the floor are unaffected because their dirs are never
-    * candidates (q348 serves across a live vacuum and hash-proves it;
-    * `AnnVacuumLiveSpec` hammers the resolve during the pass).
-    */
-  private[graft] def vacuumStore(s: SparkSession, root: String,
-      keepFrom: Long): VacuumReport = {
-    val SM = graft.sources.StoreManifest
-    val all = SM.readRows(s, root)
-    val retained0 = all.filter(_._1 >= keepFrom)
-    require(retained0.nonEmpty,
-      s"vacuum would retire every version in $root/manifest (keepFrom=$keepFrom)")
-    // 1. PUBLISH the pruned manifest first, as one atomic generation
-    //    commit (round-16 verdict task 1: the prune was an in-place
-    //    Overwrite with a delete-then-write window; a live reader could
-    //    resolve a missing or partial manifest mid-vacuum). The CAS
-    //    recomputes the prune if another commit landed in between, so
-    //    the retained set below is what actually got published.
-    val retained =
-      if (retained0.length == all.length) all // full retention: no commit
-      else {
-        val (_, rows) = SM.commit(s, root) { cur =>
-          val keep = cur.filter(_._1 >= keepFrom)
-          require(keep.nonEmpty,
-            s"vacuum would retire every version in $root/manifest (keepFrom=$keepFrom)")
-          keep
-        }
-        rows
-      }
-    val live = retained.map(_._3).toSet
-    // 2. candidate walk + deletes through the Hadoop FileSystem of the
-    //    store's scheme (round-16 verdict task 4 / ADVICE r16: a
-    //    java.io.File walk on an object-store root lists nothing and
-    //    the vacuum silently retires no dirs)
-    val fs = SM.hfs(s, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val comps = fs.listStatus(rootPath)
-      .filter(st => st.isDirectory && st.getPath.getName != "manifest")
-    val cand = comps
-      .flatMap(c => fs.listStatus(c.getPath))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(st => SM.pathStr(st.getPath)).sorted.toSeq
-    val (kept, dead) = cand.partition(live)
-    // readers pinned to versions ≥ the floor never reference a dead
-    // dir, and the manifest flip above already hid the below-floor
-    // rows — so these deletes are invisible to every contract reader
-    // (q348 drives a live serving loop across this pass and proves it)
-    dead.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    VacuumReport(dead, kept, (all.length - retained.length).toLong)
-  }
 
   /** The q345/q351 body: build a store that owns its base, compact it,
     * serve v4 and materialize that result, vacuum at retention floor v4,
@@ -1056,13 +950,13 @@ object Similarity {
     def leaf(kind: String) = graft.sources.Sources.scratchLeaf(d, s"${name}_${kind}_$runId")
     val src = leaf("src"); val sink = leaf("out")
     probes.repartition(nFiles, col("vec_id")).write.mode(SaveMode.Overwrite).parquet(src)
-    val fs = graft.sources.StoreManifest.hfs(s, src)
+    val fs = StoreManifest.hfs(s, src)
     val t0 = System.currentTimeMillis()
     fs.listStatus(new org.apache.hadoop.fs.Path(src)).map(_.getPath)
       .filter(_.getName.startsWith("part-")).sortBy(_.getName).zipWithIndex
       .foreach { case (p, i) => fs.setTimes(p, t0 + i, -1L) }
-    val schema = s.read.parquet(src).schema
     val trail = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val outSchema = new java.util.concurrent.atomic.AtomicReference[StructType]
     val serve: (Dataset[Row], Long) => Unit = (batch, batchId) => {
       val rows = batch.collect()
       if (rows.nonEmpty) {
@@ -1071,17 +965,21 @@ object Similarity {
         val cells = rows.map(_.getAs[Number]("cell").longValue).toSet
         val (out, tag) = step(ss, local, cells, batchId)
         out.write.mode(SaveMode.Append).parquet(sink)
+        outSchema.compareAndSet(null, out.schema)
         trail.add((batchId, tag))
         if (trail.size == 1) afterFirst(ss)
       }
     }
+    // the staged files and the sink hold the probes' and the step's
+    // schemas, so neither read infers one
     StreamFixture.drain(s)(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+      s.readStream.schema(probes.schema).option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve).option("checkpointLocation", leaf("chk")))
     require(nFiles < 2 || trail.size >= 2,
       s"expected multiple serving micro-batches, got ${trail.size}")
+    require(outSchema.get != null, "the serving loop served no micro-batch")
     import scala.jdk.CollectionConverters._
-    (s.read.parquet(sink), trail.asScala.toSeq.sortBy(_._1))
+    (s.read.schema(outSchema.get).parquet(sink), trail.asScala.toSeq.sortBy(_._1))
   }
 
   /** One serving step against a static store: a probe micro-batch
@@ -1091,12 +989,14 @@ object Similarity {
     * column lands in the scan's PartitionFilters (`AnnServeSpec` and
     * `AnnPqServeSpec` plan-gate it), so each micro-batch reads
     * `nprobe/k` of the index, never the whole store — at 100 TB the
-    * difference between a serving tier and a rescan.
+    * difference between a serving tier and a rescan. Each store reads
+    * with the tier's schema, so no micro-batch starts an inference job.
     */
   private[graft] def serveBatch(s: SparkSession, d: String, tier: ServeTier,
       probes: DataFrame, paths: Seq[String], cells: Iterable[Long]): DataFrame =
-    tier.rank(s, d, probes, paths.map(s.read.parquet(_)).reduce(_ unionByName _)
-      .where(col("cell").isInCollection(cells)))
+    tier.rank(s, d, probes,
+      paths.map(readComponent(s, _, tier.schema)).reduce(_ unionByName _)
+        .where(col("cell").isInCollection(cells)))
 
   /** q344's serving: the probe set against the stored float inverted
     * file (base + increment, both per-corpus-snapshot artifacts).
@@ -1150,7 +1050,7 @@ object Similarity {
   private def serveView(s: SparkSession, d: String, tier: ServeTier, probes: DataFrame,
       cells: Set[Long], m: Map[Long, Seq[String]]): DataFrame = {
     val probed = m.filter(kv => cells(kv._1))
-    tier.rank(s, d, probes, readStore(s, if (probed.isEmpty) m else probed, tier.valCols))
+    tier.rank(s, d, probes, readStore(s, if (probed.isEmpty) m else probed, tier.schema))
   }
 
   /** q346/q353's serving loop ACROSS a live compaction commit (round-15
@@ -1172,7 +1072,7 @@ object Similarity {
     val (res, trail) = serveLoop(s, d, s"${tier.tag}_live", nFiles,
         tier.probes(s, d, st3.d0), ss => { commitCompaction(ss, st3); () }) {
       (ss, local, cells, batchId) =>
-        val (v, m) = graft.sources.StoreManifest.headVersion(ss, st3.root)
+        val (v, m) = StoreManifest.headVersion(ss, st3.root)
         (serveView(ss, d, tier, local, cells, m).withColumn("batch_id", lit(batchId))
           .withColumn("version", lit(v)).withColumn("store_root", lit(st3.root)), v)
     }
@@ -1217,14 +1117,13 @@ object Similarity {
     */
   private[graft] def streamServeLiveVacuum(s: SparkSession, d: String,
       nFiles: Int): (DataFrame, Seq[(Long, Long)], VacuumReport) = {
-    val SM = graft.sources.StoreManifest
     val st = compactStore(s, d, IvfTier, privateBase = true) // retired v3-only dirs are garbage
     val rep = new java.util.concurrent.atomic.AtomicReference[VacuumReport]
     val (res, trail) = serveLoop(s, d, "ivf_vac", nFiles, IvfTier.probes(s, d, st.d0),
         ss => rep.set(vacuumStore(ss, st.root, keepFrom = 4L))) {
       (ss, local, cells, batchId) =>
-        val gen = SM.gens(ss, st.root).last._1
-        val (v, m) = SM.headVersion(ss, st.root)
+        val gen = StoreManifest.gens(ss, st.root).last._1
+        val (v, m) = StoreManifest.headVersion(ss, st.root)
         // the vacuum must be invisible: the head VERSION never moves
         require(v == 4L, s"live vacuum moved the head version to $v")
         (serveView(ss, d, IvfTier, local, cells, m).withColumn("batch_id", lit(batchId))

@@ -4,6 +4,7 @@ import graft.{Q, Tables}
 import graft.streaming.StreamFixture
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** File-format connectors beyond parquet (SURVEY.md §2c): CSV and JSON
   * read/write, demonstrated as lossless round-trips of the `documents`
@@ -52,27 +53,6 @@ object Sources {
     * contract as the round-trip queries above.
     */
   def scratchLeaf(d: String, name: String): String = leaf(d, name)
-
-  /** Assert that a consolidated `partitionBy("pb")` commit materialized
-    * every expected bucket directory (ADVICE r17): a touched bucket
-    * whose rewrite filters to ZERO surviving rows writes no `pb=k` dir,
-    * and a manifest recorded from the expected-bucket list would then
-    * point at a nonexistent path — every later asOf read of that
-    * version fails, darkly and data-dependently. Current fixtures
-    * always have survivors; this converts the latent corruption into a
-    * loud commit-time failure at the cost of one FS existence probe per
-    * bucket (metadata-plane, like the manifest itself).
-    */
-  private[graft] def requireBucketDirs(s: SparkSession, root: String,
-      buckets: Seq[Long]): Unit = {
-    val fs = StoreManifest.hfs(s, root)
-    val missing = buckets.filterNot(k =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/pb=$k")))
-    require(missing.isEmpty,
-      s"partitioned commit under $root materialized no dir for bucket(s) " +
-        s"${missing.mkString(",")} (zero surviving rows?) — the manifest " +
-        "would reference nonexistent paths")
-  }
 
   /** Memoized per-dir scratch artifact (the train-once discipline shared
     * by q23's pair table, q151's gram index, q167's energies, q262's
@@ -698,87 +678,69 @@ object Sources {
             FROM documents""")
   )
 
+  /** The two-version documents store that q143 and q168 each commit
+    * under a root of their own: v1 is the corpus in 4 immutable buckets,
+    * `<root>/base/cell=k` with k = doc_id % 4; v2 commits q88's
+    * closed-form delta copy-on-write — the buckets holding updated docs
+    * ({0, 2}) are rewritten into `<root>/rw/cell=k`, buckets {1, 3} are
+    * SHARED with v1, and the inserts land as one unbucketed component,
+    * `<root>/ins/cell=-1`. One scan fans the base, and one the rewrite,
+    * into its bucket dirs (a partitioned write, not one filtered rescan
+    * per bucket). Both versions publish as one StoreManifest commit, and
+    * data files hold (doc_id, lang, n_chars, text). Returns the
+    * committed rows and that schema.
+    */
+  private def docsStore(s: SparkSession, d: String,
+      root: String): (StoreManifest.Rows, StructType) = {
+    val base = Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
+        (col("doc_id") % 4).as("cell"))
+    val touched: Seq[Long] = Seq(0L, 2L) // multiples of 10 mod 4 ∈ {0, 2}
+    base.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/base")
+    base.where(col("cell").isInCollection(touched))
+      .withColumn("text", when(col("doc_id") % 10 === 0, upper(col("text"))).otherwise(col("text")))
+      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/rw")
+    base.where(col("doc_id") % 7 === 0).drop("cell")
+      .withColumn("doc_id", col("doc_id") + lit(10000000L))
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/ins/cell=-1")
+    val baseDirs = StoreManifest.requireBucketDirs(s, s"$root/base", 0L until 4L)
+    val rwDirs = StoreManifest.requireBucketDirs(s, s"$root/rw", touched)
+    val insDir = StoreManifest.requireBucketDirs(s, s"$root/ins", Seq(-1L))(-1L)
+    val rows = baseDirs.toSeq.flatMap { case (k, p) =>
+      Seq((1L, k, p), (2L, k, rwDirs.getOrElse(k, p))) } :+ ((2L, -1L, insDir))
+    (StoreManifest.commit(s, root)(_ => rows.sorted)._2, base.drop("cell").schema)
+  }
+
   /** q143 — TIME-TRAVEL READS over a copy-on-write versioned table (the
     * Iceberg/Delta storage model, built from primitives): the corpus is
-    * laid out as immutable bucket files, a MANIFEST table records which
-    * files each snapshot version comprises, and a commit is "write the
-    * changed files + a new manifest row-set" — data files are NEVER
-    * edited in place. Version 1 is the base corpus in 4 bucket files;
-    * version 2 commits q88's closed-form delta copy-on-write: buckets
-    * containing updated docs are rewritten, untouched buckets' files are
-    * SHARED by both manifests (the whole point — a 100 TB table's daily
+    * laid out as immutable bucket dirs, a StoreManifest generation
+    * records which dirs each snapshot version comprises, and a commit is
+    * "write the changed files + publish the new manifest rows" — data
+    * files are NEVER edited in place. The store is [[docsStore]]'s: v2
+    * rewrites only the touched buckets, untouched buckets' dirs are
+    * SHARED by both versions (the whole point — a 100 TB table's daily
     * delta rewrites only the touched files), and inserts land in a new
-    * file. Reading AS OF v = read exactly the manifest-v file list; the
-    * output is both snapshots' rows tagged by version, so the oracle
-    * proves v1 is still byte-intact AFTER v2 committed (snapshot
-    * isolation) and v2 equals the merge result.
+    * component. Reading AS OF v = `StoreManifest.asOf` then `readStore`
+    * over exactly that version's dirs, with the schema the writer holds
+    * (no inference job); the output is both snapshots' rows tagged by
+    * version, so the oracle proves v1 is still byte-intact AFTER v2
+    * committed (snapshot isolation) and v2 equals the merge result.
     *
-    * The manifest is collected driver-side before the data read — file
-    * METADATA, bounded by file count not rows; exactly what every table
-    * format's planning phase does. `TimeTravelSpec` pins file sharing
-    * (the untouched buckets appear in both manifests) and post-commit v1
-    * integrity.
+    * The manifest resolve is plain file I/O on bounded metadata, never a
+    * Spark job — what every table format's planning phase does.
+    * `TimeTravelSpec` pins file sharing (the untouched buckets appear in
+    * both versions) and post-commit v1 integrity.
     */
-  /** q143's manifest location, exposed so `TimeTravelSpec` can verify the
-    * copy-on-write file-sharing property directly against the committed
-    * manifest (same JVM ⇒ same scratch leaf).
-    */
-  def timeTravelManifestDir(d: String): String = leaf(d, "tt_manifest")
-
   val timeTravel = Q(
     "q143_time_travel",
     (s, d) => {
-      val base = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
-          (col("doc_id") % 4).as("bucket"))
-      val updates = base.where(col("doc_id") % 10 === 0)
-        .withColumn("text", upper(col("text")))
-      val inserts = base.where(col("doc_id") % 7 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-        .withColumn("bucket", col("doc_id") % 4)
-      val touched: Seq[Long] = Seq(0L, 2L) // multiples of 10 mod 4 ∈ {0, 2}
-
-      // One scan fans the base into per-bucket directories; one more
-      // (plus the bounded updates side) lands both rewritten buckets —
-      // q170's partitioned-commit discipline (optimization r17: the
-      // previous shape scanned documents once per bucket/rewrite file,
-      // 6 scan+write jobs for 6 files). Data files keep exactly the
-      // (doc_id, lang, n_chars, text) columns; the bucket is the
-      // directory name.
-      val baseRoot = leaf(d, "tt_base")
-      base.withColumn("pb", col("bucket")).drop("bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(baseRoot)
-      requireBucketDirs(s, baseRoot, 0L until 4L)
-      val dataFiles = (0L until 4L).map(k => k -> s"$baseRoot/pb=$k").toMap
-      val rwRoot = leaf(d, "tt_rw")
-      base.where(col("bucket").isInCollection(touched) && col("doc_id") % 10 =!= 0)
-        .unionAll(updates.where(col("bucket").isInCollection(touched)))
-        .withColumn("pb", col("bucket")).drop("bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(rwRoot)
-      requireBucketDirs(s, rwRoot, touched)
-      val rewritten = touched.map(k => k -> s"$rwRoot/pb=$k").toMap
-      val insertFile = leaf(d, "tt_ins")
-      inserts.drop("bucket").write.mode(SaveMode.Overwrite).parquet(insertFile)
-
-      import s.implicits._
-      val manifest =
-        (0L until 4L).map(k => (1L, dataFiles(k))) ++
-          (0L until 4L).map(k => (2L, rewritten.getOrElse(k, dataFiles(k)))) :+
-          ((2L, insertFile))
-      val manifestDir = leaf(d, "tt_manifest")
-      manifest.toDF("version", "path")
-        .write.mode(SaveMode.Overwrite).parquet(manifestDir)
-
-      def asOf(v: Long): DataFrame = {
-        val paths = s.read.parquet(manifestDir)
-          .where(col("version") === v).select("path")
-          .collect().map(_.getString(0)).sorted
-        s.read.parquet(paths: _*)
-      }
+      val root = leaf(d, "tt_store")
+      val (_, schema) = docsStore(s, d, root)
       Seq(1L, 2L).map { v =>
-        asOf(v).select(lit(v).as("version"), col("doc_id"), col("lang"),
-          col("n_chars"), length(col("text")).cast("long").as("text_len"),
-          graft.functions.TextFns.md5Hex(col("text")).as("text_fp"))
+        StoreManifest.readStore(s, StoreManifest.asOf(s, root, v), schema)
+          .select(lit(v).as("version"), col("doc_id"), col("lang"),
+            col("n_chars"), length(col("text")).cast("long").as("text_len"),
+            graft.functions.TextFns.md5Hex(col("text")).as("text_fp"))
       }.reduce(_ unionAll _)
     },
     Some("""WITH base AS (SELECT doc_id, lang, n_chars, text FROM documents),
@@ -798,73 +760,59 @@ object Sources {
             FROM v2""")
   )
 
+  /** The 8-bucket events base that q155 and q170 each commit as v1
+    * under a root of their own: events' (event_id, user_id, value) in
+    * `<root>/base/cell=k`, k = user_id % 8, landed by ONE scan fanned
+    * into the bucket dirs by a partitioned write (on a 100 TB table a
+    * bucketed base commit is one pass by construction). Returns the
+    * source rows keyed by `cell` and the base dirs.
+    */
+  private def eventsBase(s: SparkSession, d: String,
+      root: String): (DataFrame, Map[Long, String]) = {
+    val ev = Tables.events(s, d)
+      .select(col("event_id"), col("user_id"), col("value"),
+        (col("user_id") % 8).as("cell"))
+    ev.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/base")
+    (ev, StoreManifest.requireBucketDirs(s, s"$root/base", 0L until 8L))
+  }
+
   /** q155 — GDPR DELETION PROPAGATION (copy-on-write DELETE): the
     * right-to-be-forgotten request against q143's storage model. The
-    * events table is laid out as 8 immutable bucket files keyed by
+    * events table is [[eventsBase]]'s 8 immutable bucket dirs keyed by
     * `user_id % 8`; the deletion set (`user_id % 16 IN (5, 14)`) maps to
-    * buckets {5, 6}, so the commit rewrites exactly those two files with
-    * the users anti-filtered out and SHARES the other six with v1 —
-    * on a 100 TB table, a deletion request touches only the files whose
-    * key range contains the user, never the corpus (and bucket layout
-    * makes "which files" a hash, not a scan; `GdprDeleteSpec` pins the
-    * 6-of-8 sharing against the committed manifest). The output reads
-    * BOTH snapshots through their manifests and aggregates per (version,
-    * bucket): v1 must still contain the deleted users (snapshot isolation
-    * — compliance requires the pre-deletion state be provably what was
-    * deleted FROM, until retention expires it), v2 must contain zero,
-    * and untouched buckets must agree row-for-row across versions. The
-    * `n_deleted_users` column is the tombstone audit a DPO files.
+    * buckets {5, 6}, so the commit rewrites exactly those two buckets
+    * into `<root>/rw/cell=k` with the users anti-filtered out and SHARES
+    * the other six with v1 — on a 100 TB table, a deletion request
+    * touches only the files whose key range contains the user, never the
+    * corpus (and bucket layout makes "which files" a hash, not a scan;
+    * `GdprDeleteSpec` pins the 6-of-8 sharing against the committed
+    * manifest). Both versions publish as one StoreManifest commit. The
+    * output reads BOTH snapshots through `asOf` and `readStore` (one scan
+    * per component, the writer's schema, no inference job) and
+    * aggregates per (version, bucket): v1 must still contain the deleted
+    * users (snapshot isolation — compliance requires the pre-deletion
+    * state be provably what was deleted FROM, until retention expires
+    * it), v2 must contain zero, and untouched buckets must agree
+    * row-for-row across versions. The `n_deleted_users` column is the
+    * tombstone audit a DPO files.
     */
-  def gdprManifestDir(d: String): String = leaf(d, "gdpr_manifest")
-
   private val deletedPred = "user_id % 16 IN (5, 14)"
 
   val gdprDelete = Q(
     "q155_gdpr_delete",
     (s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("value"),
-          (col("user_id") % 8).as("bucket"))
-      val isDeleted = expr(deletedPred)
+      val root = leaf(d, "gdpr_store")
+      val (ev, baseDirs) = eventsBase(s, d, root)
       val touched: Seq[Long] = Seq(5L, 6L) // {5 % 8, 14 % 8}
-
-      // v1 base layout and the v2 rewrites each land from ONE scan of
-      // the source, fanned into per-bucket directories by a partitioned
-      // write — q170's commit discipline (optimization r17: the previous
-      // shape re-scanned events once per bucket file, 10 scan+write jobs
-      // for 10 files; on a 100 TB table a bucketed base commit is one
-      // pass by construction). The data files hold (event_id, user_id,
-      // value) exactly as before — the bucket key is the directory name.
-      val baseRoot = leaf(d, "gdpr_base")
-      ev.withColumn("pb", col("bucket")).drop("bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(baseRoot)
-      requireBucketDirs(s, baseRoot, 0L until 8L)
-      val baseFiles = (0L until 8L).map(k => k -> s"$baseRoot/pb=$k").toMap
-      val rwRoot = leaf(d, "gdpr_rw")
-      ev.where(col("bucket").isInCollection(touched) && !isDeleted)
-        .withColumn("pb", col("bucket")).drop("bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(rwRoot)
-      requireBucketDirs(s, rwRoot, touched)
-      val rewritten = touched.map(k => k -> s"$rwRoot/pb=$k").toMap
-
-      import s.implicits._
-      val manifest =
-        (0L until 8L).map(k => (1L, k, baseFiles(k))) ++
-          (0L until 8L).map(k => (2L, k, rewritten.getOrElse(k, baseFiles(k))))
-      manifest.toDF("version", "bucket", "path")
-        .write.mode(SaveMode.Overwrite).parquet(gdprManifestDir(d))
-
-      def asOf(v: Long): DataFrame = {
-        val buckets = s.read.parquet(gdprManifestDir(d))
-          .where(col("version") === v).select("bucket", "path")
-          .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-        buckets.map { case (k, f) =>
-          s.read.parquet(f).withColumn("bucket", lit(k))
-        }.reduce(_ unionAll _)
-      }
+      ev.where(col("cell").isInCollection(touched) && !expr(deletedPred))
+        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/rw")
+      val rwDirs = StoreManifest.requireBucketDirs(s, s"$root/rw", touched)
+      StoreManifest.commit(s, root)(_ => baseDirs.toSeq.sorted.flatMap { case (k, p) =>
+        Seq((1L, k, p), (2L, k, rwDirs.getOrElse(k, p))) })
+      val schema = ev.drop("cell").schema
       Seq(1L, 2L).map { v =>
-        asOf(v)
-          .groupBy(lit(v).as("version"), col("bucket"))
+        StoreManifest.readStore(s, StoreManifest.asOf(s, root, v), schema)
+          .groupBy(lit(v).as("version"), col("cell").as("bucket"))
           .agg(
             count(lit(1)).as("n_rows"),
             countDistinct(col("user_id")).as("n_users"),
@@ -892,30 +840,30 @@ object Sources {
     * whole bucket file to drop a handful of rows — correct, but at
     * 100 TB a daily trickle of GDPR requests would rewrite the table
     * continuously. The Delta/Iceberg answer is a TOMBSTONE SIDECAR
-    * (deletion vector): the delete commit writes only (bucket, event_id)
-    * tombstone rows, data files stay byte-identical, and readers
-    * anti-join the sidecar at scan time (merge-on-read). The read tax is
-    * paid per query until a MAINTENANCE pass (q168's vacuum discipline)
-    * compacts: when a bucket's tombstone fraction crosses
-    * [[DvCompactThreshold]], that bucket is rewritten without its dead
-    * rows and its tombstones are dropped; buckets under the threshold
-    * keep riding the sidecar.
+    * (deletion vector): the delete commit writes only event_id
+    * tombstones, bucketed like the data (`<root>/dv_vN/cell=k`, a
+    * component of its own per commit), data files stay byte-identical,
+    * and readers anti-join the sidecar at scan time (merge-on-read). The
+    * read tax is paid per query until a MAINTENANCE pass (q168's vacuum
+    * discipline) compacts: when a bucket's tombstone fraction crosses
+    * [[DvCompactThreshold]], that bucket is rewritten into
+    * `<root>/rw/cell=k` without its dead rows and its tombstones are
+    * dropped; buckets under the threshold keep riding the sidecar.
     *
-    * Three snapshots exercise both regimes: v1 = base (8 immutable
-    * bucket files); v2 = q155's deleted-user predicate as a PURE
-    * deletion-vector commit — `DeletionVectorSpec` pins that every v2
-    * data file IS v1's file, untouched; v3 = a second delete wave that
-    * pushes bucket 5 past the threshold (measured fraction ~0.99 vs
-    * bucket 6's ~0.55, threshold 0.75 — safely between at every SF), so
-    * the maintenance pass compacts exactly bucket 5 and clears its
-    * tombstones while bucket 6 keeps its vector. The compact-or-not
-    * decision is an 8-row metadata aggregate, never a corpus scan.
-    * Output: per (version, bucket) visible rows / users / value mass,
-    * plus `n_dv` — the live tombstone count a storage auditor reads off
-    * the manifest.
+    * Three snapshots exercise both regimes, each a StoreManifest commit
+    * resolved through `asOf` and read through `readStore` with the
+    * writer's schema: v1 = [[eventsBase]]'s 8 immutable bucket dirs;
+    * v2 = q155's deleted-user predicate as a PURE deletion-vector commit
+    * — `DeletionVectorSpec` pins that every v2 data dir IS v1's,
+    * untouched; v3 = a second delete wave that pushes bucket 5 past the
+    * threshold (measured fraction ~0.99 vs bucket 6's ~0.55, threshold
+    * 0.75 — safely between at every SF), so the maintenance pass
+    * compacts exactly bucket 5 and clears its tombstones while bucket 6
+    * keeps its vector. The compact-or-not decision is an 8-row aggregate
+    * over the store, never a re-read of the source. Output: per
+    * (version, bucket) visible rows / users / value mass, plus `n_dv` —
+    * the live tombstone count a storage auditor reads off the manifest.
     */
-  def dvManifestDir(d: String): String = leaf(d, "dv_manifest")
-
   private[graft] val DvCompactThreshold = 0.75
   private val dvPred1 = deletedPred // q155's deleted users, as a DV commit
   private val dvPred2 = "user_id % 16 = 13 AND value < 250.0"
@@ -923,97 +871,63 @@ object Sources {
   val deletionVectors = Q(
     "q170_deletion_vector_delete",
     (s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("value"),
-          (col("user_id") % 8).as("bucket"))
+      val root = leaf(d, "dv_store")
+      val (ev, baseDirs) = eventsBase(s, d, root)
+      val schema = ev.drop("cell").schema
+      val tombSchema = ev.select("event_id").schema
       val p1 = expr(dvPred1)
       val p2 = expr(dvPred2)
+      // version v's manifest rows over some (cell → dir) maps
+      def rows(v: Long, dirs: Map[Long, String]*): StoreManifest.Rows =
+        dirs.flatMap(_.toSeq).sorted.map { case (k, p) => (v, k, p) }
+      // one version's data dirs or tombstone dirs, as the manifest has them
+      def read(v: Long, tombs: Boolean): DataFrame =
+        StoreManifest.readStore(s,
+          StoreManifest.asOf(s, root, v).map { case (k, ps) =>
+            k -> ps.filter(p => StoreManifest.component(p).startsWith("dv_") == tombs) },
+          if (tombs) tombSchema else schema)
+          .withColumnRenamed("cell", "bucket")
+      def landTombs(dead: DataFrame, comp: String): Map[Long, String] = {
+        dead.select(col("event_id"), col("bucket").as("cell"))
+          .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/$comp")
+        StoreManifest.cellDirs(s, s"$root/$comp")
+      }
 
-      // v1: the immutable base layout — ONE scan of the source, fanned
-      // into per-bucket directories by a partitioned write (not 8
-      // filtered rescans). The bucket column is KEPT in the data (the
-      // partition column `pb` is a duplicate) — (bucket, event_id) is
-      // the deletion-vector key, so a reader can anti-join without
-      // re-deriving the bucketing. Everything downstream consults the
-      // STORE, never the upstream source again — the commit discipline
-      // a real table format has (a delete decision reads table state).
-      val baseRoot = leaf(d, "dv_base")
-      ev.withColumn("pb", col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(baseRoot)
-      requireBucketDirs(s, baseRoot, 0L until 8L)
-      val baseFiles = (0L until 8L).map(k => k -> s"$baseRoot/pb=$k").toMap
-      def store: DataFrame =
-        s.read.option("basePath", baseRoot).parquet(baseRoot).drop("pb")
+      // v1: the immutable base. Everything downstream consults the STORE
+      // through the manifest, never the upstream source again — the
+      // commit discipline a real table format has (a delete decision
+      // reads table state).
+      StoreManifest.commit(s, root)(_ => rows(1L, baseDirs))
+      val store = read(1L, tombs = false)
 
       // commit 2 — the deletion-vector path: tombstones only, zero data
       // files touched (the property DeletionVectorSpec gates on).
-      val dv2File = leaf(d, "dv_tomb_v2")
-      store.where(p1).select("bucket", "event_id")
-        .write.mode(SaveMode.Overwrite).parquet(dv2File)
+      StoreManifest.commit(s, root)(_ ++ rows(2L, baseDirs, landTombs(store.where(p1), "dv_v2")))
 
       // commit 3 — second wave + maintenance: per-bucket tombstone
       // fraction (an 8-row aggregate over the store) picks compaction
-      // candidates.
+      // candidates, rewritten by ONE partitioned write.
       val fracs = store.groupBy("bucket")
         .agg(count(lit(1)).as("n"),
           sum(when(p1 || p2, 1L).otherwise(0L)).as("n_dead"))
         .collect()
         .map(r => (r.getAs[Long]("bucket"),
           r.getAs[Long]("n_dead").toDouble / r.getAs[Long]("n")))
-      val compacted = fracs.filter(_._2 >= DvCompactThreshold).map(_._1).sorted
-      val rewritten = compacted.map { k =>
-        val f = leaf(d, s"dv_rw_$k")
-        store.where(col("bucket") === k && !(p1 || p2))
-          .write.mode(SaveMode.Overwrite).parquet(f)
-        k -> f
-      }.toMap
-      val dv3File = leaf(d, "dv_tomb_v3")
-      store.where((p1 || p2) && !col("bucket").isInCollection(compacted.toSeq))
-        .select("bucket", "event_id")
-        .write.mode(SaveMode.Overwrite).parquet(dv3File)
+      val compacted = fracs.filter(_._2 >= DvCompactThreshold).map(_._1).sorted.toSeq
+      val rewritten =
+        if (compacted.isEmpty) Map.empty[Long, String]
+        else {
+          store.where(col("bucket").isInCollection(compacted) && !(p1 || p2))
+            .withColumnRenamed("bucket", "cell")
+            .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/rw")
+          StoreManifest.requireBucketDirs(s, s"$root/rw", compacted)
+        }
+      val dv3Dirs = landTombs(
+        store.where((p1 || p2) && !col("bucket").isInCollection(compacted)), "dv_v3")
+      StoreManifest.commit(s, root)(_ ++ rows(3L, baseDirs ++ rewritten, dv3Dirs))
 
-      import s.implicits._
-      val manifest =
-        (0L until 8L).map(k => (1L, "data", k, baseFiles(k))) ++
-          (0L until 8L).map(k => (2L, "data", k, baseFiles(k))) :+
-          ((2L, "dv", -1L, dv2File)) :++
-          (0L until 8L).map(k => (3L, "data", k, rewritten.getOrElse(k, baseFiles(k)))) :+
-          ((3L, "dv", -1L, dv3File))
-      manifest.toDF("version", "kind", "bucket", "path")
-        .write.mode(SaveMode.Overwrite).parquet(dvManifestDir(d))
-
-      // merge-on-read: manifest-v data files, anti-joined with
-      // manifest-v tombstones on the (bucket, event_id) key.
-      // The manifest is read back ONCE (26 bounded metadata rows) and
-      // filtered driver-side: the previous per-(version, kind) reads
-      // scheduled SIX separate Spark scan jobs over the same tiny file
-      // (optimization r17, guide §5 — driver metadata resolution must
-      // not fan out cluster jobs; same at 100 TB, where the manifest
-      // stays O(versions × buckets) however big the data is).
-      val manifestRows = s.read.parquet(dvManifestDir(d))
-        .select("version", "kind", "path").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-      def paths(v: Long, kind: String): Seq[String] =
-        manifestRows.collect { case (`v`, `kind`, p) => p }.sorted.toSeq
-      // The manifest mixes bucket subdirs of the partitioned base layout
-      // with rewritten plain dirs, and a single multi-path read would
-      // run partition-structure inference across them. Group instead of
-      // going one-scan-per-path (the previous shape — 8 scan subtrees
-      // per version, ~24 per plan): every path still under the base
-      // layout mounts as ONE partition-discovering scan (`basePath`, the
-      // readStore discipline from the ANN store), rewritten dirs read
-      // flat — 1-2 scans per version instead of 8 (optimization r17,
-      // guide §6: per-file open/planning overhead multiplies at every
-      // scale; the bucket key lives IN the data either way).
-      def readAll(ps: Seq[String]): DataFrame = {
-        val (under, plain) = ps.partition(_.startsWith(baseRoot + "/"))
-        val parts =
-          (if (under.nonEmpty)
-             Seq(s.read.option("basePath", baseRoot)
-               .parquet(under: _*).drop("pb"))
-           else Nil) ++ plain.map(p => s.read.parquet(p))
-        parts.reduce(_ unionByName _)
-      }
+      // merge-on-read: manifest-v data dirs, anti-joined with manifest-v
+      // tombstones on the (bucket, event_id) key.
       // ONE-PASS merge-on-read across all three versions (optimization
       // r18, guide §2.4 — reuse the base scan instead of mounting it
       // once per version): tombstone relations are tiny and broadcast,
@@ -1023,18 +937,17 @@ object Sources {
       // dirs carry those rows) or keyed in the v3 vector — and the
       // three per-version aggregations collapse into ONE scan of the
       // base plus ONE aggregation keyed (version, bucket) after
-      // exploding the visible-version list. Equivalent to the previous
+      // exploding the visible-version list. Equivalent to the
       // per-version LEFT-ANTI form row-for-row because tombstone keys
       // are unique per (bucket, event_id) (event_id is unique), so a
       // left join matches at most once and isNull ≡ anti.
-      val dv2r = readAll(paths(2L, "dv"))
-      val dv3r = readAll(paths(3L, "dv"))
-      val baseData = readAll(paths(1L, "data")) // v1 data ≡ v2 data files
+      val dv2r = read(2L, tombs = true)
+      val dv3r = read(3L, tombs = true)
       val noVersions = typedLit(Seq.empty[Long])
       val notCompacted =
         if (compacted.isEmpty) lit(true)
-        else !col("bucket").isInCollection(compacted.toSeq)
-      val visibleBase = baseData
+        else !col("bucket").isInCollection(compacted)
+      val visibleBase = store // v1 data ≡ v2 data dirs
         .join(broadcast(dv2r.withColumn("d2", lit(1))),
           Seq("bucket", "event_id"), "left")
         .join(broadcast(dv3r.withColumn("d3", lit(1))),
@@ -1048,7 +961,7 @@ object Sources {
       val visible =
         if (rewritten.isEmpty) visibleBase
         else visibleBase.unionByName(
-          readAll(rewritten.values.toSeq.sorted)
+          read(3L, tombs = false).where(col("bucket").isInCollection(compacted))
             .select(col("bucket"), col("user_id"), col("value"),
               lit(3L).as("version")))
       val dvc = dv2r.groupBy("bucket").agg(count(lit(1)).as("n_dv"))
@@ -1411,111 +1324,52 @@ object Sources {
   /** q168 — VACUUM / RETENTION GC over the q143 copy-on-write store: the
     * second half of the time-travel contract. Snapshots share immutable
     * files, so old versions cost only their PRIVATE files — and reclaiming
-    * space means deleting exactly the files no RETAINED manifest
-    * references (Delta's `VACUUM`, Iceberg's `expireSnapshots`). The
-    * query rebuilds the two-version store (v1 = 4 base buckets; v2 =
-    * copy-on-write commit rewriting buckets {0,2} + an insert file),
-    * expires v1, computes the dead set as a manifest ANTI-join
-    * (files referenced by any version MINUS files referenced by retained
-    * versions), physically deletes those files, and then reports per file
-    * TAG: reference counts, live/vacuumed status, and the row count from
-    * actually RE-READING every surviving file post-vacuum — so the result
-    * hash proves both halves at once (dead files identified correctly
-    * AND no live file was harmed; a vacuum that deleted a shared bucket
-    * would zero a live row count).
+    * space means deleting exactly the dirs no RETAINED version references
+    * (Delta's `VACUUM`, Iceberg's `expireSnapshots`). The query commits
+    * [[docsStore]]'s two-version store under its own root (v1 = 4 base
+    * buckets; v2 = copy-on-write commit rewriting buckets {0,2} + an
+    * insert component), builds the per-dir reference counts from the
+    * committed manifest rows, expires v1 with
+    * `StoreManifest.vacuumStore(s, root, keepFrom = 2)` — the ANN store's
+    * pass: one atomic manifest prune, then deletes through the Hadoop
+    * FileSystem — and then reports per dir TAG: reference counts,
+    * live/vacuumed status (from what the vacuum actually deleted), and
+    * the row count from actually RE-READING the retained snapshot
+    * post-vacuum — so the result hash proves both halves at once (dead
+    * dirs identified correctly AND no live dir was harmed; a vacuum that
+    * deleted a shared bucket would fail the re-read).
     *
-    * Scale: the reference-count diff runs on the MANIFEST (file-count
-    * rows, the metadata plane — Delta does this exact anti-join); the
-    * physical deletes are per-file storage calls fanned out from that
-    * list, never a data-plane scan. Tags, not paths, appear in the
-    * output, so the oracle is layout-independent.
+    * Scale: the reference counts and the dead set come from the MANIFEST
+    * (file-count rows, the metadata plane, no Spark job — Delta does
+    * this exact diff); the physical deletes are per-dir storage calls
+    * fanned out from that list, never a data-plane scan. Tags, not
+    * paths, appear in the output (`base_k`/`rw_k` per bucket, `ins` for
+    * the unbucketed insert component), so the oracle is
+    * layout-independent.
     *
-    * `VacuumSpec` pins the physical contract: dead files ABSENT on disk,
-    * `asOf(2)` still readable and equal to the merge result, `asOf(1)`
-    * no longer materializable.
+    * `VacuumSpec` pins the physical contract: dead dirs ABSENT on disk,
+    * live dirs present, and the retained snapshot's rows equal to v2's.
     */
-  def vacuumManifestDir(d: String): String = leaf(d, "vac_manifest")
-
   val vacuum = Q(
     "q168_vacuum",
     (s, d) => {
-      val base = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("text"),
-          (col("doc_id") % 4).as("bucket"))
-      val updates = base.where(col("doc_id") % 10 === 0)
-        .withColumn("text", upper(col("text")))
-      val inserts = base.where(col("doc_id") % 7 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-      val touched: Seq[Long] = Seq(0L, 2L) // multiples of 10 mod 4 ∈ {0, 2}
-
-      // One partitioned write per commit instead of one filtered rescan
-      // per bucket file — q170's commit discipline (optimization r17;
-      // see q143/q155). Data files keep the same columns; the bucket is
-      // the directory name.
-      val baseRoot = leaf(d, "vac_base")
-      base.withColumn("pb", col("bucket")).drop("bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(baseRoot)
-      requireBucketDirs(s, baseRoot, 0L until 4L)
-      val baseFiles = (0L until 4L).map(k => s"base_$k" -> s"$baseRoot/pb=$k").toMap
-      val rwRoot = leaf(d, "vac_rw")
-      base.where(col("bucket").isInCollection(touched) && col("doc_id") % 10 =!= 0)
-        .unionAll(updates.where(col("bucket").isInCollection(touched)))
-        .withColumn("pb", col("bucket")).drop("bucket")
-        .write.mode(SaveMode.Overwrite).partitionBy("pb").parquet(rwRoot)
-      requireBucketDirs(s, rwRoot, touched)
-      val rwFiles = touched.map(k => s"rw_$k" -> s"$rwRoot/pb=$k").toMap
-      val insFile = leaf(d, "vac_ins")
-      inserts.drop("bucket").write.mode(SaveMode.Overwrite).parquet(insFile)
-      val files = baseFiles ++ rwFiles + ("ins" -> insFile)
-
+      val root = leaf(d, "vac_store")
+      val (rows, schema) = docsStore(s, d, root)
+      val rep = StoreManifest.vacuumStore(s, root, keepFrom = 2L)
+      // Post-vacuum audit: the retained snapshot v2 holds one dir per
+      // cell, so ONE re-read of it grouped by cell counts every survivor
+      // (each is still physically re-read after the deletes, which is
+      // the audit).
+      val counts = StoreManifest.readStore(s, StoreManifest.asOf(s, root, 2L), schema)
+        .groupBy("cell").agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       import s.implicits._
-      val manifest =
-        (0L until 4L).map(k => (1L, s"base_$k")) ++
-          (0L until 4L).map(k => if (touched.contains(k)) (2L, s"rw_$k") else (2L, s"base_$k")) :+
-          ((2L, "ins"))
-      manifest.toDF("version", "tag")
-        .write.mode(SaveMode.Overwrite).parquet(vacuumManifestDir(d))
-
-      // Metadata-plane GC: reference counts over the manifest, retained
-      // version set = {2}. Bounded by FILE count — collect is the same
-      // planning-phase read every table format does.
-      val m = s.read.parquet(vacuumManifestDir(d))
-      val refs = m.groupBy("tag").agg(
-        count(lit(1)).as("n_refs_total"),
-        sum(when(col("version") >= 2L, 1L).otherwise(0L)).as("n_refs_retained"))
-        .collect()
-        .map(r => (r.getAs[String]("tag"), r.getAs[Long]("n_refs_total"),
-          r.getAs[Long]("n_refs_retained")))
-      val dead = refs.filter(_._3 == 0L).map(_._1)
-      dead.foreach { tag => // per-file storage deletes, fanned out from the diff
-        // Delta VACUUM's error surfacing: a file the store cannot remove
-        // must fail the command loudly — reporting it 'vacuumed' while it
-        // still exists on disk would corrupt every later retention audit.
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          if (!f.delete() && f.exists())
-            throw new java.io.IOException(s"vacuum failed to delete $f")
-        }
-        rm(new java.io.File(files(tag)))
-      }
-      // Post-vacuum audit: re-read every surviving file for its count —
-      // as ONE tag-labelled union job, not one count() job per survivor
-      // (optimization r17: 5 scan jobs → 1; each file is still
-      // physically re-read after the deletes, which is the audit).
-      val counts: Map[String, Long] = refs
-        .collect { case (tag, _, retained) if retained > 0 => tag }
-        .map(tag => s.read.parquet(files(tag)).select(lit(tag).as("tag")))
-        // reduceOption (ADVICE r17): an empty survivor set (a retention
-        // constant change could produce one) must yield an empty audit,
-        // not an UnsupportedOperationException from reduce on Nil
-        .reduceOption(_ unionAll _)
-        .map(_.groupBy("tag").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-        .getOrElse(Map.empty)
-      refs.toSeq.map { case (tag, total, retained) =>
-        (tag, total, retained,
-          if (retained > 0) "live" else "vacuumed",
-          counts.getOrElse(tag, 0L))
+      rows.groupBy(r => (r._2, r._3)).toSeq.map { case ((k, p), refs) =>
+        val comp = StoreManifest.component(p)
+        val dead = rep.deleted.contains(p)
+        (if (k < 0) comp else s"${comp}_$k", refs.size.toLong,
+          refs.count(_._1 >= 2L).toLong, if (dead) "vacuumed" else "live",
+          if (dead) 0L else counts.getOrElse(k, 0L))
       }.toDF("tag", "n_refs_total", "n_refs_retained", "status", "n_rows")
     },
     Some("""WITH c AS (

@@ -19,6 +19,7 @@ class AnnServeLiveSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
+  private val SM = sources.StoreManifest
 
   private lazy val (res, trail) = S.streamServeLive(spark, d, S.IvfTier, nFiles = 4)
   private lazy val rows = res.collect()
@@ -50,7 +51,7 @@ class AnnServeLiveSpec extends AnyFunSuite {
       val probeIds = served.map(_._1).toSet
       val replay = S.ivfRank(
         probes.where(col("vec_id").isin(probeIds.toSeq: _*)),
-        S.readStore(spark, graft.sources.StoreManifest.asOf(spark, root, v)))
+        SM.readStore(spark, SM.asOf(spark, root, v), S.IvfTier.schema))
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).sortBy(key)
       assert(served.sameElements(replay),
@@ -65,7 +66,7 @@ class AnnServeLiveSpec extends AnyFunSuite {
       S.ivfCents(spark, d, maxId = d0)))
     val root = rows.head.getAs[String]("store_root")
     val oneShot = S.ivfRank(probes,
-      S.readStore(spark, graft.sources.StoreManifest.asOf(spark, root, 4L)))
+      SM.readStore(spark, SM.asOf(spark, root, 4L), S.IvfTier.schema))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .sortBy(key)
     val streamed = rows.map(r =>

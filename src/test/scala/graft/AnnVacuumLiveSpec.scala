@@ -19,6 +19,7 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
+  private val SM = sources.StoreManifest
 
   private lazy val (res, trail, rep) = S.streamServeLiveVacuum(spark, d, nFiles = 4)
   private lazy val rows = res.collect()
@@ -42,7 +43,7 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
       S.vectors(spark, d).where(col("vec_id") < 8),
       S.ivfCents(spark, d, maxId = d0)))
     val oneShot = S.ivfRank(probes,
-      S.readStore(spark, graft.sources.StoreManifest.asOf(spark, root, 4L)))
+      SM.readStore(spark, SM.asOf(spark, root, 4L), S.IvfTier.schema))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .sortBy(key)
     val streamed = rows.map(r =>
@@ -71,7 +72,7 @@ class AnnVacuumLiveSpec extends AnyFunSuite {
         } catch { case t: Throwable => errs.add(t); () }
       })
     reader.start()
-    val rep2 = S.vacuumStore(spark, st.root, keepFrom = 4L)
+    val rep2 = SM.vacuumStore(spark, st.root, keepFrom = 4L)
     stop.set(true); reader.join(60000)
     import scala.jdk.CollectionConverters._
     assert(errs.isEmpty,

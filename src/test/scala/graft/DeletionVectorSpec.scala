@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.{col, expr}
 
 /** q170 contract — merge-on-read delete must actually be merge-on-READ:
   *   (a) the deletion-vector commit (v2) rewrites NO data file — every
-  *       v2 data path IS the corresponding v1 path, and no data part
+  *       v2 data dir IS the corresponding v1 dir, and no data part
   *       file was modified after the tombstone sidecar was written;
   *   (b) maintenance compacts exactly the bucket whose tombstone
   *       fraction crossed the threshold (bucket 5), clearing its vector,
@@ -22,12 +22,13 @@ class DeletionVectorSpec extends AnyFunSuite {
   private lazy val result =
     SparkEntry.queries("q170_deletion_vector_delete")(spark, d).collect()
 
+  // (version, kind, bucket, dir): tombstone sidecars are the dv_ components
   private lazy val manifest = {
     result // force the commit
-    spark.read.parquet(sources.Sources.dvManifestDir(d))
-      .collect()
-      .map(r => (r.getAs[Long]("version"), r.getAs[String]("kind"),
-        r.getAs[Long]("bucket"), r.getAs[String]("path")))
+    sources.StoreManifest.readRows(spark, sources.Sources.scratchLeaf(d, "dv_store"))
+      .map { case (v, k, p) =>
+        (v, if (sources.StoreManifest.component(p).startsWith("dv_")) "dv" else "data", k, p)
+      }
   }
 
   private def dataPaths(v: Long): Map[Long, String] =
@@ -41,8 +42,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     val v1 = dataPaths(1L); val v2 = dataPaths(2L)
     assert(v1 === v2, "v2 data layout diverged from v1 — that's copy-on-write")
     // temporal proof: every data part file predates the tombstone sidecar
-    val dvPath = manifest.collect { case (2L, "dv", _, p) => p }.head
-    val dvBorn = partFiles(dvPath).map(_.lastModified()).min
+    val dvBorn = manifest.collect { case (2L, "dv", _, p) => p }
+      .flatMap(partFiles).map(_.lastModified()).min
     v2.values.flatMap(partFiles).foreach { f =>
       assert(f.lastModified() <= dvBorn,
         s"data file $f modified after the deletion-vector commit")
@@ -56,9 +57,7 @@ class DeletionVectorSpec extends AnyFunSuite {
       assert(v3(k) === v1(k), s"bucket $k was rewritten without cause")
     }
     // bucket 5's tombstones are cleared; bucket 6 still rides its vector
-    val dv3 = manifest.collect { case (3L, "dv", _, p) => p }.head
-    val dv3Buckets = spark.read.parquet(dv3).select("bucket")
-      .distinct().collect().map(_.getLong(0)).toSet
+    val dv3Buckets = manifest.collect { case (3L, "dv", k, p) if partFiles(p).nonEmpty => k }.toSet
     assert(!dv3Buckets.contains(5L), "compacted bucket still has tombstones")
     assert(dv3Buckets.contains(6L), "under-threshold bucket lost its vector")
   }

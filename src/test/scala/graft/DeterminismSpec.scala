@@ -78,7 +78,14 @@ class DeterminismSpec extends AnyFunSuite {
   // round-17 late additions: q354's TopK(20) candidate cut + rank-5
   // rerank boundary, q355's per-(nprobe, probe) TopK(5) cuts — both ride
   // bounded typed aggregators whose merge order the layouts vary
-  for (q <- Seq("q217_mode", "q222_argmax", "q229_consistent_sample",
+  // the table-format store fixtures on StoreManifest: q143's and q155's
+  // manifest views, q168's tag report built from manifest rows and its
+  // vacuum's directory walk, q170's tombstone components and compaction
+  // decision — file listings turned into manifest rows, the
+  // order-sensitive class this matrix exists for
+  for (q <- Seq("q143_time_travel", "q155_gdpr_delete", "q168_vacuum",
+      "q170_deletion_vector_delete",
+      "q217_mode", "q222_argmax", "q229_consistent_sample",
       "q230_weighted_median", "q236_intersect_all",
       "q297_containment_dedup", "q302_cusum_changepoint",
       "q305_quantile_norm", "q307_mutual_knn",

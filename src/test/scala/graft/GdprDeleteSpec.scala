@@ -29,11 +29,8 @@ class GdprDeleteSpec extends AnyFunSuite {
 
   test("manifest shares untouched bucket files across versions") {
     assert(out.nonEmpty) // force the query: it commits the manifest
-    val m = spark.read.parquet(sources.Sources.gdprManifestDir(d))
-      .collect()
-      .map(r => (r.getAs[Long]("version"), r.getAs[Long]("bucket")) ->
-        r.getAs[String]("path"))
-      .toMap
+    val m = sources.StoreManifest.readRows(spark, sources.Sources.scratchLeaf(d, "gdpr_store"))
+      .map { case (v, k, p) => (v, k) -> p }.toMap
     for (k <- 0L until 8L) {
       if (k == 5L || k == 6L)
         assert(m((1L, k)) != m((2L, k)), s"touched bucket $k not rewritten")

@@ -20,6 +20,7 @@ class IvfCompactSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
+  private val SM = sources.StoreManifest
 
   private lazy val st = S.compactStore(spark, d, S.IvfTier)
 
@@ -60,7 +61,7 @@ class IvfCompactSpec extends AnyFunSuite {
 
   test("q343: store content is row-set invariant across the compaction boundary") {
     def rows(m: Map[Long, Seq[String]]) =
-      S.readStore(spark, m).select("cell", "vec_id").collect()
+      SM.readStore(spark, m, S.IvfTier.schema).select("cell", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(rows(st.v3) == rows(st.v4), "compaction changed the store's row set")
   }

@@ -20,11 +20,12 @@ class IvfVacuumSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
+  private val SM = sources.StoreManifest
 
   private lazy val st = S.compactStore(spark, d, S.IvfTier, privateBase = true)
 
   private def v4Rows(m: Map[Long, Seq[String]]): Seq[(Long, Long)] =
-    S.readStore(spark, m).select("cell", "vec_id").collect()
+    SM.readStore(spark, m, S.IvfTier.schema).select("cell", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
   test("q345: vacuum deletes exactly the below-floor-only dirs and spares every v4 dir") {
@@ -32,7 +33,7 @@ class IvfVacuumSpec extends AnyFunSuite {
     val v4Live = st.v4.values.flatten.toSet
     val belowOnly = (st.v3.values.flatten.toSet -- v4Live).toSeq.sorted
     assert(belowOnly.nonEmpty, "no retired dirs — fixture dead (no cell compacted?)")
-    val rep = S.vacuumStore(spark, st.root, keepFrom = 4L)
+    val rep = SM.vacuumStore(spark, st.root, keepFrom = 4L)
     assert(rep.deleted == belowOnly,
       s"vacuum deleted ${rep.deleted} but the retired set is $belowOnly")
     rep.deleted.foreach(p => assert(!new java.io.File(p).exists(), s"$p still on disk"))
@@ -53,7 +54,7 @@ class IvfVacuumSpec extends AnyFunSuite {
     // build a fresh private store so this test is independent of the
     // vacuum the shared handle's test already ran
     val st2 = S.compactStore(spark, d, S.IvfTier, privateBase = true)
-    val rep = S.vacuumStore(spark, st2.root, keepFrom = 4L)
+    val rep = SM.vacuumStore(spark, st2.root, keepFrom = 4L)
     st2.v3.keys.foreach { j =>
       val retired = st2.v3(j).filterNot(st2.v4(j).contains)
       if (st2.compacted(j))
@@ -69,7 +70,7 @@ class IvfVacuumSpec extends AnyFunSuite {
     val shared = S.compactStore(spark, d, S.IvfTier) // base = the per-corpus artifact
     val baseDirs = shared.v3.values.flatten.filterNot(_.startsWith(shared.root + "/")).toSeq
     assert(baseDirs.nonEmpty, "shared store has no out-of-root base dirs?")
-    val rep = S.vacuumStore(spark, shared.root, keepFrom = 4L)
+    val rep = SM.vacuumStore(spark, shared.root, keepFrom = 4L)
     assert(rep.deleted.forall(_.startsWith(shared.root + "/")),
       "vacuum deleted outside the store root")
     baseDirs.foreach(p => assert(new java.io.File(p).exists(),
@@ -78,10 +79,10 @@ class IvfVacuumSpec extends AnyFunSuite {
 
   test("q345: full retention deletes nothing; a floor above the newest version refuses") {
     val st2 = S.compactStore(spark, d, S.IvfTier, privateBase = true)
-    val rep = S.vacuumStore(spark, st2.root, keepFrom = 1L)
+    val rep = SM.vacuumStore(spark, st2.root, keepFrom = 1L)
     assert(rep.deleted.isEmpty && rep.prunedManifestRows == 0L)
     intercept[IllegalArgumentException] {
-      S.vacuumStore(spark, st2.root, keepFrom = 99L)
+      SM.vacuumStore(spark, st2.root, keepFrom = 99L)
     }
   }
 

@@ -21,6 +21,7 @@ class PqLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.Sf0001
   private val S = queries.Similarity
+  private val SM = sources.StoreManifest
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("probe_id", "neighbor_id", "cos_sim", "rnk").collect()
@@ -76,13 +77,13 @@ class PqLifecycleSpec extends AnyFunSuite {
     val st = S.compactStore(spark, d, S.PqTier, privateBase = true)
     val (_, probes) = frozenParts(st.d0)
     def serve() = rows(S.pqAdcRank(probes,
-      S.readStore(spark, graft.sources.StoreManifest.asOf(spark, st.root, 4L), Seq("codes")),
+      SM.readStore(spark, SM.asOf(spark, st.root, 4L), S.PqTier.schema),
       S.vectors(spark, d)))
     val before = serve()
     val v4Live = st.v4.values.flatten.toSet
     val belowOnly = (st.v3.values.flatten.toSet -- v4Live).toSeq.sorted
     assert(belowOnly.nonEmpty, "fixture dead: nothing to retire")
-    val rep = S.vacuumStore(spark, st.root, keepFrom = 4L)
+    val rep = SM.vacuumStore(spark, st.root, keepFrom = 4L)
     assert(rep.deleted == belowOnly,
       s"vacuum deleted ${rep.deleted}, retired set is $belowOnly")
     v4Live.foreach(p => assert(new java.io.File(p).exists(), s"live dir $p deleted"))
@@ -110,7 +111,7 @@ class PqLifecycleSpec extends AnyFunSuite {
       val probeIds = served.map(_._1).toSet
       val replay = rows(S.pqAdcRank(
         probes.where(col("vec_id").isin(probeIds.toSeq: _*)),
-        S.readStore(spark, graft.sources.StoreManifest.asOf(spark, root, v), Seq("codes")),
+        SM.readStore(spark, SM.asOf(spark, root, v), S.PqTier.schema),
         S.vectors(spark, d)))
       assert(served == replay,
         s"batch $bid (version $v): mid-stream ADC result diverged from a pinned v$v replay")

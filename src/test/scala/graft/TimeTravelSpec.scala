@@ -43,16 +43,16 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(v2.size == base.length + base.count(_._1 % 7 == 0))
 
     // copy-on-write file sharing: untouched buckets (1, 3) keep their v1
-    // files in the v2 manifest; touched buckets (0, 2) got new paths, and
-    // v2 adds exactly one extra file (the inserts)
-    val manifest = spark.read.parquet(sources.Sources.timeTravelManifestDir(d))
-      .collect().map(r => r.getAs[Long]("version") -> r.getAs[String]("path"))
-    val (p1, p2) = (manifest.collect { case (1L, p) => p }.toSet,
-      manifest.collect { case (2L, p) => p }.toSet)
+    // dirs in the v2 manifest; touched buckets (0, 2) got new dirs, and
+    // v2 adds exactly one extra component (the inserts)
+    val manifest = sources.StoreManifest.readRows(spark, sources.Sources.scratchLeaf(d, "tt_store"))
+    val (p1, p2) = (manifest.collect { case (1L, _, p) => p }.toSet,
+      manifest.collect { case (2L, _, p) => p }.toSet)
     val shared = p1 intersect p2
-    assert(shared.size == 2, s"expected 2 shared bucket files, got $shared")
-    assert(shared.forall(p => p.contains("tt_base") &&
-      (p.endsWith("pb=1") || p.endsWith("pb=3"))))
-    assert(p2.size == p1.size + 1, "v2 should add exactly the insert file")
+    assert(shared.size == 2, s"expected 2 shared bucket dirs, got $shared")
+    assert(shared.forall(p => sources.StoreManifest.component(p) == "base" &&
+      (p.endsWith("cell=1") || p.endsWith("cell=3"))))
+    assert(p2.size == p1.size + 1, "v2 should add exactly the insert component")
+    assert((p2 -- p1).map(sources.StoreManifest.component) == Set("rw", "ins"))
   }
 }

@@ -41,15 +41,13 @@ class VacuumSpec extends AnyFunSuite {
 
     // Physical deletion: the vacuumed parquet dirs are absent on disk,
     // so materializing v1 is impossible (the retention contract).
-    val vacBase = graft.sources.Sources.scratchLeaf(TestSpark.Sf0001, "vac_base")
-    val vacRw = graft.sources.Sources.scratchLeaf(TestSpark.Sf0001, "vac_rw")
-    val deadDirs = Seq(s"$vacBase/pb=0", s"$vacBase/pb=2")
+    val root = graft.sources.Sources.scratchLeaf(TestSpark.Sf0001, "vac_store")
+    val deadDirs = Seq(s"$root/base/cell=0", s"$root/base/cell=2")
     deadDirs.foreach { p =>
       assert(!new java.io.File(p).exists(), s"$p should have been deleted")
     }
-    val liveDirs = Seq(s"$vacBase/pb=1", s"$vacBase/pb=3",
-      s"$vacRw/pb=0", s"$vacRw/pb=2",
-      graft.sources.Sources.scratchLeaf(TestSpark.Sf0001, "vac_ins"))
+    val liveDirs = Seq(s"$root/base/cell=1", s"$root/base/cell=3",
+      s"$root/rw/cell=0", s"$root/rw/cell=2", s"$root/ins/cell=-1")
     liveDirs.foreach { p =>
       assert(new java.io.File(p).exists(), s"$p should have survived")
     }
