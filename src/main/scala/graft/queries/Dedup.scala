@@ -166,10 +166,9 @@ object Dedup {
     */
   private[graft] def minhashPairsArtifact(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(graft.sources.Sources.artifactOnce(d, "minhash_pairs_shared") { p =>
-      minhashLsh.fn(s, d).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    })
+    graft.sources.Sources.artifactOnce(d, "minhash_pairs_shared") { p =>
+      graft.sources.Sources.write(minhashLsh.fn(s, d), p)
+    }.read(s)
 
   /** Shingle → signature → band-key CTE prefix, shared by the q23/q70
     * oracles and q99's delta-vs-base variant.
@@ -308,10 +307,9 @@ object Dedup {
     */
   private def simhashSigArtifact(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(graft.sources.Sources.artifactOnce(d, "simhash_sig_shared") { p =>
-      simhashSig(s, d).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    })
+    graft.sources.Sources.artifactOnce(d, "simhash_sig_shared") { p =>
+      graft.sources.Sources.write(simhashSig(s, d), p)
+    }.read(s)
 
   /** q83 — SimHash NEAR-DUP PAIRS, completing the SimHash family from
     * signature (q25) to detector: candidates come from BANDING the
@@ -839,9 +837,11 @@ object Dedup {
 
   /** q99 — APPEND-MODE INCREMENTAL near-dedup against a MATERIALIZED
     * signature index: the daily-crawl contract, two batches deep. The
-    * base corpus (80% of docs) has its LSH band table built ONCE and
-    * written as the persistent signature store; the build is skipped when
-    * the store already exists (its `_SUCCESS` marker), so repeated
+    * base corpus (80% of docs) has its LSH band table built ONCE per
+    * corpus snapshot and written as the persistent signature store
+    * (`Sources.artifactOnce`: keyed by the dataset fingerprint, so a
+    * corpus rewritten in place rebuilds the index instead of serving the
+    * stale one, and built under a single-writer lock), so repeated
     * executions — bench reps — time only the incremental path, which is
     * the operator's actual contract. Then two successive delta batches
     * run inside one query:
@@ -892,13 +892,9 @@ object Dedup {
       def bands(pred: org.apache.spark.sql.Column) =
         rowLocalBands(docs.where(pred)).select("doc_id", "n", "bk")
 
-      val store = graft.sources.Sources.scratchLeaf(d, "minhash_index_base")
-      val success = new org.apache.hadoop.fs.Path(store, "_SUCCESS")
-      val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(success))
-        bands(!isBatch1 && !isBatch2)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val baseBands = s.read.parquet(store)
+      val baseBands = graft.sources.Sources.artifactOnce(d, "minhash_index_base") { p =>
+        graft.sources.Sources.write(bands(!isBatch1 && !isBatch2), p)
+      }.read(s)
 
       // band-collision candidates of one batch against the stored index,
       // exact-verified on the STORED per-doc gram-id index
@@ -931,23 +927,18 @@ object Dedup {
       // the output union) across SEPARATE actions, where exchange reuse
       // can't help — materialize it ONCE to scratch and let both read the
       // parquet back (an O(pairs) file, tiny next to the verify work it
-      // saves re-running). Schema is passed explicitly on read: an empty
-      // pairs1 (no batch-1 near-dups) may write zero part files.
-      val pairs1Computed = verifiedPairs(b1Bands, baseBands)
-      val pairs1Path = graft.sources.Sources.scratchLeaf(d, "minhash_pairs1")
-      pairs1Computed.write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(pairs1Path)
-      val pairs1 = s.read.schema(pairs1Computed.schema).parquet(pairs1Path)
+      // saves re-running).
+      val pairs1 = graft.sources.Sources.write(verifiedPairs(b1Bands, baseBands),
+        graft.sources.Sources.scratchLeaf(d, "minhash_pairs1")).read(s)
       // append accepted batch-1 bands to the store (an increment file —
       // O(delta), written fresh per execution because it IS the per-batch
       // work being measured, unlike the immutable base build above)
-      val inc1 = graft.sources.Sources.scratchLeaf(d, "minhash_index_inc1")
-      b1Bands
-        .join(pairs1.select(col("dn").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(inc1)
+      val inc1 = graft.sources.Sources.write(b1Bands
+        .join(pairs1.select(col("dn").as("doc_id")).distinct(), Seq("doc_id"), "left_anti"),
+        graft.sources.Sources.scratchLeaf(d, "minhash_index_inc1"))
 
       val b2Bands = bands(isBatch2)
-      val pairs2 = verifiedPairs(b2Bands, baseBands.union(s.read.parquet(inc1)))
+      val pairs2 = verifiedPairs(b2Bands, baseBands.union(inc1.read(s)))
 
       pairs1.select(lit(1L).as("batch"), col("dn").as("doc_new"),
           col("db").as("doc_base"), col("jaccard"))
@@ -1210,11 +1201,10 @@ object Dedup {
     */
   private[graft] def prefixArrArtifact(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(graft.sources.Sources.artifactOnce(d, "prefix_arr_shared") { p =>
+    graft.sources.Sources.artifactOnce(d, "prefix_arr_shared") { p =>
       val tok = TextFns.wordGrams(Tables.documents(s, d), GramsN)
         .select(col("doc_id"), col("g").as("w"))
-      prefixArr(tok)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
+      val arr = graft.sources.Sources.write(prefixArr(tok), p)
       // Build-time audit (ADVICE r14): the collision class that would
       // silently diverge Spark's long-id intersect from the DuckDB
       // oracle's string intersect is two DIFFERENT grams sharing one
@@ -1231,7 +1221,8 @@ object Dedup {
         .where(col("n") > 1).count()
       require(coll == 0L,
         s"$coll gram-id values map to >1 gram string — 60-bit id collision")
-    })
+      arr
+    }.read(s)
 
   val prefixSimilarityJoin = Q(
     "q151_prefix_sim_join",

@@ -170,20 +170,22 @@ object EventWindows {
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val out = graft.sources.Sources.scratchLeaf(d, s"stream_file_sink_$runId")
       val chk = graft.sources.Sources.scratchLeaf(d, s"stream_file_sink_chk_$runId")
+      val windows = Tables.eventStream(s, d)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
+        .select(col("window.start").as("wstart"), col("window.end").as("wend"),
+          col("event_type"), col("n"), col("sum_value"))
       withStreamPartitions(s)(drain(s)(
-        Tables.eventStream(s, d)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
-          .select(col("window.start").as("wstart"), col("window.end").as("wend"),
-            col("event_type"), col("n"), col("sum_value"))
-          .writeStream.format("parquet")
+        windows.writeStream.format("parquet")
           .option("path", out)
           .option("checkpointLocation", chk)
           .outputMode("append")))
       val cutoff = Tables.events(s, d)
         .agg((max(col("ts")) - expr("INTERVAL 1 HOUR")).as("closed_before"))
-      s.read.parquet(out)
+      // the sink is the stream's own output, so it reads back with the
+      // stream's schema
+      graft.sources.Sources.Written(out, windows.schema).read(s)
         .crossJoin(cutoff)
         .where(col("wend") <= col("closed_before"))
         .select(col("wstart"), col("event_type"), col("n"), col("sum_value"))
@@ -960,10 +962,8 @@ object EventWindows {
       // make every later run (bench reps!) an empty no-op stream
       val runId = java.util.UUID.randomUUID().toString.take(8)
       val storeRoot = graft.sources.Sources.scratchLeaf(d, s"upsert_store_$runId")
-      val ev = Tables.events(s, d)
-        .select("event_id", "user_id", "ts", "event_type", "value")
-      ev.repartition(8).write.mode("overwrite").parquet(src)
-      val schema = s.read.parquet(src).schema
+      val staged = graft.sources.Sources.write(Tables.events(s, d)
+        .select("event_id", "user_id", "ts", "event_type", "value").repartition(8), src)
 
       def latest(df: org.apache.spark.sql.DataFrame) = df
         .groupBy("user_id")
@@ -972,25 +972,26 @@ object EventWindows {
         .select(col("user_id"), col("r.ts").as("ts"), col("r.event_id").as("event_id"),
           col("r.event_type").as("event_type"), col("r.value").as("value"))
 
+      // every merged version goes through the scratch write, so the next
+      // batch reads it back with a known schema
       var version = 0
+      var store: Option[graft.sources.Sources.Written] = None
       val mergeBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
         (batch, _) => {
           val ses = batch.sparkSession
           val delta = latest(batch.toDF())
-          val merged =
-            if (version == 0) delta
-            else latest(ses.read.parquet(s"$storeRoot/v$version").unionAll(delta))
-          merged.write.mode("overwrite").parquet(s"$storeRoot/v${version + 1}")
+          val merged = store.fold(delta)(v => latest(v.read(ses).unionAll(delta)))
+          store = Some(graft.sources.Sources.write(merged, s"$storeRoot/v${version + 1}"))
           version += 1
         }
       withStreamPartitions(s)(drain(s)(
-        s.readStream.schema(schema)
+        s.readStream.schema(staged.schema)
           .option("maxFilesPerTrigger", "2").parquet(src)
           .writeStream.foreachBatch(mergeBatch)
           .option("checkpointLocation",
             graft.sources.Sources.scratchLeaf(d, s"upsert_chk_$runId"))))
       require(version >= 2, s"expected multiple micro-batches, got $version")
-      s.read.parquet(s"$storeRoot/v$version")
+      store.get.read(s)
         .select(col("user_id"), col("ts").as("last_ts"),
           col("event_type").as("last_type"), col("value").as("last_value"))
     },

@@ -786,7 +786,7 @@ object Multimodal {
     (s, d) => {
       import s.implicits._
       val out = graft.sources.Sources.scratchLeaf(d, "png_files")
-      new java.io.File(out).mkdirs()
+      graft.sources.StoreManifest.hfs(s, out).mkdirs(new org.apache.hadoop.fs.Path(out))
       // the DRIVER's Hadoop conf, broadcast to the executors: a bare
       // `new Configuration()` executor-side would drop every
       // spark.hadoop.* session setting (s3a credentials, endpoints), so
@@ -1151,10 +1151,9 @@ object Multimodal {
       // a lazily-returned DataFrame can never be unpersisted by this
       // function, so it would leak executor storage for the rest of the
       // session across a 180-query bench run.
-      val energies = s.read.parquet(
-        graft.sources.Sources.artifactOnce(d, "vad_energies") { p =>
-          energiesRaw.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-        })
+      val energies = graft.sources.Sources.artifactOnce(d, "vad_energies") { p =>
+        graft.sources.Sources.write(energiesRaw, p)
+      }.read(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy("f")
       val segs = energies.where(col("energy") >= VadThreshold)

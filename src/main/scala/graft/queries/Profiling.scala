@@ -137,10 +137,9 @@ object Profiling {
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("total_tokens"))
       val docs = Tables.documents(s, d)
-      val out = _root_.graft.sources.Sources.scratchLeaf(d, "stats_base")
-      partials(docs.where(col("doc_id") % 10 =!= 0))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-      val base = s.read.parquet(out)
+      val base = _root_.graft.sources.Sources.write(
+        partials(docs.where(col("doc_id") % 10 =!= 0)),
+        _root_.graft.sources.Sources.scratchLeaf(d, "stats_base")).read(s)
       base.unionAll(partials(docs.where(col("doc_id") % 10 === 0)))
         .groupBy("source")
         .agg(sum("n_docs").as("n_docs"), sum("total_tokens").as("total_tokens"))

@@ -1033,11 +1033,9 @@ object Relational2 {
         "spark.sql.variant.inferShreddingSchema" -> "true",
         "spark.sql.variant.allowReadingShredded" -> "true",
         "spark.sql.variant.pushVariantIntoScan" -> "true")
-      val store = graft.sources.Sources.scratchLeaf(d, "variant_store")
-      Tables.events(s, d)
-        .select(col("event_type"), parse_json(col("props")).as("v"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      s.read.parquet(store)
+      graft.sources.Sources.write(Tables.events(s, d)
+          .select(col("event_type"), parse_json(col("props")).as("v")),
+        graft.sources.Sources.scratchLeaf(d, "variant_store")).read(s)
         .select(col("event_type"),
           expr("variant_get(v, '$.k', 'bigint')").as("k"),
           expr("to_json(v)").as("rt"))
@@ -2124,15 +2122,14 @@ object Relational2 {
   val timestampNtz = Q(
     "q234_timestamp_ntz",
     (s0, d) => {
-      val store = graft.sources.Sources.scratchLeaf(d, "ntz_store")
       val sUtc = child(s0, "spark.sql.session.timeZone" -> "UTC")
-      Tables.events(sUtc, d)
+      val store = graft.sources.Sources.write(Tables.events(sUtc, d)
         .select(col("event_id"), col("event_type"), col("ts"),
           col("ts").cast("timestamp_ntz").as("tsn"),
-          hour(col("ts")).as("h_utc"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
+          hour(col("ts")).as("h_utc")),
+        graft.sources.Sources.scratchLeaf(d, "ntz_store"))
       val sNy = child(s0, "spark.sql.session.timeZone" -> "America/New_York")
-      sNy.read.parquet(store)
+      store.read(sNy)
         .select(col("event_type"), col("h_utc"),
           hour(col("ts")).as("h_ny"), hour(col("tsn")).as("h_ntz"))
         .groupBy("event_type")
@@ -2606,10 +2603,8 @@ object Relational2 {
     "q266_rebalance_write",
     (s0, d) => {
       val s = rebalanceSession(s0)
-      val out = graft.sources.Sources.scratchLeaf(d, "rebalanced_events")
-      rebalanced(s, d).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
-      s.read.parquet(out)
+      graft.sources.Sources.write(rebalanced(s, d),
+        graft.sources.Sources.scratchLeaf(d, "rebalanced_events")).read(s)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), dsum2(col("value")).as("sum_value"))
     },
@@ -2935,19 +2930,17 @@ object Relational2 {
   // Two-path artifact through Sources.artifactOnce (fingerprint-keyed,
   // single-writer): the L2 store is the memoized root and the pruned
   // items2 store hangs off it as a sibling dir — both build in the one
-  // locked `build` call, so consumers can never observe one without the
-  // other.
+  // locked `build` call and memoize together, so consumers can never
+  // observe one without the other.
   private def aprioriArtifacts(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val pL2 = graft.sources.Sources.artifactOnce(d, "apriori_l2") { a =>
+    val (l2, it2) = graft.sources.Sources.artifactOnce(d, "apriori_l2") { a =>
       val items = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
-      Apriori.l2(items)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(a)
-      Apriori.items2(items, s.read.parquet(a))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(a + "_items2")
+      val l2 = graft.sources.Sources.write(Apriori.l2(items), a)
+      (l2, graft.sources.Sources.write(Apriori.items2(items, l2.read(s)), a + "_items2"))
     }
-    (s.read.parquet(pL2), s.read.parquet(pL2 + "_items2"))
+    (l2.read(s), it2.read(s))
   }
 
   val aprioriTriples = Q(

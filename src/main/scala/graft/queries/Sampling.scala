@@ -378,22 +378,20 @@ object Sampling {
             .when(col("bucket") < 95, "val")
             .otherwise("test").as("split"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        base.where(col("split") === "train")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outTrain)
-        base.where(col("split") =!= "train")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outEval)
+      val (train, eval) = try {
+        (graft.sources.Sources.write(base.where(col("split") === "train"), outTrain),
+          graft.sources.Sources.write(base.where(col("split") =!= "train"), outEval))
       } finally {
         base.unpersist()
         ()
       }
-      val audit = (tag: String, path: String) =>
-        s.read.parquet(path).agg(
+      val audit = (tag: String, w: graft.sources.Sources.Written) =>
+        w.read(s).agg(
           lit(tag).as("artifact"),
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"))
           .select("artifact", "n_docs", "sum_chars")
-      audit("train", outTrain).unionAll(audit("eval", outEval))
+      audit("train", train).unionAll(audit("eval", eval))
     },
     Some(s"""WITH s AS (SELECT n_chars, ${sqlSplitCase("doc_id")} AS split
                         FROM documents)

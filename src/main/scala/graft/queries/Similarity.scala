@@ -476,11 +476,9 @@ object Similarity {
       // unlike persist(), nothing is left in the cache to leak across
       // benchmark reruns in one JVM
       val ev = ivfWithCells(s, d, ivfCents(s, d))
-      val out = graft.sources.Sources.scratchLeaf(d, "ivf_inverted_file")
-      ev.select(col("vec_id"), col("v"), element_at(col("cells"), 1)("j").as("cell"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(out)
-      val inv = s.read.parquet(out)
+      val inv = graft.sources.Sources.write(
+        ev.select(col("vec_id"), col("v"), element_at(col("cells"), 1)("j").as("cell")),
+        graft.sources.Sources.scratchLeaf(d, "ivf_inverted_file"), "cell").read(s)
       ivfRank(ivfProbes(ev), inv)
     },
     annIvf.oracle // identical semantics: the inverted file is q63, materialized
@@ -566,8 +564,8 @@ object Similarity {
     // different cuts must build two artifacts, not silently share the
     // first caller's — the invariant is structural, not call-site luck
     graft.sources.Sources.artifactOnce(d, s"${tier.tag}_delta_base_$d0") { p =>
-      tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = false))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(p)
+      graft.sources.Sources.write(
+        tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = false)), p, "cell").path
     }
 
   /** The q341/q349 body: land the delta slice, encoded by the tier, as a
@@ -579,10 +577,10 @@ object Similarity {
   private def deltaAppend(s: SparkSession, d: String, tier: ServeTier): DataFrame = {
     val d0 = deltaCut(s, d)
     val base = baseStore(s, d, d0, tier)
-    val inc = graft.sources.Sources.scratchLeaf(d,
-      s"${tier.tag}_delta_inc_${java.util.UUID.randomUUID().toString.take(8)}")
-    tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = true))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(inc)
+    val inc = graft.sources.Sources.write(
+      tier.encode(s, d, d0, deltaAssign(s, d, d0, delta = true)),
+      graft.sources.Sources.scratchLeaf(d,
+        s"${tier.tag}_delta_inc_${java.util.UUID.randomUUID().toString.take(8)}"), "cell").path
     tier.rank(s, d, tier.probes(s, d, d0),
       readComponent(s, base, tier.schema).unionByName(readComponent(s, inc, tier.schema)))
   }
@@ -739,9 +737,8 @@ object Similarity {
     def landWave(sub: String, lo: Long, hi: Long, dest: String): Unit = {
       val shared = graft.sources.Sources.artifactOnce(
         d, s"${tier.tag}_inc_${sub}_${d0}_$dMid") { p =>
-        tier.encode(s, d, d0, waveAssign(s, d, d0, lo, hi))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cell").parquet(p)
+        graft.sources.Sources.write(
+          tier.encode(s, d, d0, waveAssign(s, d, d0, lo, hi)), p, "cell").path
       }
       copyUnderRoot(shared, dest)
     }
@@ -801,9 +798,8 @@ object Similarity {
     val cDirs =
       if (compacted.isEmpty) Map.empty[Long, String]
       else {
-        readStore(s, v3.filter(kv => compacted(kv._1)), tier.schema)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("cell").parquet(compactDir)
+        graft.sources.Sources.write(
+          readStore(s, v3.filter(kv => compacted(kv._1)), tier.schema), compactDir, "cell")
         cellDirs(s, compactDir)
       }
     val v4 = cells.map(j =>
@@ -949,7 +945,7 @@ object Similarity {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def leaf(kind: String) = graft.sources.Sources.scratchLeaf(d, s"${name}_${kind}_$runId")
     val src = leaf("src"); val sink = leaf("out")
-    probes.repartition(nFiles, col("vec_id")).write.mode(SaveMode.Overwrite).parquet(src)
+    val staged = graft.sources.Sources.write(probes.repartition(nFiles, col("vec_id")), src)
     val fs = StoreManifest.hfs(s, src)
     val t0 = System.currentTimeMillis()
     fs.listStatus(new org.apache.hadoop.fs.Path(src)).map(_.getPath)
@@ -973,7 +969,7 @@ object Similarity {
     // the staged files and the sink hold the probes' and the step's
     // schemas, so neither read infers one
     StreamFixture.drain(s)(
-      s.readStream.schema(probes.schema).option("maxFilesPerTrigger", "1").parquet(src)
+      s.readStream.schema(staged.schema).option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream.foreachBatch(serve).option("checkpointLocation", leaf("chk")))
     require(nFiles < 2 || trail.size >= 2,
       s"expected multiple serving micro-batches, got ${trail.size}")
@@ -1007,8 +1003,7 @@ object Similarity {
     val d0 = deltaCut(s, d)
     val base = baseStore(s, d, d0, IvfTier)
     val inc = graft.sources.Sources.artifactOnce(d, "ivf_inc_shared") { p =>
-      deltaAssign(s, d, d0, delta = true)
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(p)
+      graft.sources.Sources.write(deltaAssign(s, d, d0, delta = true), p, "cell").path
     }
     val (res, trail) = serveLoop(s, d, "ivf_serve", nFiles, IvfTier.probes(s, d, d0)) {
       (ss, local, cells, _) => (serveBatch(ss, d, IvfTier, local, Seq(base, inc), cells), 0L)
@@ -1949,11 +1944,8 @@ object Similarity {
       val corpus = ev.select(col("vec_id"), col("v"),
         element_at(col("cells"), 1)("j").as("cell"))
       val booksRow = pqBooksRow(pqBooks(s, d))
-      val out = graft.sources.Sources.scratchLeaf(d, "ivf_pq_file")
-      pqEncode(corpus, booksRow)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(out)
-      val enc = s.read.parquet(out)
+      val enc = graft.sources.Sources.write(pqEncode(corpus, booksRow),
+        graft.sources.Sources.scratchLeaf(d, "ivf_pq_file"), "cell").read(s)
       pqAdcRank(pqProbesLut(ivfProbes(ev), booksRow), enc, vectors(s, d))
     },
     annIvfPq.oracle // identical semantics: the code file is q111, materialized
@@ -1969,9 +1961,10 @@ object Similarity {
   private[graft] def streamServePq(s: SparkSession, d: String,
       nFiles: Int): (DataFrame, Long) = {
     val enc = graft.sources.Sources.artifactOnce(d, "ivf_pq_file_serve") { p =>
-      PqTier.encode(s, d, Long.MaxValue, ivfWithCells(s, d, ivfCents(s, d))
-        .select(col("vec_id"), col("v"), element_at(col("cells"), 1)("j").as("cell")))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(p)
+      graft.sources.Sources.write(PqTier.encode(s, d, Long.MaxValue,
+        ivfWithCells(s, d, ivfCents(s, d))
+          .select(col("vec_id"), col("v"), element_at(col("cells"), 1)("j").as("cell"))),
+        p, "cell").path
     }
     val (res, trail) = serveLoop(s, d, "pq_serve", nFiles, PqTier.probes(s, d, Long.MaxValue)) {
       (ss, local, cells, _) => (serveBatch(ss, d, PqTier, local, Seq(enc), cells), 0L)
@@ -2680,10 +2673,9 @@ object Similarity {
     * [[graft.sources.Sources.artifactOnce]].
     */
   private[graft] def gramianArtifact(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graft.sources.Sources.artifactOnce(d, "gramian_shared") { p =>
-      gramianDF(s, d).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    })
+    graft.sources.Sources.artifactOnce(d, "gramian_shared") { p =>
+      graft.sources.Sources.write(gramianDF(s, d), p)
+    }.read(s)
 
   val embeddingGramian = Q(
     "q262_embedding_gramian",

@@ -117,19 +117,18 @@ object Sketches {
     "q173_hll_sketch_store",
     (s, d) => {
       val store = graft.sources.Sources.scratchLeaf(d, "hll_day_store")
-      Tables.events(s, d)
+      val st = graft.sources.Sources.write(Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
         .groupBy("day")
-        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val days = s.read.parquet(store).agg(min("day"), max("day")).head()
+        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk")), store).read(s)
+      val days = st.agg(min("day"), max("day")).head()
       val (lo, hiDay) = dayBounds(days, store)
       val ranges = Seq(
         ("day1", lo, lo),
         ("week1", lo, lo.plusDays(6)),
         ("all", lo, hiDay))
       ranges.map { case (tag, a, b) =>
-        val est = s.read.parquet(store)
+        val est = st
           .where(col("day").between(lit(a.toString), lit(b.toString)))
           .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est"),
             count(lit(1)).as("n_days"))
@@ -192,19 +191,18 @@ object Sketches {
       val store = graft.sources.Sources.scratchLeaf(d, "quant_day_store")
       val sk = udaf(new graft.functions.QuantileSketchAggregator(),
         org.apache.spark.sql.Encoders.scalaDouble)
-      Tables.events(s, d)
+      val st = graft.sources.Sources.write(Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("value"))
         .groupBy("day")
-        .agg(sk(col("value")).as("sk"), count(lit(1)).as("n"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val days = s.read.parquet(store).agg(min("day"), max("day")).head()
+        .agg(sk(col("value")).as("sk"), count(lit(1)).as("n")), store).read(s)
+      val days = st.agg(min("day"), max("day")).head()
       val (lo, hiDay) = dayBounds(days, store)
       val ranges = Seq(
         ("day1", lo, lo),
         ("week1", lo, lo.plusDays(6)),
         ("all", lo, hiDay))
       val rows = ranges.flatMap { case (tag, a, b) =>
-        val merged = s.read.parquet(store)
+        val merged = st
           .where(col("day").between(lit(a.toString), lit(b.toString)))
           .select(explode(col("sk")).as("bc"))
           .groupBy(col("bc.bucket").as("bucket"))
@@ -398,19 +396,19 @@ object Sketches {
     "q258_bitmap_distinct_store",
     (s, d) => {
       val store = graft.sources.Sources.scratchLeaf(d, "bitmap_day_store")
-      Tables.events(s, d)
+      val st = graft.sources.Sources.write(Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
         .groupBy(col("day"), expr("bitmap_bucket_number(user_id)").as("bucket"))
-        .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val days = s.read.parquet(store).agg(min("day"), max("day")).head()
+        .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm")),
+        store).read(s)
+      val days = st.agg(min("day"), max("day")).head()
       val (lo, hiDay) = dayBounds(days, store)
       val ranges = Seq(
         ("day1", lo, lo),
         ("week1", lo, lo.plusDays(6)),
         ("all", lo, hiDay))
       ranges.map { case (tag, a, b) =>
-        val inRange = s.read.parquet(store)
+        val inRange = st
           .where(col("day").between(lit(a.toString), lit(b.toString)))
         val users = inRange
           .groupBy("bucket")
@@ -464,19 +462,18 @@ object Sketches {
     "q292_topk_sketch_store",
     (s, d) => {
       val store = graft.sources.Sources.scratchLeaf(d, "topk_day_store")
-      Tables.events(s, d)
+      val st = graft.sources.Sources.write(Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
         .groupBy("day")
-        .agg(expr("approx_top_k_accumulate(user_id, 4096)").as("sk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val days = s.read.parquet(store).agg(min("day"), max("day")).head()
+        .agg(expr("approx_top_k_accumulate(user_id, 4096)").as("sk")), store).read(s)
+      val days = st.agg(min("day"), max("day")).head()
       val (lo, hiDay) = dayBounds(days, store)
       val ranges = Seq(
         ("day1", lo, lo),
         ("week1", lo, lo.plusDays(6)),
         ("all", lo, hiDay))
       ranges.map { case (tag, a, b) =>
-        s.read.parquet(store)
+        st
           .where(col("day").between(lit(a.toString), lit(b.toString)))
           // coalesce(1): approx_top_k_combine's partial-aggregation
           // buffer types itself lazily from its FIRST input sketch, and
@@ -533,12 +530,11 @@ object Sketches {
     "q295_rolling_distinct",
     (s, d) => {
       val store = graft.sources.Sources.scratchLeaf(d, "bitmap_roll_store")
-      Tables.events(s, d)
+      val st = graft.sources.Sources.write(Tables.events(s, d)
         .select(to_date(col("ts")).as("day"), col("user_id"))
         .groupBy(col("day"), expr("bitmap_bucket_number(user_id)").as("bucket"))
-        .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(store)
-      val st = s.read.parquet(store)
+        .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm")),
+        store).read(s)
       val spine = st.select(col("day")).distinct()
         .select(col("day").as("anchor"))
       val joined = spine.join(st,
@@ -600,17 +596,16 @@ object Sketches {
           col("event_id"), col("value"))
       val late = col("event_id") % 17 === 0
       val store = graft.sources.Sources.artifactOnce(d, "ivm_rollup_store") { p =>
-        ev.where(!late)
+        graft.sources.Sources.write(ev.where(!late)
           .groupBy("event_type", "day")
           .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("centsum"),
-            count(lit(1)).as("n"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
+            count(lit(1)).as("n")), p)
       }
       val delta = ev.where(late)
         .groupBy("event_type", "day")
         .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("d_centsum"),
           count(lit(1)).as("d_n"))
-      s.read.parquet(store)
+      store.read(s)
         .join(delta, Seq("event_type", "day"), "full_outer")
         .select(col("event_type"), col("day"),
           (coalesce(col("centsum"), lit(0L)) + coalesce(col("d_centsum"), lit(0L)))

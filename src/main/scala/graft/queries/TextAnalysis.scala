@@ -990,7 +990,7 @@ object TextAnalysis {
     * like every other index artifact.
     */
   private[graft] def textRankGraph(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graft.sources.Sources.artifactOnce(d, "textrank_graph") { p =>
+    graft.sources.Sources.artifactOnce(d, "textrank_graph") { p =>
       // adjacent-token bigrams as a NARROW array transform (no positional
       // self-join): docs shorter than 2 tokens contribute nothing — guarded
       // explicitly because Spark's sequence(2, n) REVERSES for n < 2 where
@@ -1010,9 +1010,8 @@ object TextAnalysis {
         .unionAll(big.select(col("b").as("src"), col("a").as("dst")))
         .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
       val wout = e.groupBy("src").agg(sum("cnt").cast("double").as("wsum"))
-      e.join(wout, "src")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
-    })
+      graft.sources.Sources.write(e.join(wout, "src"), p)
+    }.read(s)
 
   private[graft] def textRankScores(s: SparkSession, d: String,
       iters: Int = TextRankIters): DataFrame = {
@@ -1694,10 +1693,8 @@ object TextAnalysis {
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
       import org.apache.spark.sql.graftbridge.Bridge
       val grams = TextFns.wordGrams(Tables.documents(s, d), 5)
-      val benchPath = graft.sources.Sources.scratchLeaf(d, "decontam_bench_grams")
-      grams.where(col("doc_id") % 101 === 0)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(benchPath)
-      val bench = s.read.parquet(benchPath)
+      val bench = graft.sources.Sources.write(grams.where(col("doc_id") % 101 === 0),
+        graft.sources.Sources.scratchLeaf(d, "decontam_bench_grams")).read(s)
       val train = grams.where(col("doc_id") % 101 =!= 0)
       // both planning actions are artifact-scoped: a parquet footer count
       // and one small-side aggregation — O(|bench grams|), not O(corpus)

@@ -13,6 +13,14 @@ import org.apache.spark.sql.types.StructType
   * Scale note: both writers partition by Spark's task parallelism (one
   * file per partition — no driver funnel); both readers take an explicit
   * schema, so no inference pass over the data at 100 TB.
+  *
+  * The scratch contract of every fixture that writes a dir and reads it
+  * back: write it through [[Sources.write]], which hands back a
+  * [[Sources.Written]] (the path and the writer's schema), and read it
+  * with `Written.read`, so no read infers a schema the writer held.
+  * A per-dir artifact goes through [[Sources.artifactOnce]], which
+  * memoizes values (a `Written`, or a store's path), never DataFrames:
+  * each caller reads the artifact in its own session.
   */
 object Sources {
 
@@ -54,19 +62,53 @@ object Sources {
     */
   def scratchLeaf(d: String, name: String): String = leaf(d, name)
 
-  /** Memoized per-dir scratch artifact (the train-once discipline shared
-    * by q23's pair table, q151's gram index, q167's energies, q262's
-    * gramian, q300's rollup store, q316's L2 levels): `build` runs once
-    * per (name, dataset fingerprint) under a single-writer lock —
-    * concurrent first calls would otherwise race the same
-    * SaveMode.Overwrite path — and an in-place regeneration of the
-    * dataset within one JVM changes the fingerprint, so the artifact
-    * REBUILDS instead of silently serving a stale index (r13 advisor
-    * finding). The fingerprint also suffixes the path, so a lazy reader
-    * of the old artifact keeps reading the bytes it was handed.
+  /** A scratch dir this program wrote, with the schema its writer held
+    * (partition columns last, in `partitionBy` order — the order Spark's
+    * partition discovery gives them). Reading it back through `read`
+    * hands that schema to the reader, so the read starts no
+    * schema-inference job and a write that landed no part file reads
+    * back as an empty relation instead of throwing
+    * `UNABLE_TO_INFER_SCHEMA`.
     */
-  private val artifactMemo = scala.collection.mutable.HashMap.empty[String, () => String]
-  def artifactOnce(d: String, name: String)(build: String => Unit): String = {
+  final case class Written(path: String, schema: StructType) {
+    def read(s: SparkSession): DataFrame = s.read.schema(schema).parquet(path)
+
+    /** Only `files` of this dir (a pruned file list of an unpartitioned write). */
+    def read(s: SparkSession, files: Seq[String]): DataFrame =
+      s.read.schema(schema).parquet(files: _*)
+  }
+
+  /** The one scratch write of the fixtures: overwrite `path` with `df` as
+    * parquet, partitioned by `partitionBy`, and hand back the dir with
+    * the schema it reads back under. A bare parquet read of the dir
+    * would infer that schema again: one Spark job per read.
+    */
+  def write(df: DataFrame, path: String, partitionBy: String*): Written = {
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path)
+    Written(path, StructType(df.schema.filterNot(f => partitionBy.contains(f.name)) ++
+      partitionBy.map(df.schema(_))))
+  }
+
+  /** Memoized per-dir scratch artifact (the train-once discipline shared
+    * by q23's pair table, q99's base band index, q151's gram index,
+    * q167's energies, q262's gramian, q300's rollup store, q316's L2
+    * levels and the ANN stores): `build` runs once per (name, dataset
+    * fingerprint) under a single-writer lock — concurrent first calls
+    * would otherwise race the same SaveMode.Overwrite path — and an
+    * in-place regeneration of the dataset within one JVM changes the
+    * fingerprint, so the artifact REBUILDS instead of silently serving a
+    * stale index (r13 advisor finding). The fingerprint also suffixes
+    * the path, so a lazy reader of the old artifact keeps reading the
+    * bytes it was handed.
+    *
+    * The memo holds what `build` returns for the path it is handed: a
+    * [[Written]] (read with `.read(s)` in the caller's own session) or
+    * the path itself for a store that is listed and copied by path.
+    * Never a DataFrame: it would stay bound to the first caller's
+    * session and its confs.
+    */
+  private val artifactMemo = scala.collection.mutable.HashMap.empty[String, () => Any]
+  def artifactOnce[T](d: String, name: String)(build: String => T): T = {
     val fp = dirFingerprint(d)
     // Per-key build lock (ADVICE r14): the global memo lock is held only
     // long enough to install a lazy thunk; the Spark build itself runs
@@ -78,15 +120,11 @@ object Sources {
     // failure.
     val thunk = artifactMemo.synchronized {
       artifactMemo.getOrElseUpdate(s"$name|$d@$fp", {
-        lazy val built: String = {
-          val p = scratchLeaf(d, s"${name}_$fp")
-          build(p)
-          p
-        }
+        lazy val built: Any = build(scratchLeaf(d, s"${name}_$fp"))
         () => built
       })
     }
-    thunk()
+    thunk().asInstanceOf[T]
   }
 
   /** Cheap dataset fingerprint — (relative path, size, mtime) of every
@@ -210,11 +248,8 @@ object Sources {
   val fileMetadataLineage = Q(
     "q206_file_metadata",
     (s, d) => {
-      val out = leaf(d, "metadata_docs")
-      Tables.documents(s, d)
-        .select("doc_id", "lang", "n_chars")
-        .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(out)
-      s.read.parquet(out)
+      write(Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
+        leaf(d, "metadata_docs"), "lang").read(s)
         .select(col("doc_id"),
           regexp_extract(col("_metadata.file_path"), "lang=([^/]+)/", 1).as("shard"),
           col("_metadata.row_index").as("row_index"))
@@ -275,11 +310,8 @@ object Sources {
   val partitionPruned = Q(
     "q67_partition_pruned",
     (s, d) => {
-      val out = leaf(d, "partitioned_docs")
-      Tables.documents(s, d)
-        .select("doc_id", "lang", "source", "n_chars", "text")
-        .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(out)
-      s.read.parquet(out)
+      write(Tables.documents(s, d).select("doc_id", "lang", "source", "n_chars", "text"),
+        leaf(d, "partitioned_docs"), "lang").read(s)
         .where(col("lang") === "en")
         .select("doc_id", "lang", "source", "n_chars", "text")
     },
@@ -307,17 +339,13 @@ object Sources {
     "q90_compaction",
     (s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "lang", "source", "n_chars", "text")
-      val smallDir = leaf(d, "compact_in")
-      val outDir = leaf(d, "compact_out")
-      docs.repartition(32).write.mode(SaveMode.Overwrite).parquet(smallDir)
-      val p = new org.apache.hadoop.fs.Path(smallDir)
+      val small = write(docs.repartition(32), leaf(d, "compact_in"))
+      val p = new org.apache.hadoop.fs.Path(small.path)
       val fs = p.getFileSystem(s.sessionState.newHadoopConf())
       val bytes = fs.listStatus(p)
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
       val nOut = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
-      s.read.parquet(smallDir).coalesce(nOut)
-        .write.mode(SaveMode.Overwrite).parquet(outDir)
-      s.read.parquet(outDir)
+      write(small.read(s).coalesce(nOut), leaf(d, "compact_out")).read(s)
     },
     Some("SELECT doc_id, lang, source, n_chars, text FROM documents")
   )
@@ -412,20 +440,18 @@ object Sources {
       clusterBy: DataFrame => DataFrame = _.repartitionByRange(ZPruneFiles,
         col("zval")).sortWithinPartitions("zval"))
       : (Seq[String], Seq[String], DataFrame) = {
-    val out = leaf(d, tag)
     val z = graft.functions.InterleaveBits(
       col("user_id"), floor(col("value")).cast("long"))
-    clusterBy(
+    val store = write(clusterBy(
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
           floor(col("value")).cast("long").as("vbin"), col("value"))
         .withColumn("zval", z))
-      .drop("zval")
-      .write.mode(SaveMode.Overwrite).parquet(out)
+      .drop("zval"), leaf(d, tag))
     // write-time stats collection (one pass over the fresh files): the
     // per-file envelope on BOTH original dimensions. Bounded by file
     // count — the same metadata-plane collect as q143's manifest reads.
-    val stats = s.read.parquet(out)
+    val stats = store.read(s)
       .groupBy(input_file_name().as("path"))
       .agg(min("user_id").as("min_u"), max("user_id").as("max_u"),
         min("vbin").as("min_v"), max("vbin").as("max_v"))
@@ -437,10 +463,10 @@ object Sources {
     }.map(_.getAs[String]("path")).toSeq
     // prune-all is a LEGAL outcome (a rectangle outside every envelope):
     // serve it as an empty relation with the store's schema — limit(0)
-    // folds to an empty plan, so even the schema read scans nothing.
+    // folds to an empty plan, so the read scans nothing.
     val source =
-      if (selected.isEmpty) s.read.parquet(all: _*).limit(0)
-      else s.read.parquet(selected: _*)
+      if (selected.isEmpty) store.read(s, all).limit(0)
+      else store.read(s, selected)
     val scan = source
       .where(col("user_id").between(ZPredU._1, ZPredU._2)
         && col("vbin").between(ZPredV._1, ZPredV._2))
@@ -496,23 +522,21 @@ object Sources {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.Bridge
-    val out = leaf(d, "zbloom_store")
     val z = graft.functions.InterleaveBits(
       col("user_id"), floor(col("value")).cast("long"))
-    Tables.events(s, d)
+    val store = write(Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
         floor(col("value")).cast("long").as("vbin"), col("value"))
       .withColumn("zval", z)
       .repartitionByRange(ZPruneFiles, col("zval")).sortWithinPartitions("zval")
-      .drop("zval")
-      .write.mode(SaveMode.Overwrite).parquet(out)
+      .drop("zval"), leaf(d, "zbloom_store"))
     // bloom sizing from the store's row count (a parquet metadata count,
     // no data scan): estimated items per file at the known file count
-    val estPerFile = math.max(1L, s.read.parquet(out).count() / ZPruneFiles)
+    val estPerFile = math.max(1L, store.read(s).count() / ZPruneFiles)
     val nBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(estPerFile, BloomFpp)
     // ONE stats pass per fresh file set: envelopes AND blooms together
-    val stats = s.read.parquet(out)
+    val stats = store.read(s)
       .groupBy(input_file_name().as("path"))
       .agg(min("user_id").as("min_u"), max("user_id").as("max_u"),
         min("vbin").as("min_v"), max("vbin").as("max_v"),
@@ -531,8 +555,8 @@ object Sources {
       BloomNeedles.exists(bf.mightContainLong)
     }.map(_.getAs[String]("path")).toSeq
     val source =
-      if (bloomSelected.isEmpty) s.read.parquet(all: _*).limit(0)
-      else s.read.parquet(bloomSelected: _*)
+      if (bloomSelected.isEmpty) store.read(s, all).limit(0)
+      else store.read(s, bloomSelected)
     val scan = source
       .where(col("event_id").isin(BloomNeedles: _*))
       .select("event_id", "user_id", "vbin", "value")
@@ -610,14 +634,10 @@ object Sources {
     StreamFixture.child(s0, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
 
   /** Day-partitioned base store of the events table. */
-  private[graft] def dpoWriteBase(s: SparkSession, d: String, tag: String): String = {
-    val store = leaf(d, tag)
-    Tables.events(s, d)
+  private[graft] def dpoWriteBase(s: SparkSession, d: String, tag: String): Written =
+    write(Tables.events(s, d)
       .select(to_date(col("ts")).as("day"), col("event_id"), col("user_id"),
-        col("value"))
-      .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(store)
-    store
-  }
+        col("value")), leaf(d, tag), "day")
 
   /** The correction batch: ONLY the target day, values restated ×2. */
   private[graft] def dpoCorrection(s: SparkSession, d: String): DataFrame =
@@ -631,9 +651,11 @@ object Sources {
     (s0, d) => {
       val s = dpoSession(s0)
       val store = dpoWriteBase(s, d, "dpo_store")
+      // the correction's write stays hand-rolled: its dynamic overwrite
+      // mode (a conf of `s`) is the operator; it lands the base's schema
       dpoCorrection(s, d)
-        .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(store)
-      s.read.parquet(store)
+        .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(store.path)
+      store.read(s)
         .groupBy("day")
         .agg(count(lit(1)).as("n"), Q.dsum2(col("value")).as("sum_value"))
     },
@@ -696,13 +718,12 @@ object Sources {
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
         (col("doc_id") % 4).as("cell"))
     val touched: Seq[Long] = Seq(0L, 2L) // multiples of 10 mod 4 ∈ {0, 2}
-    base.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/base")
-    base.where(col("cell").isInCollection(touched))
-      .withColumn("text", when(col("doc_id") % 10 === 0, upper(col("text"))).otherwise(col("text")))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/rw")
-    base.where(col("doc_id") % 7 === 0).drop("cell")
-      .withColumn("doc_id", col("doc_id") + lit(10000000L))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/ins/cell=-1")
+    write(base, s"$root/base", "cell")
+    write(base.where(col("cell").isInCollection(touched))
+      .withColumn("text", when(col("doc_id") % 10 === 0, upper(col("text"))).otherwise(col("text"))),
+      s"$root/rw", "cell")
+    write(base.where(col("doc_id") % 7 === 0).drop("cell")
+      .withColumn("doc_id", col("doc_id") + lit(10000000L)), s"$root/ins/cell=-1")
     val baseDirs = StoreManifest.requireBucketDirs(s, s"$root/base", 0L until 4L)
     val rwDirs = StoreManifest.requireBucketDirs(s, s"$root/rw", touched)
     val insDir = StoreManifest.requireBucketDirs(s, s"$root/ins", Seq(-1L))(-1L)
@@ -772,7 +793,7 @@ object Sources {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         (col("user_id") % 8).as("cell"))
-    ev.write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/base")
+    write(ev, s"$root/base", "cell")
     (ev, StoreManifest.requireBucketDirs(s, s"$root/base", 0L until 8L))
   }
 
@@ -804,8 +825,8 @@ object Sources {
       val root = leaf(d, "gdpr_store")
       val (ev, baseDirs) = eventsBase(s, d, root)
       val touched: Seq[Long] = Seq(5L, 6L) // {5 % 8, 14 % 8}
-      ev.where(col("cell").isInCollection(touched) && !expr(deletedPred))
-        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/rw")
+      write(ev.where(col("cell").isInCollection(touched) && !expr(deletedPred)),
+        s"$root/rw", "cell")
       val rwDirs = StoreManifest.requireBucketDirs(s, s"$root/rw", touched)
       StoreManifest.commit(s, root)(_ => baseDirs.toSeq.sorted.flatMap { case (k, p) =>
         Seq((1L, k, p), (2L, k, rwDirs.getOrElse(k, p))) })
@@ -888,8 +909,7 @@ object Sources {
           if (tombs) tombSchema else schema)
           .withColumnRenamed("cell", "bucket")
       def landTombs(dead: DataFrame, comp: String): Map[Long, String] = {
-        dead.select(col("event_id"), col("bucket").as("cell"))
-          .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/$comp")
+        write(dead.select(col("event_id"), col("bucket").as("cell")), s"$root/$comp", "cell")
         StoreManifest.cellDirs(s, s"$root/$comp")
       }
 
@@ -917,9 +937,8 @@ object Sources {
       val rewritten =
         if (compacted.isEmpty) Map.empty[Long, String]
         else {
-          store.where(col("bucket").isInCollection(compacted) && !(p1 || p2))
-            .withColumnRenamed("bucket", "cell")
-            .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$root/rw")
+          write(store.where(col("bucket").isInCollection(compacted) && !(p1 || p2))
+            .withColumnRenamed("bucket", "cell"), s"$root/rw", "cell")
           StoreManifest.requireBucketDirs(s, s"$root/rw", compacted)
         }
       val dv3Dirs = landTombs(
@@ -1711,20 +1730,23 @@ object Sources {
   val corruptFileSkip = Q(
     "q288_corrupt_file_skip",
     (s, d) => {
-      val store = scratchLeaf(d, "corrupt_store")
-      val src = Tables.events(s, d)
+      val store = write(Tables.events(s, d)
         .select(col("event_id"), col("event_type"),
-          col("value").cast("decimal(18,2)").as("v"))
-      src.write.mode(SaveMode.Overwrite).partitionBy("event_type").parquet(store)
-      val bad = new java.io.File(s"$store/event_type=error")
-      bad.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        java.nio.file.Files.write(f.toPath,
-          "not a parquet file".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
+          col("value").cast("decimal(18,2)").as("v")),
+        scratchLeaf(d, "corrupt_store"), "event_type")
+      // through the Hadoop FileSystem of the store's scheme, so the
+      // corruption lands wherever the scratch root lives
+      val fs = StoreManifest.hfs(s, store.path)
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"${store.path}/event_type=error"))
+        .map(_.getPath).filter(_.getName.endsWith(".parquet")).foreach { f =>
+          val o = fs.create(f, true)
+          try o.write("not a parquet file".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          finally o.close()
+        }
       s.read
         .option("ignoreCorruptFiles", "true")
-        .schema("event_id BIGINT, v DECIMAL(18,2), event_type STRING")
-        .parquet(store)
+        .schema(store.schema)
+        .parquet(store.path)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(col("v")).cast("double").as("total"))
     },

@@ -42,10 +42,8 @@ class AnnPqServeSpec extends AnyFunSuite {
     val ev = S.ivfWithCells(spark, d, S.ivfCents(spark, d))
     val booksRow = S.pqBooksRow(S.pqBooks(spark, d))
     val enc = graft.sources.Sources.artifactOnce(d, "ivf_pq_file_serve") { p =>
-      S.pqEncode(ev.select(col("vec_id"), col("v"),
-        element_at(col("cells"), 1)("j").as("cell")), booksRow)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(p)
+      graft.sources.Sources.write(S.pqEncode(ev.select(col("vec_id"), col("v"),
+        element_at(col("cells"), 1)("j").as("cell")), booksRow), p, "cell").path
     }
     val probe = S.pqProbesLut(
       S.ivfProbes(ev).where(col("vec_id") === 0), booksRow)

@@ -35,9 +35,7 @@ class AnnServeSpec extends AnyFunSuite {
     val d0 = S.deltaCut(spark, d)
     val base = S.baseStore(spark, d, d0, S.IvfTier)
     val inc = graft.sources.Sources.artifactOnce(d, "ivf_inc_shared") { p =>
-      S.deltaAssign(spark, d, d0, delta = true)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(p)
+      graft.sources.Sources.write(S.deltaAssign(spark, d, d0, delta = true), p, "cell").path
     }
     // one probe = IvfNProbe cells; the scan must carry them as a
     // partition filter, not scan the store and filter rows after

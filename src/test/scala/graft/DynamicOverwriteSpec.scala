@@ -27,7 +27,7 @@ class DynamicOverwriteSpec extends AnyFunSuite {
 
   test("q185: correction rewrites only its own partition; static drops the rest") {
     val s = sources.Sources.dpoSession(spark)
-    val store = sources.Sources.dpoWriteBase(s, d, "dpo_spec_store")
+    val store = sources.Sources.dpoWriteBase(s, d, "dpo_spec_store").path
     val before = partFiles(store)
     assert(before.size > 1, "fixture drift: single-day store — no contest")
     val target = s"day=${sources.Sources.DpoDay}"
@@ -56,7 +56,7 @@ class DynamicOverwriteSpec extends AnyFunSuite {
     // (c) static counterfactual on a fresh copy: every other partition dies
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    val store2 = sources.Sources.dpoWriteBase(s2, d, "dpo_spec_static")
+    val store2 = sources.Sources.dpoWriteBase(s2, d, "dpo_spec_static").path
     assert(partFiles(store2).size > 1)
     sources.Sources.dpoCorrection(s2, d)
       .write.mode("overwrite").partitionBy("day").parquet(store2)
