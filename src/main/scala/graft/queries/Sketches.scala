@@ -1,18 +1,33 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.TextFns
+import graft.functions.{BucketCount, QuantileSketch, TextFns}
+import graft.sources.Sources
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The mergeable-sketch family beyond q19/q49/q105's one-shot
   * approximations: sketches as STORED, UNIONED artifacts — the pattern
   * that makes 100 TB incremental analytics affordable (build tiny
   * per-shard summaries once, answer corpus-scale questions from the
-  * summaries forever). Both queries audit the sketch against the exact
-  * answer IN-QUERY and emit the bound check as a boolean column, so the
-  * driver's hash gate (oracle emits TRUE) fails loudly the day a sketch
-  * drifts out of contract — a FULL oracle over approximate machinery,
-  * where q19/q49/q126 settle for rows-only.
+  * summaries forever). The audited queries check the sketch against the
+  * exact answer IN-QUERY and emit the bound check as a boolean column, so
+  * the driver's hash gate (oracle emits TRUE) fails loudly the day a
+  * sketch drifts out of contract — a FULL oracle over approximate
+  * machinery, where q19/q49/q126 settle for rows-only.
+  *
+  * The store pattern (q173 HLL, q181 quantiles, q258/q295 bitmaps, q292
+  * frequent items) is the paper's combiner moved to storage: [[dayStore]]
+  * groups `events` by day, merges each day into one summary row and
+  * writes the store once, so events are read once, at build. A date
+  * range is then answered by merging the stored summaries of its days.
+  * [[dayRanges]] derives the three ranges (`day1`, `week1`, `all`) from
+  * the store's own min/max day INSIDE the plan, as a broadcast 3-row
+  * relation, and each query merges all three ranges in one plan grouped
+  * by `range_tag`: no driver round-trip for the bounds, no plan per
+  * range. An empty store has no day in any range, so every answer is
+  * empty — the oracles' answer on empty `events`.
   */
 object Sketches {
 
@@ -36,19 +51,6 @@ object Sketches {
     * `SketchSpec` widens the audit to the ENTIRE vocabulary at test
     * scale.
     */
-  /** (min, max) day of a just-written sketch store, failing LOUDLY on
-    * an empty store: min/max over zero rows is NULL, and a bare
-    * `getDate(0).toLocalDate` would NPE with no context (ADVICE r11).
-    * The fixture's events table is never empty, so this is a contract
-    * guard, not a reachable branch there.
-    */
-  private def dayBounds(days: org.apache.spark.sql.Row,
-      store: String): (java.time.LocalDate, java.time.LocalDate) = {
-    require(!days.isNullAt(0) && !days.isNullAt(1),
-      s"sketch store $store is empty: no day range to query")
-    (days.getDate(0).toLocalDate, days.getDate(1).toLocalDate)
-  }
-
   private val CmsEps = 0.001
   private[graft] def cmsSketch(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.util.sketch.CountMinSketch, Long) = {
@@ -92,6 +94,50 @@ object Sketches {
             GROUP BY w ORDER BY cnt DESC, w ASC LIMIT 16""")
   )
 
+  /** The day-summary store of [[hllStore]], [[quantileStore]],
+    * [[bitmapStore]], [[topKStore]] and [[rollingDistinct]]: `events`
+    * grouped by `to_date(ts) AS day` plus `keys`, each group merged by
+    * `aggs`, written once to the scratch leaf `leaf` (one shuffle on the
+    * group key, map-side partial summaries) and read back with the
+    * writer's schema.
+    */
+  private def dayStore(s: SparkSession, d: String, leaf: String, keys: Column*)(
+      aggs: Column*): DataFrame =
+    Sources.write(Tables.events(s, d)
+      .groupBy(to_date(col("ts")).as("day") +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*), Sources.scratchLeaf(d, leaf)).read(s)
+
+  /** Per-(day, bucket) exact-distinct bitmaps of `user_id` (q258, q295).
+    * Each query keeps its own leaf, so a lazy read of one store never
+    * sees the other's overwrite. */
+  private def bitmapDayStore(s: SparkSession, d: String, leaf: String): DataFrame =
+    dayStore(s, d, leaf, expr("bitmap_bucket_number(user_id)").as("bucket"))(
+      expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm"))
+
+  /** The store's three date ranges as a broadcast (range_tag, a, b)
+    * relation: `day1` = [lo, lo], `week1` = [lo, lo + 6] and `all` =
+    * [lo, hi], with lo/hi the min/max `day` of `st`, computed in the plan.
+    * The store is O(days) rows, so one task reads it for the min/max and
+    * the broadcast needs no exchange below it. An empty store gives NULL
+    * bounds, which [[inRange]] never matches.
+    */
+  private[graft] def dayRanges(st: DataFrame): DataFrame =
+    broadcast(st.coalesce(1).agg(min("day").as("lo"), max("day").as("hi")).selectExpr(
+      "stack(3, 'day1', lo, lo, 'week1', lo, date_add(lo, 6), 'all', lo, hi)" +
+        " AS (range_tag, a, b)"))
+
+  /** The join condition of a row whose date is `day` to a [[dayRanges]] row. */
+  private[graft] def inRange(day: Column): Column = day.between(col("a"), col("b"))
+
+  /** The oracles' twin of [[dayRanges]]: `d` = events' (day, `cols`),
+    * `span` = its (lo, hi), `r` = the three ranges. */
+  private def sqlDayRanges(cols: String): String =
+    s"""WITH d AS (SELECT CAST(ts AS DATE) AS day, $cols FROM events),
+            span AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
+            r AS (SELECT 'day1' AS range_tag, lo AS a, lo AS b FROM span
+                  UNION ALL SELECT 'week1', lo, lo + INTERVAL 6 DAY FROM span
+                  UNION ALL SELECT 'all', lo, hi FROM span)"""
+
   /** q173 — HLL SKETCH STORE (incremental distinct counting): per-day
     * `hll_sketch_agg` summaries of the event stream's user column,
     * materialized ONCE to scratch parquet — the Apache DataSketches
@@ -99,53 +145,34 @@ object Sketches {
     * distinct-user questions answered by `hll_union_agg` over the
     * STORE (O(days) rows, zero event rescans; sketch union is the
     * whole point: distinct counts are not additive, sketches are
-    * unionable). Three ranges exercise the store (first day, first
-    * week, full span); each output row carries the range's day count,
-    * the EXACT distinct-user answer, and whether the sketch estimate
-    * landed within ±5% of it — the exact side is the in-query audit
-    * (and the oracle), the sketch side is the serving path.
+    * unionable). Each output row carries the range's day count, the
+    * EXACT distinct-user answer, and whether the sketch estimate landed
+    * within ±5% of it — the exact side is the in-query audit (and the
+    * oracle), the sketch side is the serving path.
     *
-    * Scale shape: the store build is one shuffle on day (map-side
-    * partial sketches — HLL merges cell-wise); range service reads the
-    * day-partitionable store, never events; the exact audit is one
-    * distinct-aggregate per range, the thing production DOESN'T pay
-    * per query — it's here precisely so the oracle can pin the
-    * estimate's contract. The two bounded collects (min/max day, 3
-    * range rows) are metadata-plane.
+    * Scale shape: range service reads the store, never events; the
+    * exact audit is one events scan joined to the three ranges and one
+    * distinct aggregate grouped by range — the cost production DOESN'T
+    * pay per query, here so the oracle can pin the estimate's contract.
     */
   val hllStore = Q(
     "q173_hll_sketch_store",
     (s, d) => {
-      val store = graft.sources.Sources.scratchLeaf(d, "hll_day_store")
-      val st = graft.sources.Sources.write(Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("user_id"))
-        .groupBy("day")
-        .agg(expr("hll_sketch_agg(user_id, 12)").as("sk")), store).read(s)
-      val days = st.agg(min("day"), max("day")).head()
-      val (lo, hiDay) = dayBounds(days, store)
-      val ranges = Seq(
-        ("day1", lo, lo),
-        ("week1", lo, lo.plusDays(6)),
-        ("all", lo, hiDay))
-      ranges.map { case (tag, a, b) =>
-        val est = st
-          .where(col("day").between(lit(a.toString), lit(b.toString)))
-          .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est"),
-            count(lit(1)).as("n_days"))
-        val exact = Tables.events(s, d)
-          .where(to_date(col("ts")).between(lit(a.toString), lit(b.toString)))
-          .agg(countDistinct(col("user_id")).as("exact_users"))
-        est.crossJoin(exact)
-          .select(lit(tag).as("range_tag"), col("n_days"), col("exact_users"),
-            (abs(col("est") - col("exact_users")).cast("double") <=
-              col("exact_users").cast("double") * 0.05).as("est_ok"))
-      }.reduce(_ unionAll _)
+      val st = dayStore(s, d, "hll_day_store")(expr("hll_sketch_agg(user_id, 12)").as("sk"))
+      val r = dayRanges(st)
+      val est = st.join(r, inRange(col("day")))
+        .groupBy("range_tag")
+        .agg(expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est"),
+          count(lit(1)).as("n_days"))
+      val exact = Tables.events(s, d).join(r, inRange(to_date(col("ts"))))
+        .groupBy("range_tag")
+        .agg(countDistinct(col("user_id")).as("exact_users"))
+      est.join(exact, "range_tag")
+        .select(col("range_tag"), col("n_days"), col("exact_users"),
+          (abs(col("est") - col("exact_users")).cast("double") <=
+            col("exact_users").cast("double") * 0.05).as("est_ok"))
     },
-    Some("""WITH d AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events),
-            span AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
-            r AS (SELECT 'day1' AS range_tag, lo AS a, lo AS b FROM span
-                  UNION ALL SELECT 'week1', lo, lo + INTERVAL 6 DAY FROM span
-                  UNION ALL SELECT 'all', lo, hi FROM span)
+    Some(sqlDayRanges("user_id") + """
             SELECT r.range_tag,
                    CAST(count(DISTINCT d.day) AS BIGINT) AS n_days,
                    CAST(count(DISTINCT d.user_id) AS BIGINT) AS exact_users,
@@ -178,61 +205,42 @@ object Sketches {
     * sort, plus merge-order invariance; the registered run exercises
     * day1/week1/full-span ranges × three quantiles.
     *
-    * Scale shape: the store build is ONE shuffle on day with KB partial
-    * sketches (map-side merge); range service reads the
-    * day-partitionable store and collects only the merged histogram
-    * (bounded by occupied buckets — metadata-plane, the ivfCents
-    * collect class); no query ever touches an event row.
+    * Scale shape: range service reads the store and collects the merged
+    * histograms of all three ranges at once (bounded by 3 × occupied
+    * buckets — metadata-plane, the ivfCents collect class); the quantile
+    * walk runs on the driver.
     */
   val quantileStore = Q(
     "q181_quantile_sketch_store",
     (s, d) => {
       import s.implicits._
-      val store = graft.sources.Sources.scratchLeaf(d, "quant_day_store")
       val sk = udaf(new graft.functions.QuantileSketchAggregator(),
         org.apache.spark.sql.Encoders.scalaDouble)
-      val st = graft.sources.Sources.write(Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("value"))
-        .groupBy("day")
-        .agg(sk(col("value")).as("sk"), count(lit(1)).as("n")), store).read(s)
-      val days = st.agg(min("day"), max("day")).head()
-      val (lo, hiDay) = dayBounds(days, store)
-      val ranges = Seq(
-        ("day1", lo, lo),
-        ("week1", lo, lo.plusDays(6)),
-        ("all", lo, hiDay))
-      val rows = ranges.flatMap { case (tag, a, b) =>
-        val merged = st
-          .where(col("day").between(lit(a.toString), lit(b.toString)))
-          .select(explode(col("sk")).as("bc"))
-          .groupBy(col("bc.bucket").as("bucket"))
-          .agg(sum(col("bc.cnt")).as("cnt"))
-          .collect()
-          .map(r => graft.functions.BucketCount(
-            r.getAs[Int]("bucket"), r.getAs[Long]("cnt")))
-          .toSeq
-        Seq(0.5, 0.9, 0.99).map { q =>
-          (tag, q, graft.functions.QuantileSketch.quantile(merged, q))
+      val st = dayStore(s, d, "quant_day_store")(sk(col("value")).as("sk"),
+        count(lit(1)).as("n"))
+      val r = dayRanges(st)
+      val ests = st.join(r, inRange(col("day")))
+        .select(col("range_tag"), explode(col("sk")).as("bc"))
+        .groupBy(col("range_tag"), col("bc.bucket").as("bucket"))
+        .agg(sum(col("bc.cnt")).as("cnt"))
+        .collect()
+        .groupBy(_.getAs[String]("range_tag"))
+        .toSeq.flatMap { case (tag, rows) =>
+          val merged = rows.toSeq.map(x =>
+            BucketCount(x.getAs[Int]("bucket"), x.getAs[Long]("cnt")))
+          Seq(0.5, 0.9, 0.99).map(q => (tag, q, QuantileSketch.quantile(merged, q)))
         }
-      }
-      val ests = rows.toDF("range_tag", "quantile", "est")
+        .toDF("range_tag", "quantile", "est")
       // the EXACT audit side (hash-gated graduation, round-15 verdict
       // task 1): the exact order statistic at 1-based rank ⌈q·n⌉ per
       // range, computed with explicit integer-form ranks both engines
       // share — the full per-range sort is the cost the sketch store
       // exists to avoid, paid here because an audit runs both paths
-      val ev = Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("value"))
-      val rangesDf = broadcast(
-        ranges.map { case (t, a, b) => (t, a.toString, b.toString) }
-          .toDF("range_tag", "a", "b"))
-      val ranked = ev
-        .join(rangesDf, col("day").between(col("a"), col("b")))
+      val ranked = Tables.events(s, d)
+        .join(r, inRange(to_date(col("ts"))))
         .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("range_tag").orderBy(col("value").asc)))
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("range_tag")))
+          Window.partitionBy("range_tag").orderBy(col("value").asc)))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("range_tag")))
       val qdf = broadcast(Seq((0.5, 1L, 2L), (0.9, 9L, 10L), (0.99, 99L, 100L))
         .toDF("quantile", "num", "den"))
       val exacts = ranked.join(qdf,
@@ -245,7 +253,7 @@ object Sketches {
       exacts.join(ests, Seq("range_tag", "quantile"))
         .select(col("range_tag"), col("quantile"), col("n"), col("exact_val"),
           (abs(col("est") - col("exact_val")) <=
-            col("exact_val") * lit(graft.functions.QuantileSketch.RelErrBound))
+            col("exact_val") * lit(QuantileSketch.RelErrBound))
             .as("est_ok"))
     },
     // graduated from rows-only (round-15 verdict task 1): the bucket
@@ -253,11 +261,7 @@ object Sketches {
     // pins the EXACT companions + the contract boolean instead — the
     // q19/q49/q105/q126 audit-boolean discipline; SketchSpec still
     // proves the band on every prefix range and merge-order invariance
-    Some("""WITH d AS (SELECT CAST(ts AS DATE) AS day, value FROM events),
-            span AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
-            r AS (SELECT 'day1' AS range_tag, lo AS a, lo AS b FROM span
-                  UNION ALL SELECT 'week1', lo, lo + INTERVAL 6 DAY FROM span
-                  UNION ALL SELECT 'all', lo, hi FROM span),
+    Some(sqlDayRanges("value") + """,
             rk AS (SELECT r.range_tag, d.value,
                           row_number() OVER (PARTITION BY r.range_tag
                                              ORDER BY d.value) AS rn,
@@ -386,46 +390,26 @@ object Sketches {
     *
     * Scale shape: store build = one shuffle on (day, bucket) with
     * map-side partial bitmap construction; range service = OR-merge by
-    * bucket over the store (cell-wise, associative) + a sum of
-    * per-bucket exact counts. The same three ranges as q173, so the two
-    * queries read side-by-side as the exact/approx twins of one
-    * pattern; where HLL serves ANY key type at fixed size, bitmaps pay
+    * (range, bucket) over the store (cell-wise, associative) + a sum of
+    * per-bucket exact counts per range; the range's days ride the same
+    * two aggregates as per-bucket day sets, so the serve is one chain
+    * of aggregates, not a join of two. The same three ranges as q173,
+    * so the two queries read side-by-side as the exact/approx twins of
+    * one pattern; where HLL serves ANY key type at fixed size, bitmaps pay
     * density — the scaladoc trade a 100 TB design actually weighs.
     */
   val bitmapStore = Q(
     "q258_bitmap_distinct_store",
     (s, d) => {
-      val store = graft.sources.Sources.scratchLeaf(d, "bitmap_day_store")
-      val st = graft.sources.Sources.write(Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("user_id"))
-        .groupBy(col("day"), expr("bitmap_bucket_number(user_id)").as("bucket"))
-        .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm")),
-        store).read(s)
-      val days = st.agg(min("day"), max("day")).head()
-      val (lo, hiDay) = dayBounds(days, store)
-      val ranges = Seq(
-        ("day1", lo, lo),
-        ("week1", lo, lo.plusDays(6)),
-        ("all", lo, hiDay))
-      ranges.map { case (tag, a, b) =>
-        val inRange = st
-          .where(col("day").between(lit(a.toString), lit(b.toString)))
-        val users = inRange
-          .groupBy("bucket")
-          .agg(expr("bitmap_or_agg(bm)").as("m"))
-          .agg(sum(expr("bitmap_count(m)")).as("distinct_users"))
-        val nd = inRange.agg(countDistinct(col("day")).as("n_days"))
-        users.crossJoin(nd)
-          .select(lit(tag).as("range_tag"),
-            col("n_days").cast("long").as("n_days"),
-            col("distinct_users").cast("long").as("distinct_users"))
-      }.reduce(_ unionAll _)
+      val st = bitmapDayStore(s, d, "bitmap_day_store")
+      st.join(dayRanges(st), inRange(col("day")))
+        .groupBy("range_tag", "bucket")
+        .agg(expr("bitmap_or_agg(bm)").as("m"), collect_set(col("day")).as("days"))
+        .groupBy("range_tag")
+        .agg(size(array_distinct(flatten(collect_list(col("days"))))).cast("long")
+          .as("n_days"), sum(expr("bitmap_count(m)")).as("distinct_users"))
     },
-    Some("""WITH d AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events),
-            span AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
-            r AS (SELECT 'day1' AS range_tag, lo AS a, lo AS b FROM span
-                  UNION ALL SELECT 'week1', lo, lo + INTERVAL 6 DAY FROM span
-                  UNION ALL SELECT 'all', lo, hi FROM span)
+    Some(sqlDayRanges("user_id") + """
             SELECT r.range_tag,
                    CAST(count(DISTINCT d.day) AS BIGINT) AS n_days,
                    CAST(count(DISTINCT d.user_id) AS BIGINT) AS distinct_users
@@ -455,51 +439,37 @@ object Sketches {
     * `ApproxTopKSpec` pins that regime.
     *
     * Scale shape: store build = one shuffle on day with bounded partial
-    * sketches; range service = combine over O(days) KB rows + a sort of
-    * ≤ capacity estimate rows; events are read exactly once, ever.
+    * sketches; range service = one combine per range over O(days) KB
+    * rows + a per-range rank of ≤ capacity estimate rows; events are
+    * read exactly once, ever.
     */
   val topKStore = Q(
     "q292_topk_sketch_store",
     (s, d) => {
-      val store = graft.sources.Sources.scratchLeaf(d, "topk_day_store")
-      val st = graft.sources.Sources.write(Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("user_id"))
-        .groupBy("day")
-        .agg(expr("approx_top_k_accumulate(user_id, 4096)").as("sk")), store).read(s)
-      val days = st.agg(min("day"), max("day")).head()
-      val (lo, hiDay) = dayBounds(days, store)
-      val ranges = Seq(
-        ("day1", lo, lo),
-        ("week1", lo, lo.plusDays(6)),
-        ("all", lo, hiDay))
-      ranges.map { case (tag, a, b) =>
-        st
-          .where(col("day").between(lit(a.toString), lit(b.toString)))
-          // coalesce(1): approx_top_k_combine's partial-aggregation
-          // buffer types itself lazily from its FIRST input sketch, and
-          // Spark 4.1's ApproxTopK$.genSketchSerDe throws MatchError:
-          // null when a map task gets an EMPTY scan partition (surfaced
-          // at sf0.1 once the 128 KB openCostInBytes split the tiny
-          // day-store into >1 task, one of them row-less; sf≤0.01 plans
-          // a single split, so Verify never saw it). The combine input
-          // is O(days) KB rows by the store's design, so one task IS
-          // the documented scale shape — and no empty partial buffer
-          // can exist.
-          .coalesce(1)
-          .agg(expr("approx_top_k_estimate(approx_top_k_combine(sk, 4096), 4096)")
-            .as("tk"))
-          .select(explode(col("tk")).as("e"))
-          .select(lit(tag).as("range_tag"),
-            col("e.item").as("user_id"), col("e.count").cast("long").as("cnt"))
-          .orderBy(col("cnt").desc, col("user_id").asc)
-          .limit(16)
-      }.reduce(_ unionAll _)
+      val st = dayStore(s, d, "topk_day_store")(
+        expr("approx_top_k_accumulate(user_id, 4096)").as("sk"))
+      st.join(dayRanges(st), inRange(col("day")))
+        // coalesce(1): one task combines every range — the fixture-scale
+        // shape, since the combine input is O(days) KB rows by the
+        // store's design; a production store of years × shards would
+        // combine per partition. Spark 4.1's ApproxTopK$.genSketchSerDe
+        // throws MatchError: null on a partial buffer that saw no
+        // sketch; grouped by range_tag, a row-less split forms no group
+        // and so no such buffer, with or without this coalesce
+        // (DayStoreSpec's split-scan check).
+        .coalesce(1)
+        .groupBy("range_tag")
+        .agg(expr("approx_top_k_estimate(approx_top_k_combine(sk, 4096), 4096)")
+          .as("tk"))
+        .select(col("range_tag"), explode(col("tk")).as("e"))
+        .select(col("range_tag"),
+          col("e.item").as("user_id"), col("e.count").cast("long").as("cnt"))
+        .withColumn("rn", row_number().over(Window.partitionBy("range_tag")
+          .orderBy(col("cnt").desc, col("user_id").asc)))
+        .where(col("rn") <= 16)
+        .drop("rn")
     },
-    Some("""WITH d AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events),
-            span AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
-            r AS (SELECT 'day1' AS range_tag, lo AS a, lo AS b FROM span
-                  UNION ALL SELECT 'week1', lo, lo + INTERVAL 6 DAY FROM span
-                  UNION ALL SELECT 'all', lo, hi FROM span),
+    Some(sqlDayRanges("user_id") + """,
             c AS (SELECT r.range_tag, d.user_id,
                          CAST(count(*) AS BIGINT) AS cnt,
                          row_number() OVER (PARTITION BY r.range_tag
@@ -529,12 +499,7 @@ object Sketches {
   val rollingDistinct = Q(
     "q295_rolling_distinct",
     (s, d) => {
-      val store = graft.sources.Sources.scratchLeaf(d, "bitmap_roll_store")
-      val st = graft.sources.Sources.write(Tables.events(s, d)
-        .select(to_date(col("ts")).as("day"), col("user_id"))
-        .groupBy(col("day"), expr("bitmap_bucket_number(user_id)").as("bucket"))
-        .agg(expr("bitmap_construct_agg(bitmap_bit_position(user_id))").as("bm")),
-        store).read(s)
+      val st = bitmapDayStore(s, d, "bitmap_roll_store")
       val spine = st.select(col("day")).distinct()
         .select(col("day").as("anchor"))
       val joined = spine.join(st,
@@ -595,8 +560,8 @@ object Sketches {
         .select(col("event_type"), to_date(col("ts")).as("day"),
           col("event_id"), col("value"))
       val late = col("event_id") % 17 === 0
-      val store = graft.sources.Sources.artifactOnce(d, "ivm_rollup_store") { p =>
-        graft.sources.Sources.write(ev.where(!late)
+      val store = Sources.artifactOnce(d, "ivm_rollup_store") { p =>
+        Sources.write(ev.where(!late)
           .groupBy("event_type", "day")
           .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("centsum"),
             count(lit(1)).as("n")), p)

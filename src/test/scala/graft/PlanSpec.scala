@@ -525,15 +525,28 @@ class PlanSpec extends AnyFunSuite {
       "q290 rank cut is not the top-k operator")
   }
 
-  test("q295: the serving plan reads only the bitmap store, never events") {
-    // store-pattern contract: events are read ONCE at store build; the
-    // registered query's returned plan (the range service) must scan
-    // only the materialized per-day bitmaps
-    val scans = plan("q295_rolling_distinct").linesIterator
-      .filter(_.contains("FileScan")).toSeq
-    assert(scans.nonEmpty)
-    scans.foreach { l =>
-      assert(l.contains("bitmap_roll_store"), s"q295 serve path rescans: $l")
+  private def fileScans(name: String): Seq[String] =
+    plan(name).linesIterator.filter(_.contains("FileScan")).toSeq
+
+  for ((name, kind, store) <- Seq(
+      ("q258_bitmap_distinct_store", "bitmap", "bitmap_day_store"),
+      ("q292_topk_sketch_store", "top-k", "topk_day_store"),
+      ("q295_rolling_distinct", "bitmap", "bitmap_roll_store"))) {
+    test(s"${name.take(4)}: the serving plan reads only the $kind store, never events") {
+      // store-pattern contract: events are read ONCE at store build; the
+      // registered query's returned plan (the range service) must scan
+      // only the materialized per-day summaries
+      val scans = fileScans(name)
+      assert(scans.nonEmpty)
+      scans.foreach(l => assert(l.contains(store), s"$name serve path rescans: $l"))
+    }
+  }
+
+  test("q173/q181: the exact audit scans events once for all three ranges") {
+    for (name <- Seq("q173_hll_sketch_store", "q181_quantile_sketch_store")) {
+      val events = fileScans(name).filter(_.contains("events.parquet"))
+      assert(events.size === 1,
+        s"$name scans events ${events.size} times:\n${events.mkString("\n")}")
     }
   }
 
