@@ -490,7 +490,9 @@ object Sketches {
     * and each day's trailing-7 answer is an OR-merge of ≤ 7×buckets KB
     * rows — associative, exact, and embarrassingly parallel across
     * days. The range self-join of the day spine to the store is
-    * O(days × 7 × buckets) — metadata-sized regardless of corpus.
+    * O(days × 7 × buckets) — metadata-sized regardless of corpus — and
+    * each window's days ride the same two aggregates as per-bucket day
+    * sets (q258's shape), so the serve is one chain of aggregates.
     *
     * Full first-class oracle (COUNT(DISTINCT) over the same trailing
     * window replayed relationally in DuckDB) — no band, no audit
@@ -502,19 +504,13 @@ object Sketches {
       val st = bitmapDayStore(s, d, "bitmap_roll_store")
       val spine = st.select(col("day")).distinct()
         .select(col("day").as("anchor"))
-      val joined = spine.join(st,
-        col("day").between(date_sub(col("anchor"), 6), col("anchor")))
-      val wau = joined
+      spine.join(st, col("day").between(date_sub(col("anchor"), 6), col("anchor")))
         .groupBy(col("anchor"), col("bucket"))
-        .agg(expr("bitmap_or_agg(bm)").as("m"))
+        .agg(expr("bitmap_or_agg(bm)").as("m"), collect_set(col("day")).as("days"))
         .groupBy(col("anchor"))
-        .agg(sum(expr("bitmap_count(m)")).as("wau"))
-      val nd = joined.groupBy(col("anchor"))
-        .agg(countDistinct(col("day")).as("n_days_in_window"))
-      wau.join(nd, "anchor")
-        .select(col("anchor").as("day"),
-          col("n_days_in_window").cast("long").as("n_days_in_window"),
-          col("wau").cast("long").as("wau"))
+        .agg(size(array_distinct(flatten(collect_list(col("days"))))).cast("long")
+          .as("n_days_in_window"), sum(expr("bitmap_count(m)")).cast("long").as("wau"))
+        .select(col("anchor").as("day"), col("n_days_in_window"), col("wau"))
     },
     Some("""WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id
                        FROM events),

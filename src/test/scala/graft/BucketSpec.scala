@@ -72,4 +72,22 @@ class BucketSpec extends AnyFunSuite {
     assert(!flat.queryExecution.executedPlan.toString.contains("SelectedBucketsCount"))
     assert(df.exceptAll(flat).isEmpty && flat.exceptAll(df).isEmpty)
   }
+
+  test("q219: orders rewritten in place serves the new rows, not the old bucketed copy") {
+    import org.apache.spark.sql.functions.when
+    def q219(dir: String) = SparkEntry.queries("q219_bucket_pruned_read")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSet
+    val live = TestSpark.copyTables(d, "orders")
+    val before = q219(live)
+    // the first needle's orders double in price; the second's are gone
+    val Seq(n1, n2) = sources.Sources.BucketNeedles
+    val orders = Tables.orders(spark, live)
+    TestSpark.rewriteTable(live, "orders", orders.where(col("o_custkey") =!= n2)
+      .withColumn("o_totalprice", when(col("o_custkey") === n1, col("o_totalprice") * 2)
+        .otherwise(col("o_totalprice"))))
+    val after = q219(live)
+    val fresh = q219(TestSpark.copyTables(live, "orders"))
+    assert(fresh !== before, "the rewrite did not change q219's result")
+    assert(after === fresh, "q219 served its bucketed copy of the orders before the rewrite")
+  }
 }

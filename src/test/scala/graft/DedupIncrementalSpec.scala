@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
 
 /** q99 append-mode incremental dedup: the two-batch differential
@@ -95,17 +94,11 @@ class DedupIncrementalSpec extends AnyFunSuite {
   }
 
   test("q99: a corpus rewritten in place rebuilds the base index instead of serving the old one") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, lit, when}
     def q99(dir: String) =
       SparkEntry.queries("q99_incremental_dedup")(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def copyDocs(from: java.nio.file.Path): String = {
-      val dir = Files.createTempDirectory("graft_q99_stale")
-      Files.copy(from, dir.resolve("documents.parquet"))
-      dir.toString
-    }
-    val live = copyDocs(Paths.get(TestSpark.Sf0001, "documents.parquet"))
+    val live = TestSpark.copyTables(TestSpark.Sf0001, "documents")
     val before = q99(live)
 
     // rewrite the base docs in place: the first base doc takes the text of
@@ -115,21 +108,11 @@ class DedupIncrementalSpec extends AnyFunSuite {
     val batch1 = ids.find(_ % 10 == 0).get
     val base = ids.find(i => i % 10 != 0 && i % 10 != 5).get
     val text = docs.where(col("doc_id") === batch1).select("text").head().getString(0)
-    val rewritten = spark.createDataFrame(
-      docs.withColumn("text", when(col("doc_id") === base, lit(text)).otherwise(col("text")))
-        .collectAsList(), docs.schema)
-    val staged = Files.createTempDirectory("graft_q99_stage").resolve("docs").toString
-    rewritten.coalesce(1).write.parquet(staged)
-    val part = Files.list(Paths.get(staged)).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    val target = Paths.get(live, "documents.parquet")
-    val mtime = Files.getLastModifiedTime(target).toMillis
-    Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
-    // a rewrite a second later, even where the clock is coarse
-    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(mtime + 1000L))
+    TestSpark.rewriteTable(live, "documents",
+      docs.withColumn("text", when(col("doc_id") === base, lit(text)).otherwise(col("text"))))
 
     val after = q99(live)
-    val fresh = q99(copyDocs(target))
+    val fresh = q99(TestSpark.copyTables(live, "documents"))
     assert(fresh.contains((1L, batch1, base)), s"the rewrite planted no duplicate: $fresh")
     assert(fresh !== before, "the rewrite did not change q99's result")
     assert(after === fresh, "q99 served its index of the corpus before the rewrite")

@@ -66,4 +66,32 @@ class IvfLloydSpec extends AnyFunSuite {
     assert(rk >= r1, f"k-step recall $rk%.3f dropped below 1-step $r1%.3f")
     assert(rk >= 0.5, f"k-step recall $rk%.3f below the q63 floor")
   }
+
+  test("the trained quantizers are memoized: a second call starts no Spark job") {
+    val sim = queries.Similarity
+    val cut = sim.deltaCut(spark, d)
+    val calls: Seq[() => Any] = Seq(
+      () => sim.ivfCents(spark, d), () => sim.ivfCents(spark, d, 1, 16, cut),
+      () => sim.pqBooks(spark, d), () => sim.pqBooks(spark, d, 1, cut),
+      () => sim.maxVecId(spark, d))
+    for ((call, i) <- calls.zipWithIndex) {
+      call()
+      assert(TestSpark.jobsStartedBy(call()) === 0L, s"call $i trained again")
+    }
+  }
+
+  test("embeddings rewritten in place retrain the centroids instead of serving the old ones") {
+    def cents(dir: String) = queries.Similarity.ivfCents(spark, dir).collect().toSeq
+    val live = TestSpark.copyTables(d, "embeddings")
+    val before = cents(live)
+    // every training-sample vector mirrored through the origin
+    val e = Tables.embeddings(spark, live)
+    TestSpark.rewriteTable(live, "embeddings", e.withColumn("embedding",
+      when(col("vec_id") % 7 === 0, transform(col("embedding"), x => -x))
+        .otherwise(col("embedding"))))
+    val after = cents(live)
+    val fresh = cents(TestSpark.copyTables(live, "embeddings"))
+    assert(fresh !== before, "the rewrite did not change the trained centroids")
+    assert(after === fresh, "ivfCents served the centroids of the embeddings before the rewrite")
+  }
 }

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -17,27 +14,6 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   private def rawSchema(s: org.apache.spark.sql.SparkSession, d: String, name: String) =
     s.read.parquet(s"$d/$name.parquet").schema
-
-  /** Spark jobs started by `body` on this thread: the description tags
-    * them, so jobs of streams left running elsewhere are not counted. */
-  private def jobsStartedBy(body: => Unit): Long = {
-    val tag = "tables-schema-spec-" + java.util.UUID.randomUUID()
-    val n = new AtomicLong(0L)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.job.description") == tag))
-          n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobDescription(tag)
-    try body
-    finally {
-      spark.sparkContext.setJobDescription(null)
-      Bridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    n.get
-  }
 
   test("every base table's cached schema equals Spark's inference under the same confs") {
     for (d <- Seq(TestSpark.Sf0001, TestSpark.Sf001); name <- Tables.names) {
@@ -91,12 +67,12 @@ class TablesSchemaSpec extends AnyFunSuite {
     Tables.events(spark, d)
     Tables.lineitem(spark, d)
     // the listener does see the inference job a plain read pays
-    assert(jobsStartedBy(spark.read.parquet(s"$d/lineitem.parquet")) >= 1)
-    assert(jobsStartedBy(Tables.lineitem(spark, d)) === 0)
-    assert(jobsStartedBy(Tables.events(spark, d)) === 0)
+    assert(TestSpark.jobsStartedBy(spark.read.parquet(s"$d/lineitem.parquet")) >= 1)
+    assert(TestSpark.jobsStartedBy(Tables.lineitem(spark, d)) === 0)
+    assert(TestSpark.jobsStartedBy(Tables.events(spark, d)) === 0)
     // the cache is per JVM: a session with the same confs reuses the entry
     Tables.lineitem(spark.newSession(), d)
-    assert(jobsStartedBy(Tables.lineitem(spark.newSession(), d)) === 0)
+    assert(TestSpark.jobsStartedBy(Tables.lineitem(spark.newSession(), d)) === 0)
   }
 
   test("a table file rewritten at the same path is inferred again, in the same entry") {
